@@ -18,11 +18,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -247,26 +249,23 @@ HEADLINE = [
 # measurement
 COLLECT_CAP = 100_000
 
-# the previous round's slowest-15 (BENCH_r13.json stdout), kept on the
-# stdout watchlist so a row that IMPROVES out of the top-15 still
-# prints — refresh from BENCH_r<n>.json each round
-PREV_SLOWEST_15 = [
-    "curation_incremental",
-    "profile_orders",
-    "curation_incremental_rollup",
-    "pq_codes_sampled",
-    "ann_rerank",
-    "source_length_deciles",
-    "corpus_budget_selection",
-    "kmeans_iterate",
-    "funnel_completions_stream",
-    "hll_distinct",
-    "ann_recall_audit",
-    "lm_quality_bins",
-    "video_near_dups",
-    "closed_sessions_stream",
-    "embedding_near_dups_quantized",
-]
+def prev_slowest_15() -> list[str]:
+    """The 15 slowest rows of the newest committed ``BENCH_r<n>.json``
+    record (its ``parsed.queries``). They stay on the stdout watchlist
+    so a row that IMPROVES out of the top 15 still prints. Raises on a
+    name that is not in HEADLINE, so a renamed row cannot drop off."""
+    rounds = [(int(m.group(1)), name) for name in os.listdir(ROOT)
+              if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))]
+    if not rounds:
+        raise FileNotFoundError(f"no BENCH_r<n>.json under {ROOT}")
+    newest = max(rounds)[1]
+    with open(os.path.join(ROOT, newest)) as f:
+        timed = json.load(f)["parsed"]["queries"]
+    slowest = sorted(timed, key=timed.get, reverse=True)[:15]
+    unknown = [n for n in slowest if n not in HEADLINE]
+    if unknown:
+        raise ValueError(f"{newest} rows not in HEADLINE: {unknown}")
+    return slowest
 
 
 def _run_once(fn, spark, small: bool) -> float:
@@ -303,6 +302,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from gcp_datalake_utils_spark.session import get_spark
 
+    watchlist = prev_slowest_15()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry.queries()
@@ -341,8 +341,7 @@ def main() -> None:
     # full per-query medians go to a sidecar file: the 72-query dict
     # outgrew the driver's 2 KB tail capture in round 7 (BENCH_r07.json
     # recorded parsed:null), losing the machine-readable record
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json")
+    detail_path = os.path.join(ROOT, "bench_detail.json")
     with open(detail_path, "w") as f:
         json.dump({**common, "queries": per_query}, f)
     # the FINAL stdout line stays compact: headline total + the UNION
@@ -353,7 +352,7 @@ def main() -> None:
     # only; protocol untouched.
     slowest = dict(sorted(per_query.items(),
                           key=lambda kv: kv[1], reverse=True)[:15])
-    for name in PREV_SLOWEST_15:
+    for name in watchlist:
         if name in per_query:
             slowest.setdefault(name, per_query[name])
     out = {**common, "n_queries": len(per_query),

@@ -337,11 +337,13 @@ def _huff_lut(bits, vals):
     images share tables (Annex K here) builds each table once per
     worker while foreign tables still decode correctly."""
     key = (bytes(bits), bytes(vals))
-    hit = _LUT_CACHE.get(key)
+    hit = _LUT_CACHE.pop(key, None)
     if hit is not None:
+        # re-insert so the dict's insertion order is recency order
+        _LUT_CACHE[key] = hit
         return hit
     if len(_LUT_CACHE) >= _LUT_CACHE_MAX:
-        # evict the oldest entry (dicts preserve insertion order)
+        # evict the least recently used entry
         _LUT_CACHE.pop(next(iter(_LUT_CACHE)))
     enc = _huff_codes(bits, vals)
     sym_t = [-1] * (1 << 16)

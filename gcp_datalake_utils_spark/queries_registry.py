@@ -80,14 +80,14 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame],
 
 
 # ---------------------------------------------------------------------------
-# REGISTRATION ORDER IS A CORRECTNESS SIGNAL: the driver's per-round
-# CORRECTNESS window covers the FIRST 50 entries of QUERIES only.
-# Since round 8 the window is set PROGRAMMATICALLY by _rotate_window()
-# at the bottom of this file (see the _R8_WINDOW block comment for the
-# current rotation rationale) — register() blocks below keep their
-# grouping by module/family and no longer encode the window.
-# Rotated-out entries keep their prior driver greens (r4/r6/r7);
-# tools/check.py always runs ALL entries.
+# The per-round correctness gate hashes only the FIRST 50
+# entries of QUERIES. That window is not set by registration order: the
+# _WINDOW list at the bottom of this file moves 50 oracled rows to the
+# front. tools/window.py derives it from the committed
+# CORRECTNESS_r*.json records (red rows, then never-hashed rows, then
+# the oldest greens); after a new CORRECTNESS_r<n>.json lands, refresh
+# it with `python tools/window.py`. Registration order carries no
+# other meaning; tools/check.py always runs ALL entries.
 # ---------------------------------------------------------------------------
 
 from gcp_datalake_utils_spark.functions import bloom  # noqa: E402
@@ -109,7 +109,6 @@ from gcp_datalake_utils_spark.formatters import layout as fmt_layout  # noqa: E4
 from gcp_datalake_utils_spark.rules import compiler as rules_compiler  # noqa: E402
 from gcp_datalake_utils_spark.rules import config as rules_config  # noqa: E402
 
-# --- block A: NEW / plan-changed in round 7 -------------------------------
 register("kmeans_iterate_arrow", similarity_arrow.kmeans_iterate_arrow,
          similarity.KMEANS_ITERATE_ORACLE)
 register("lm_doc_scores_arrow", lm.lm_doc_scores_arrow,
@@ -270,19 +269,16 @@ register("jpeg_roundtrip_quality", jpeg.jpeg_roundtrip_quality, None)
 # CRC-8/16, STREAMINFO MD5 self-check) — LOSSLESS, so unlike JPEG the
 # row is fully oracled: features come from the decoded samples and
 # the oracle re-derives them from the generative formula (n_frames
-# additionally gates the framing). Registered after the r13 rotation
-# -> tail of QUERIES, heads the r14 never-hashed queue.
+# additionally gates the framing).
 register("flac_decode_features", flac.flac_decode_features,
          flac.FLAC_DECODE_FEATURES_ORACLE)
 # round 13: ISO BMFF (MP4) container metadata — the box grammar is
 # real (builder + recursive walker, largesize + unknown-box skip);
 # only the codec PAYLOAD decode remains stubbed in decode_media.
-# Registered after the r13 rotation -> r14 never-hashed queue.
 register("mp4_metadata", mp4.mp4_metadata, mp4.MP4_METADATA_ORACLE)
 # round 13: product quantization (Jegou et al. 2011) — per-subspace
 # Lloyd codebooks, 8-code encodings, ADC top-k, recall audit; the
 # compressed-storage half of IVF-PQ (the >= 1e9-vector memory lever).
-# Registered after the r13 rotation -> r14 never-hashed queue.
 # round 13: audio fingerprinting — Walsh-Hadamard sequency landmarks
 # (integer-exact cross-engine by construction, no libm in the gate)
 # through the real WAV round-trip; near-dup completes the
@@ -378,7 +374,6 @@ register("jsonl_roundtrip", interop.jsonl_roundtrip,
 register("csv_roundtrip", interop.csv_roundtrip,
          interop.CSV_ROUNDTRIP_ORACLE)
 
-# --- block B: the 26 r3-stale driver greens (r6 verdict ask #1) -----------
 register("user_sessions", stream_windows.user_sessions,
          stream_windows.USER_SESSIONS_ORACLE)
 register("windowed_counts_stream", stream_windows.windowed_counts_stream_q,
@@ -436,7 +431,6 @@ register("rules_file_source",
          lambda s, d: rules_config.rules_file_source(s),
          rules_config.RULES_FILE_SOURCE_ORACLE)
 
-# --- block C: r4-green refreshes (window filler to 50) --------------------
 register("revenue_by_nation", payload.revenue_by_nation,
          payload.REVENUE_BY_NATION_ORACLE)
 register("revenue_by_nation_bucketed",
@@ -486,7 +480,6 @@ register("prefix_filter_pairs", dedup.prefix_filter_pairs,
          dedup.PREFIX_FILTER_PAIRS_ORACLE)
 register("simhash64", dedup.simhash64, dedup.SIMHASH64_ORACLE)
 
-# --- rotated out of the window (driver greens held from r4/r6) ------------
 register("simhash64_near_pairs", dedup.simhash64_near_pairs,
          dedup.SIMHASH64_NEAR_PAIRS_ORACLE)
 register("pmi_collocations", collocations.pmi_collocations,
@@ -673,160 +666,16 @@ register("embedding_incremental_dedup",
          similarity.EMBEDDING_INCREMENTAL_DEDUP_ORACLE)
 
 
-# ---------------------------------------------------------------------------
-# ROUND-9 WINDOW ROTATION (r8 verdict ask #1). The driver hashes the
-# FIRST 50 entries of QUERIES each round. The r9 window:
-#   (1) the 8 round-8 additions the driver has never hashed
-#       (decontamination_hashed, rfm_segments, bm25_topk,
-#       c4_quality_filters, media_frame_sample, media_resize,
-#       incremental_agg, retention_policy);
-#   (2) the 3 r4 leftovers promised since r8 (simhash64,
-#       corpus_mixture_temp, events_gapfill);
-#   (3) operators NEW in round 9 (appended to _R9_NEW as they land);
-#   (4) backfill with the rows whose newest driver green is round 6 —
-#       the oldest hard evidence remaining in the registry.
-# The two rows-only sketch monitors (value_percentiles_approx,
-# profile_orders_approx) stay out by design: no oracle, `err:
-# no_oracle` rows would be noise; they are pytest-bracketed instead.
-# ---------------------------------------------------------------------------
-
-_R9_NEVER_HASHED = [
-    "decontamination_hashed",
-    "rfm_segments",
-    "bm25_topk",
-    "c4_quality_filters",
-    "media_frame_sample",
-    "media_resize",
-    "incremental_agg",
-    "retention_policy",
-    "simhash64",
-    "corpus_mixture_temp",
-    "events_gapfill",
-]
-
-# new round-9 operators — window slots reserved ahead of backfill
-_R9_NEW: list[str] = [
-    "bm25_topk_capped",
-    "retention_cohorts_preagg",
-    "path_transitions_preagg",
-    "active_users_rolling7_preagg",
-    "active_users_rolling7_sweep",
-    "daily_activity_cdc",
-    "domain_quota_sample",
-    "domain_quality_prior",
-    "domain_dedup_rollup",
-    "sequence_packing_bpe",
-    "events_dpp_join",
-    "source_length_deciles",
-    "daily_activity_stream",
-    "embedding_decontamination",
-]
-
-# oldest remaining driver evidence (newest green = r6), in prior
-# registry order; trimmed to fit the 50-slot budget after the never-
-# hashed rows and the round-9 additions
-_R9_BACKFILL_R6 = [
-    "drawio_erd_lines",
-    "hll_distinct_native",
-    "profile_orders_fast",
-    "lm_doc_scores",
-    "lm_quality_bins",
-    "weighted_sample",
-    "detect_naming_convention",
-    "detect_enhanced_pk_fk",
-    "detect_data_type_match",
-    "detect_custom_rules",
-    "data_test_report",
-    "adaptive_sample_size",
-    "detect_pipeline",
-    "classify_pk_fk",
-    "schema_complexity",
-    "top_orders_per_customer",
-    "frequency_distribution",
-    "distinct_cardinalities",
-    "orphan_users",
-    "common_keys",
-    "scalar_battery",
-    "events_hourly",
-    "audit_window_scan",
-    "timestamp_battery",
-    "graph_roots",
-    "graph_bfs_levels",
-    "checksum_gate",
-    "state_staleness",
-    "quality_report",
-    "quality_by_method",
-    "mermaid_erd_lines",
-    "plantuml_erd_lines",
-    "dedup_exact_groups",
-    "sequence_packing",
-    "text_language_id",
-    "dedup_minhash_signatures",
-    "dedup_lsh_buckets",
-    "dedup_keep_best",
-    "corpus_rollup",
-]
-
-def _rotate_window(priority: list[str], just_past: list[str]) -> None:
-    global QUERIES
-    head = [*priority, *just_past]
-    missing = [q for q in head if q not in QUERIES]
-    assert not missing, f"window names unknown: {missing}"
-    assert len(priority) == 50, len(priority)
-    rest = [k for k in QUERIES if k not in set(head)]
-    QUERIES = {k: QUERIES[k] for k in [*head, *rest]}
-
-
-_r9_head = [*_R9_NEVER_HASHED, *_R9_NEW]
-_r9_fill = _R9_BACKFILL_R6[: 50 - len(_r9_head)]
-_rotate_window([*_r9_head, *_r9_fill],
-               _R9_BACKFILL_R6[50 - len(_r9_head):])
-
-
-# ---------------------------------------------------------------------------
-# ROUND-10 WINDOW ROTATION (r9 verdict ask #5). Applied after (and
-# superseding) the r9 rotation above, which is kept as the evidence
-# record of what round 9 hashed. The r10 window:
-#   (1) the round-10 additions the driver has never hashed (span dedup
-#       removal + rollup, BPE pair counts, the stream->store gate, the
-#       DPP unpruned control) — the rows-only monitors
-#       (bpe_token_stats, sequence_packing_bpe_real,
-#       revenue_by_nation_approx) stay out by the established
-#       convention: no oracle, pytest-bracketed instead;
-#   (2) embedding_near_dups_auto — driver-green in r8, but round 10
-#       changed its knob contract (bits uncapped + band compensation)
-#       and its oracle, so the r8 hash is stale evidence;
-#   (3) ALL 25 rows whose newest driver green is round 6 (the
-#       _R9_BACKFILL_R6 tail that missed the r9 window plus the 11
-#       r6 rows never rotated) — after this round no oracled row's
-#       newest driver green is older than round 7;
-#   (4) backfill to 50 with the oldest round-7 rows in registry order.
-# ---------------------------------------------------------------------------
-
-_R10_NEW = [
-    "span_dedup_removal",
-    "span_dedup_rollup",
-    "contamination_span_scrub",
-    "contamination_scrub_rollup",
-    "nb_lang_classifier",
-    "dsir_importance_weights",
-    "training_shard_shuffle",
-    "bpe_pair_counts",
-    "daily_activity_store_stream",
-    "events_dpp_join_unpruned",
-    "embedding_near_dups_auto",
-    "embedding_incremental_dedup",
-]
-
-_R10_R6_STALE = [
-    "graph_bfs_levels",
-    "checksum_gate",
-    "state_staleness",
-    "quality_report",
-    "quality_by_method",
-    "mermaid_erd_lines",
-    "plantuml_erd_lines",
-    "dedup_exact_groups",
+# The correctness window: the first 50 entries of QUERIES.
+# Generated by tools/window.py from the committed CORRECTNESS_r*.json
+# records; refresh it with `python tools/window.py` after a new record
+# lands (tests/test_window.py fails until it is refreshed).
+_WINDOW = [
+    "image_dhash",
+    "video_frame_sample",
+    "pq_codes",
+    "pq_codes_arrow",
+    "pq_codes_sampled",
     "sequence_packing",
     "text_language_id",
     "dedup_minhash_signatures",
@@ -844,11 +693,6 @@ _R10_R6_STALE = [
     "state_upsert",
     "cache_lookup",
     "metadata_richness",
-]
-
-# the 48 rows whose newest driver green is round 7, in registry order;
-# the head fills the r10 window, the tail is the r11 rotation's queue
-_R10_R7_QUEUE = [
     "kmeans_iterate_arrow",
     "lm_doc_scores_arrow",
     "lm_quality_bins_arrow",
@@ -862,68 +706,6 @@ _R10_R7_QUEUE = [
     "source_vocab_overlap",
     "cross_source_dup_matrix",
     "dedup_incremental",
-    "forget_propagation",
-    "corpus_budget_selection",
-    "admission_pipeline",
-    "ingest_screen_stream",
-    "retention_cohorts",
-    "path_transitions",
-    "active_users_rolling7",
-    "jsonl_roundtrip",
-    "csv_roundtrip",
-    "user_sessions",
-    "windowed_counts_stream",
-    "dedup_stream",
-    "sliding_counts_stream",
-    "closed_sessions_stream",
-    "enriched_segment_stream",
-    "click_attribution_stream",
-    "dedup_near_pairs",
-    "dedup_groups",
-    "dedup_simhash",
-    "simhash_near_pairs",
-    "decontamination",
-    "text_token_stats",
-    "text_fingerprints",
-    "repetition_flags",
-    "vocab_entropy",
-    "doc_chunks",
-    "asof_last_order",
-    "scd2_history",
-    "corpus_curation",
-    "train_val_split",
-    "pii_redaction",
-    "boilerplate_flags",
-    "multimodal_features",
-    "similarity_kmeans_assign",
-    "value_percentiles",
-]
-
-_r10_head = [*_R10_NEW, *_R10_R6_STALE]
-_r10_fill = _R10_R7_QUEUE[: 50 - len(_r10_head)]
-_rotate_window([*_r10_head, *_r10_fill],
-               _R10_R7_QUEUE[50 - len(_r10_head):])
-
-# ---------------------------------------------------------------------------
-# ROUND-11 WINDOW ROTATION (r10 verdict ask #5). Superseding the r10
-# rotation above (kept as the r10 evidence record). The r11 window:
-#   (1) the round-11 additions the driver has never hashed (the
-#       composed fuzzy-dedup transform + ledger, the int8-prefiltered
-#       near-dup verify, the four CLI display-toggle delta rows);
-#   (2) drawio_erd_lines — r9-green, but round 11 added the default
-#       theme color triple to BOTH engines' line grammar, so the r9
-#       hash is stale evidence;
-#   (3) ALL 35 rows whose newest driver green is round 7 (computed
-#       from CORRECTNESS_r01-r10 at rotation time — the r10 fill took
-#       the first 13 of the 48-row r7 queue; these are the rest);
-#   (4) backfill to 50 with the oldest round-8 rows in registry order
-#       (the round-11 additions grew to 15, so the computed fill is
-#       EMPTY and _R11_R8_QUEUE is carried intact as the r12 queue).
-# After this round no oracled row's newest driver green is older than
-# round 8.
-# ---------------------------------------------------------------------------
-
-_R11_NEW = [
     "fuzzy_dedup_removal",
     "fuzzy_dedup_rollup",
     "semantic_dedup",
@@ -933,400 +715,27 @@ _R11_NEW = [
     "token_balanced_shards",
     "wav_decode_features",
     "pgm_resize_features",
-    "embedding_near_dups_quantized",
     "mermaid_erd_lines_untyped",
     "plantuml_erd_lines_nonull",
     "mermaid_erd_lines_noviews",
     "drawio_erd_lines_dark",
     "drawio_erd_lines",
-]
-
-_R11_R7_STALE = [
     "forget_propagation",
-    "corpus_budget_selection",
-    "admission_pipeline",
-    "ingest_screen_stream",
-    "retention_cohorts",
-    "path_transitions",
-    "active_users_rolling7",
-    "jsonl_roundtrip",
-    "csv_roundtrip",
-    "user_sessions",
-    "windowed_counts_stream",
-    "dedup_stream",
-    "sliding_counts_stream",
-    "closed_sessions_stream",
-    "enriched_segment_stream",
-    "click_attribution_stream",
-    "dedup_near_pairs",
-    "dedup_groups",
-    "dedup_simhash",
-    "simhash_near_pairs",
-    "decontamination",
-    "text_token_stats",
-    "text_fingerprints",
-    "repetition_flags",
-    "vocab_entropy",
-    "doc_chunks",
-    "asof_last_order",
-    "scd2_history",
-    "corpus_curation",
-    "train_val_split",
-    "pii_redaction",
-    "boilerplate_flags",
-    "multimodal_features",
-    "similarity_kmeans_assign",
-    "value_percentiles",
 ]
 
-# oldest round-8 rows in registry order; head backfills the window,
-# tail is the r12 rotation's queue
-_R11_R8_QUEUE = [
-    "grid_layout_coords",
-    "rules_file_source",
-    "revenue_by_nation",
-    "revenue_by_nation_bucketed",
-    "revenue_by_nation_preagg",
-    "revenue_by_nation_salted",
-    "profile_orders",
-    "paragraph_dedup",
-    "kmeans_iterate",
-    "funnel_conversion",
-]
 
-_r11_head = [*_R11_NEW, *_R11_R7_STALE]
-_r11_fill = _R11_R8_QUEUE[: 50 - len(_r11_head)]
-_rotate_window([*_r11_head, *_r11_fill],
-               _R11_R8_QUEUE[50 - len(_r11_head):])
-
-# ---------------------------------------------------------------------------
-# ROUND-12 WINDOW ROTATION (r11 verdict ask #5). Superseding the r11
-# rotation above (kept as the r11 evidence record). The r12 window:
-#   (1) the round-12 additions the driver has never hashed
-#       (png_decode_features, curation_incremental);
-#   (2) embedding_near_dups_quantized — green r11, but that hash was a
-#       match on the EMPTY set (r11 verdict "what's wrong" #1) and
-#       round 12 planted near-dup twins into the row's corpus AND its
-#       oracle, so both the contract and the evidence need a fresh
-#       non-vacuous driver hash;
-#   (3) 47 of the 49 rows whose newest driver green is round 8
-#       (recomputed from CORRECTNESS_r01-r11 at rotation time).
-# The 50-slot window cannot hold 49 + 3: the two rows deferred to the
-# r13 queue head are grid_layout_coords and rules_file_source — both
-# re-verified green at HEAD by the r11 judge's own sampled gate (the
-# freshest manual evidence among the 49), so deferring them one round
-# loses the least. After this round at most those two oracled rows
-# have driver evidence older than r9.
-# ---------------------------------------------------------------------------
-
-_R12_NEW = [
-    "png_decode_features",
-    "curation_incremental",
-    "embedding_near_dups_quantized",
-]
-
-# the 49 rows whose newest driver green is r8, in CORRECTNESS_r08
-# order; the last two (judge-re-verified at r11 HEAD) defer to r13
-_R12_R8_STALE = [
-    "detect_foreign_key",
-    "pricing_summary",
-    "revenue_by_nation",
-    "similarity_embedding_near_dups",
-    "tfidf_top_terms",
-    "similarity_rp_lsh_topk",
-    "label_centroids",
-    "stratified_sample",
-    "snapshot_diff",
-    "restore_summary",
-    "events_in_type_windows",
-    "kmeans_iterate",
-    "corpus_mixture",
-    "pagerank_tables",
-    "corpus_vocabulary",
-    "batch_ann_topk",
-    "simhash64_near_pairs",
-    "batch_ann64_topk",
-    "order_lines_nested",
-    "hll_distinct",
-    "cms_heavy_hitters",
-    "bloom_prefilter_audit",
-    "prefix_filter_pairs",
-    "funnel_conversion",
-    "robust_outliers",
-    "funnel_completions_stream",
-    "hll_grouped",
-    "value_drift_psi",
-    "pmi_collocations",
-    "revenue_by_nation_salted",
-    "events_by_type_two_phase",
-    "revenue_by_nation_bucketed",
-    "inverted_index",
-    "embedding_quantize",
-    "paragraph_dedup",
-    "ann_recall_audit",
-    "cosine_topk_arrow",
-    "ann_rerank",
-    "embedding_near_dups64",
-    "profile_orders",
-    "evolving_read",
-    "events_pivot",
-    "events_rolling",
-    "zorder_layout",
-    "revenue_by_nation_preagg",
-    "lm_doc_scores_pruned",
-    "order_lines_nested_bucketed",
-    "grid_layout_coords",
-    "rules_file_source",
-]
-
-_r12_head = [*_R12_NEW, *_R12_R8_STALE[:50 - len(_R12_NEW)]]
-_rotate_window(_r12_head, _R12_R8_STALE[50 - len(_R12_NEW):])
-
-# R13 QUEUE (precomputed at r12 close for the next rotation):
-#   (1) never-hashed r12 late additions: image_dhash, image_near_dups,
-#       curation_incremental_rollup (jpeg_roundtrip_quality is
-#       rows-only by convention and stays out of the window);
-#   (2) the two r12 deferrals: grid_layout_coords, rules_file_source;
-#   (3) the 49 rows whose newest driver green is r9 (recomputed from
-#       CORRECTNESS_r01-r11): classify_pk_fk, schema_complexity,
-#       detect_naming_convention, detect_enhanced_pk_fk,
-#       detect_data_type_match, detect_custom_rules, detect_pipeline,
-#       top_orders_per_customer, frequency_distribution,
-#       distinct_cardinalities, common_keys, scalar_battery,
-#       timestamp_battery, graph_roots, data_test_report,
-#       adaptive_sample_size, orphan_users, events_hourly,
-#       audit_window_scan, simhash64, corpus_mixture_temp,
-#       lm_doc_scores, weighted_sample, lm_quality_bins,
-#       events_gapfill, hll_distinct_native, profile_orders_fast,
-#       decontamination_hashed, rfm_segments, bm25_topk,
-#       c4_quality_filters, media_frame_sample, media_resize,
-#       incremental_agg, retention_policy, bm25_topk_capped,
-#       retention_cohorts_preagg, path_transitions_preagg,
-#       active_users_rolling7_preagg, active_users_rolling7_sweep,
-#       daily_activity_cdc, domain_quota_sample, domain_quality_prior,
-#       domain_dedup_rollup, sequence_packing_bpe, events_dpp_join,
-#       source_length_deciles, daily_activity_stream,
-#       embedding_decontamination.
-# 3 + 2 + 49 = 54 > 50: the r13 rotation will defer the overflow tail
-# of (3) to r14 the way r12 deferred its two judge-re-verified rows.
-
-# ---------------------------------------------------------------------------
-# ROUND-13 WINDOW ROTATION (r12 verdict ask #2). Superseding the r12
-# rotation above (kept as the r12 evidence record). The r13 window:
-#   (1) the r12 late additions the driver has never hashed
-#       (image_dhash, image_near_dups, curation_incremental_rollup) —
-#       image_near_dups additionally changed plan this round (hybrid
-#       cap/blocked verify; output-identical, pytest-asserted);
-#   (2) the round-13 additions (embedding_near_dups_sharded,
-#       embedding_near_dups_128);
-#   (3) the rows whose CONTRACT changed this round: the quantized-
-#       verify default flip rewired embedding_near_dups64 and
-#       embedding_near_dups_auto (verify stage + oracle prefilter
-#       CTE), so their r12/r11 greens no longer cover HEAD;
-#   (4) the two r12 deferrals (grid_layout_coords, rules_file_source
-#       — the last rows with driver evidence older than r9);
-#   (5) 41 of the 49 rows whose newest driver green is r9 (the
-#       precomputed queue above).
-# 9 + 41 = 50; the 8-row overflow tail of (5) defers to r14 in queue
-# order (domain_quota_sample, domain_quality_prior,
-# domain_dedup_rollup, sequence_packing_bpe, events_dpp_join,
-# source_length_deciles, daily_activity_stream,
-# embedding_decontamination) — each re-verified green by tools/check
-# at HEAD this round; after r13 no other oracled row's newest driver
-# green is older than r10.
-# ---------------------------------------------------------------------------
-
-_R13_NEW = [
-    "image_dhash",
-    "image_near_dups",
-    "curation_incremental_rollup",
-    "embedding_near_dups_sharded",
-    "embedding_near_dups_128",
-    "embedding_near_dups64",
-    "embedding_near_dups_auto",
-    "grid_layout_coords",
-    "rules_file_source",
-]
-
-# the 49 rows whose newest driver green is r9, in CORRECTNESS_r09
-# order (recomputed at r12 close — the R13 QUEUE comment above)
-_R13_R9_STALE = [
-    "classify_pk_fk",
-    "schema_complexity",
-    "detect_naming_convention",
-    "detect_enhanced_pk_fk",
-    "detect_data_type_match",
-    "detect_custom_rules",
-    "detect_pipeline",
-    "top_orders_per_customer",
-    "frequency_distribution",
-    "distinct_cardinalities",
-    "common_keys",
-    "scalar_battery",
-    "timestamp_battery",
-    "graph_roots",
-    "data_test_report",
-    "adaptive_sample_size",
-    "orphan_users",
-    "events_hourly",
-    "audit_window_scan",
-    "simhash64",
-    "corpus_mixture_temp",
-    "lm_doc_scores",
-    "weighted_sample",
-    "lm_quality_bins",
-    "events_gapfill",
-    "hll_distinct_native",
-    "profile_orders_fast",
-    "decontamination_hashed",
-    "rfm_segments",
-    "bm25_topk",
-    "c4_quality_filters",
-    "media_frame_sample",
-    "media_resize",
-    "incremental_agg",
-    "retention_policy",
-    "bm25_topk_capped",
-    "retention_cohorts_preagg",
-    "path_transitions_preagg",
-    "active_users_rolling7_preagg",
-    "active_users_rolling7_sweep",
-    "daily_activity_cdc",
-    "domain_quota_sample",
-    "domain_quality_prior",
-    "domain_dedup_rollup",
-    "sequence_packing_bpe",
-    "events_dpp_join",
-    "source_length_deciles",
-    "daily_activity_stream",
-    "embedding_decontamination",
-]
-
-_r13_head = [*_R13_NEW, *_R13_R9_STALE[:50 - len(_R13_NEW)]]
-_rotate_window(_r13_head, _R13_R9_STALE[50 - len(_R13_NEW):])
+def _rotate_window(window: list[str]) -> None:
+    """Move ``window`` to the front of QUERIES; the other entries keep
+    their registration order."""
+    global QUERIES
+    assert len(window) == 50 == len(set(window)), window
+    bad = [q for q in window if q not in QUERIES or q not in ORACLES]
+    assert not bad, f"window names unregistered or without oracle: {bad}"
+    rest = [k for k in QUERIES if k not in set(window)]
+    QUERIES = {k: QUERIES[k] for k in [*window, *rest]}
 
 
-# ---------------------------------------------------------------------------
-# ROUND-14 WINDOW ROTATION (r13 verdict asks #1 and #10). Superseding
-# the r13 rotation above (kept as the r13 evidence record). The r14
-# window:
-#   (1) image_dhash — the r13 driver-red row (hash_match=false,
-#       unreproduced locally; kernel hardened + live-path pinned this
-#       round, see plans/r14/image_dhash_red_note.md) — MUST re-gate;
-#   (2) every row whose internals the r14 optimizer changed:
-#       image_near_dups (round-trip guard in the shared kernel),
-#       pricing_summary / revenue_by_nation / kmeans_iterate
-#       (conditional fan-out now that their exact-fold outputs are
-#       verified core-count-invariant), curation_incremental
-#       (threaded batch frames) + curation_incremental_rollup
-#       (union-of-aggregates one-pass), batch_ann_topk /
-#       batch_ann64_topk / ann_rerank / ann_recall_audit (probe side
-#       bucketized from the filtered scan), pq_codes_sampled
-#       (driver-side sample training, bit-identity pytest-pinned);
-#   (3) the 12 build-continuation rows the driver has never hashed
-#       (FLAC, MP4, audio x2, video x2, PQ x6);
-#   (4) the 8 r13 deferrals (newest driver green r9);
-#   (5) 18 of the 49 rows whose newest driver green is r10, in
-#       CORRECTNESS_r10 order.
-# 11 + 12 + 8 + 19 = 50 (pq_codes_sampled / video x2 overlap (2)+(3));
-# the remaining 31 r10-stale rows defer to r15 in queue order.
-# ---------------------------------------------------------------------------
-
-_R14_PRIORITY = [
-    # (1) driver-red
-    "image_dhash",
-    # (2) optimizer-touched
-    "image_near_dups",
-    "pricing_summary",
-    "revenue_by_nation",
-    "kmeans_iterate",
-    "curation_incremental",
-    "curation_incremental_rollup",
-    "batch_ann_topk",
-    "batch_ann64_topk",
-    "ann_rerank",
-    "ann_recall_audit",
-    # (3) never hashed by any driver round
-    "flac_decode_features",
-    "mp4_metadata",
-    "audio_fingerprint",
-    "audio_near_dups",
-    "video_frame_sample",
-    "video_near_dups",
-    "pq_codes",
-    "pq_codes_arrow",
-    "pq_codes_sampled",
-    "ivf_pq_topk",
-    "pq_adc_topk",
-    "pq_recall_audit",
-    # (4) r13 deferrals (newest green r9)
-    "domain_quota_sample",
-    "domain_quality_prior",
-    "domain_dedup_rollup",
-    "sequence_packing_bpe",
-    "events_dpp_join",
-    "source_length_deciles",
-    "daily_activity_stream",
-    "embedding_decontamination",
-]
-
-# the 49 rows whose newest driver green is r10, in CORRECTNESS_r10
-# order (recomputed at r14 from CORRECTNESS_r01-r13)
-_R14_R10_STALE = [
-    "span_dedup_removal",
-    "span_dedup_rollup",
-    "contamination_span_scrub",
-    "contamination_scrub_rollup",
-    "nb_lang_classifier",
-    "dsir_importance_weights",
-    "training_shard_shuffle",
-    "bpe_pair_counts",
-    "daily_activity_store_stream",
-    "events_dpp_join_unpruned",
-    "embedding_incremental_dedup",
-    "graph_bfs_levels",
-    "checksum_gate",
-    "state_staleness",
-    "quality_report",
-    "quality_by_method",
-    "mermaid_erd_lines",
-    "plantuml_erd_lines",
-    "dedup_exact_groups",
-    "sequence_packing",
-    "text_language_id",
-    "dedup_minhash_signatures",
-    "dedup_lsh_buckets",
-    "dedup_keep_best",
-    "corpus_rollup",
-    "similarity_cosine_topk",
-    "similarity_ivf_topk",
-    "similarity_rp_lsh_buckets",
-    "catalog_tables",
-    "sample_scan",
-    "table_batching_rank",
-    "events_props_json",
-    "relationships_per_table",
-    "state_upsert",
-    "cache_lookup",
-    "metadata_richness",
-    "kmeans_iterate_arrow",
-    "lm_doc_scores_arrow",
-    "lm_quality_bins_arrow",
-    "embedding_quantize_arrow",
-    "label_centroids_arrow",
-    "repetition_flags_arrow",
-    "force_layout_coords",
-    "rule_compiler_truth",
-    "dup_ngram_fraction",
-    "dup_ngram_stats",
-    "source_vocab_overlap",
-    "cross_source_dup_matrix",
-    "dedup_incremental",
-]
-
-_r14_head = [*_R14_PRIORITY,
-             *_R14_R10_STALE[:50 - len(_R14_PRIORITY)]]
-_rotate_window(_r14_head, _R14_R10_STALE[50 - len(_R14_PRIORITY):])
+_rotate_window(_WINDOW)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

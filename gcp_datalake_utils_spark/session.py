@@ -13,6 +13,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """``min(16g, half of MemTotal)`` from /proc/meminfo; 16g when that
+    cannot be read. 16g, not 8g, is the ceiling because in local mode
+    the driver heap also hosts every task's execution memory AND the
+    AQE broadcast builds — a ~64 MB compressed query stage decompresses
+    into a GB-scale HashedRelation, and at sf10 the dedup family's
+    verify joins OOMed flakily against 8g (measured; 16g passes and the
+    broadcast conversion then WINS: near_dup_pairs 141 -> 74 s). The
+    half-of-RAM cap leaves the rest to the Python workers: a long-lived
+    session's heap grows toward -Xmx, and on a 16 GB host a 16g heap
+    got the JVM killed by the kernel's out-of-memory killer."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048  # kB -> MB / 2
+                    return f"{min(16 << 10, half_mb)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
+
+
 def get_spark(app_name: str = "gcp-datalake-utils-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
@@ -26,6 +48,9 @@ def get_spark(app_name: str = "gcp-datalake-utils-spark",
     factory CREATES the session; ``getOrCreate`` silently keeps a
     pre-existing session's values — callers embedding the engine in a
     host application inherit that host's static configuration.
+
+    The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    ``min(16g, half of the host's RAM)`` (see ``_default_driver_mem``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     n_shuffle = shuffle_partitions or int(
@@ -45,16 +70,9 @@ def get_spark(app_name: str = "gcp-datalake-utils-spark",
         # vectorized parquet reader rejects; read them as long (ns since
         # epoch) and convert at the operator boundary (sources.event_ts)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # 16g, not 8g: in local mode the driver heap also hosts every
-        # task's execution memory AND the AQE broadcast builds — a
-        # ~64 MB compressed query stage decompresses into a GB-scale
-        # HashedRelation, and at sf10 the dedup family's verify joins
-        # OOMed flakily against 8g (measured; 16g passes and the
-        # broadcast conversion then WINS: near_dup_pairs 141 -> 74 s).
-        # On a real cluster the driver hosts neither, so this is a
-        # local-harness knob, not a scale requirement.
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_mem())
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE",
                                "/tmp/spark_graft_warehouse"))

@@ -87,11 +87,12 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     min(maxPartitionBytes, max(openCostInBytes, totalBytes/cores)),
     partitions ~= ceil(totalBytes / maxSplitBytes) with each file
     charged openCost. Frames with no file source (in-memory test
-    frames) fall back to the RDD probe — no query path hits that."""
+    frames) or with any non-``file:`` input (hdfs/s3/gs, whose sizes
+    the Spark driver cannot stat locally) fall back to the RDD probe."""
     from urllib.parse import unquote, urlparse
 
     files = df.inputFiles()
-    if not files:
+    if not files or not all(u.startswith("file:") for u in files):
         return df.rdd.getNumPartitions()
     conf = df.sparkSession.conf
     try:
@@ -106,12 +107,10 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
         open_cost = 4 << 20
     total = 0
     for uri in files:
-        size = 0
-        if uri.startswith("file:"):
-            try:
-                size = os.path.getsize(unquote(urlparse(uri).path))
-            except OSError:
-                size = 0
+        try:
+            size = os.path.getsize(unquote(urlparse(uri).path))
+        except OSError:
+            size = 0
         total += size + open_cost
     cores = df.sparkSession.sparkContext.defaultParallelism
     max_split = min(maxpb, max(open_cost, total // max(cores, 1)))

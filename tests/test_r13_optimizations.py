@@ -56,6 +56,21 @@ def test_jpeg_huff_lut_agrees_with_read_symbol():
         assert sym_t[win + (1 << (16 - ln)) - 1] == sym
 
 
+def test_jpeg_huff_lut_cache_evicts_least_recently_used(monkeypatch):
+    from gcp_datalake_utils_spark.llm import jpeg as J
+    monkeypatch.setattr(J, "_LUT_CACHE", {})
+    tables = [[(v + i) % 256 for v in J.DC_VALS]
+              for i in range(J._LUT_CACHE_MAX + 1)]
+    for vals in tables[:-1]:
+        J._huff_lut(J.DC_BITS, vals)
+    hit = J._huff_lut(J.DC_BITS, tables[0])  # oldest entry, now recent
+    J._huff_lut(J.DC_BITS, tables[-1])
+    keys = [vals for _, vals in J._LUT_CACHE]
+    assert len(keys) == J._LUT_CACHE_MAX
+    assert bytes(tables[0]) in keys and bytes(tables[1]) not in keys
+    assert J._huff_lut(J.DC_BITS, tables[0]) is hit
+
+
 # --- FLAC fast bit paths ----------------------------------------------------
 
 def test_flac_write_bit_array_matches_bitwise():

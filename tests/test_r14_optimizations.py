@@ -93,6 +93,12 @@ def test_scan_partition_probe_file_backed(spark, tmp_path):
     assert _estimated_scan_partitions(many) >= target
     kept = scaled_repartition(many, "id")
     assert kept is many  # no exchange added
+    # remote input the Spark driver cannot stat: the RDD probe, not 0 bytes
+    from types import SimpleNamespace
+    remote = SimpleNamespace(
+        inputFiles=lambda: ["hdfs://nn:8020/corpus/part-00000.parquet"],
+        rdd=SimpleNamespace(getNumPartitions=lambda: 7))
+    assert _estimated_scan_partitions(remote) == 7
 
 
 # --- driver-side PQ sample training (VERDICT item 7) -------------------------
