@@ -49,8 +49,6 @@ HEADLINE = [
     "decontamination",
     "tfidf_top_terms",
     "sequence_packing",
-    "repetition_flags",
-    "label_centroids",
     "closed_sessions_stream",
     "stratified_sample",
     "pii_redaction",
@@ -61,7 +59,6 @@ HEADLINE = [
     # they time parquet snapshot WRITES, not query execution)
     "events_in_type_windows",
     "kmeans_iterate",
-    "embedding_quantize",
     "corpus_mixture",
     "enriched_segment_stream",
     # round-4 additions: production-width signature spaces + nested
@@ -102,8 +99,9 @@ HEADLINE = [
     "revenue_by_nation_bucketed",
     "hll_distinct_native",
     "profile_orders_fast",
-    # round-7 additions: the Arrow repetition twin benched NEXT TO the
-    # JVM-fold plan, and the no-Expand approx-distinct profile
+    # round-7 additions: the Arrow kernels for interpreted-fold
+    # hotspots (repetition stats, k-means, LM scoring, int8 quantizer,
+    # label centroids) and the no-Expand approx-distinct profile
     # (force_layout_coords / rule_compiler_truth excluded: metadata-
     # scale, constant-time)
     "repetition_flags_arrow",

@@ -42,11 +42,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gcp_datalake_utils_spark.llm import similarity as sim
+from gcp_datalake_utils_spark.session import SessionCache, session_key
 from gcp_datalake_utils_spark.sources import load_table
 
 SEMDEDUP_EPS = 0.9
 SEMDEDUP_CC_MAX_ITER = 30
-_SEM_CACHE = None  # lazy SessionCache; verdict memo (see curation_funnel)
+# verdict memo; eager init (the curation._FUNNEL_CACHE rule)
+_SEM_CACHE = SessionCache()
 
 
 def _cluster_labeled(e: DataFrame, assign: DataFrame) -> DataFrame:
@@ -74,11 +76,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LOWEST centroid cosine (ties -> lowest vec_id — a total
     order); singletons (no eps-neighbor in their cluster) keep
     themselves."""
-    global _SEM_CACHE
-    from gcp_datalake_utils_spark.session import (SessionCache,
-                                                  session_key)
-    if _SEM_CACHE is None:
-        _SEM_CACHE = SessionCache()
     return _SEM_CACHE.get_or_build(
         (session_key(spark), sf_dir),
         lambda: _semantic_dedup_from(

@@ -626,40 +626,6 @@ _DAVG6_SQL = ("round(CAST(sum(CAST(round(CAST({v} AS DOUBLE), 7) "
               "AS DECIMAL(18,7))) AS DOUBLE) / count(*), 6)")
 
 
-def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] per-label centroid + each vector's cosine to its own label
-    centroid (cluster-coherence scoring; the IVF trainer's E-step view).
-
-    Scale path: ``posexplode`` to (label, dim, value) and partial-
-    aggregate the component means — the shuffle carries |labels|×dims
-    rows, never vectors — then re-assemble each centroid with a
-    dims-bounded ``collect_list`` and broadcast the tiny (label ->
-    centroid) table back onto the corpus for the narrow cosine pass.
-    Components are rounded to 6 before the cosine so both engines fold
-    identical doubles."""
-    e = load_table(spark, sf_dir, "embeddings")
-    cent = _label_centroid_table(e)
-    cos = F.round(
-        _dot(F.col("embedding"), F.col("centroid"))
-        / (_norm(F.col("embedding")) * _norm(F.col("centroid"))), 6)
-    return (e.join(F.broadcast(cent), "label")
-            .select("vec_id", "label", cos.alias("cos_centroid")))
-
-
-def _label_centroid_table(e: DataFrame) -> DataFrame:
-    """(label, centroid): exact-decimal component means, re-assembled
-    with a dims-bounded collect_list. Shared by the JVM cosine pass
-    and the Arrow twin."""
-    comp = (e.select("label", F.posexplode("embedding")
-                     .alias("dim", "v"))
-            .groupBy("label", "dim")
-            .agg(_davg6(F.col("v")).alias("c")))
-    return (comp.groupBy("label")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"]).alias("centroid")))
-
-
 LABEL_CENTROIDS_ORACLE = f"""
 WITH comp AS (
   SELECT label, d AS dim,
@@ -780,10 +746,16 @@ KMEANS_ITERATE_ORACLE = _kmeans_oracle()
 
 
 def _staged_quantized(e: DataFrame) -> DataFrame:
-    """(vec_id, label, embedding, scale_raw, qarr): the symmetric-int8
-    staging shared by embedding_quantize (which presents it) and the
-    quantized near-dup prefilter (which ships qarr instead of floats).
-    See embedding_quantize for the staging-order rationale."""
+    """(vec_id, label, embedding, scale_raw, qarr): symmetric int8
+    quantization per vector (the EMBEDDING_QUANTIZE_ORACLE grid), the
+    codes the quantized near-dup prefilter ships instead of floats.
+    scale = max|x| / 127; q[i] = round(x[i] / scale) clamped to
+    [-127, 127]; zero vectors carry scale 0 and all-zero codes (the
+    1e-30 guard divides only by a nonzero scale). STAGING ORDER
+    MATTERS: scale_raw becomes a real attribute before the qarr lambda
+    references it — an un-staged array_max subtree inside the lambda
+    is re-evaluated per element (O(dims^2) per row, the r2
+    lambda-re-inlining class)."""
     absmax = F.array_max(F.transform(
         "embedding", lambda x: F.abs(x.cast("double"))))
     s1 = e.select("vec_id", "label", "embedding",
@@ -799,43 +771,6 @@ def _staged_quantized(e: DataFrame) -> DataFrame:
         .otherwise(F.lit(0)))
     return s1.select("vec_id", "label", "embedding", "scale_raw",
                      q.alias("qarr"))
-
-
-def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] symmetric int8 quantization per vector — the storage/transfer
-    form a 100 TB embedding store actually ships (4x smaller, SIMD
-    dot-products downstream). scale = max|x| / 127 per vector;
-    q[i] = round(x[i] / scale) clamped to [-127, 127]. A fully narrow
-    codegen projection (no shuffle, no UDF); the recon_err column
-    round-trips the quantization so the oracle proves the exact same
-    grid on both engines. Zero vectors carry scale 0 and all-zero
-    codes (the 1e-30 guard divides only by a nonzero scale)."""
-    # STAGING ORDER MATTERS (inside _staged_quantized): scale and qarr
-    # become real attributes before any lambda references them — an
-    # un-staged scale inside the recon lambda is re-evaluated PER
-    # ELEMENT (the array_max subtree makes that O(dims^2) per row; the
-    # r2 lambda-re-inlining class). The staged column is named
-    # scale_raw, NOT scale: the final select aliases round(...) AS
-    # scale, and Spark's lateral-column-alias resolution would make
-    # recon's F.col("scale") silently read the ROUNDED value
-    # (observed: recon off in the 5th decimal).
-    s2 = _staged_quantized(load_table(spark, sf_dir, "embeddings"))
-    recon_err = F.round(F.sqrt(F.aggregate(
-        F.zip_with("embedding", "qarr",
-                   lambda x, qi: F.pow(x.cast("double")
-                                       - qi.cast("double")
-                                       * F.col("scale_raw"), 2)),
-        F.lit(0.0), lambda a, b: a + b)), 6)
-    # q8 presented as a comma-joined string: array-typed result columns
-    # break the driver's pandas hasher (r3), and the string form also
-    # cuts the bench collect transfer ~4x (BENCH_r03 measured the
-    # 64-int-array shipping, not the plan).
-    return s2.select(
-        "vec_id", "label",
-        F.round("scale_raw", 6).alias("scale"),
-        F.array_join(F.col("qarr").cast("array<string>"), ",")
-        .alias("q8"),
-        recon_err.alias("recon_err"))
 
 
 EMBEDDING_QUANTIZE_ORACLE = """

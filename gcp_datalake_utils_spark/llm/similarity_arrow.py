@@ -212,7 +212,7 @@ def kmeans_iterate_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _assign_arrow(e, cents)
 
 
-# --- Arrow centroid partial sums (shared by the centroid-family twins) -
+# --- Arrow centroid partial sums (k-means M-step, label centroids) ----
 
 
 def _centroid_partials(df: DataFrame, key_col: str) -> DataFrame:
@@ -291,17 +291,19 @@ def _centroid_table_arrow(df: DataFrame, key_col: str) -> DataFrame:
                 lambda s: s["c"]).alias("centroid")))
 
 
-# --- Arrow label-centroid coherence (twin of similarity.label_centroids)
+# --- Arrow label-centroid coherence ------------------------------------
 
 
 def label_centroids_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] Arrow twin of :func:`similarity.label_centroids` — identical
-    output, same oracle. The centroid table stays JVM-side (its
-    DECIMAL(18,7) component means are the exactness anchor) and is
+    """[Q] per-label centroid + each vector's cosine to its own label
+    centroid (cluster-coherence scoring; the IVF trainer's E-step
+    view), LABEL_CENTROIDS_ORACLE. The centroid means come from the
+    exact integer partial sums of `_centroid_partials` (the shuffle
+    carries |labels| x dims rows, never vectors) and the table is
     COLLECTED — |labels| x dims floats, model state — so the cosine
     pass runs as one numpy batch kernel with no broadcast join and no
     interpreted folds. Round-6 before emit, the repo-wide float
-    contract; bit-identity to the JVM twin pytest-guarded."""
+    contract; hash-pinned to the oracle in tests/test_round7_ops.py."""
     e = load_table(spark, sf_dir, "embeddings")
     rows = _centroid_table_arrow(e, "label").collect()
     labels = np.array(sorted(r["label"] for r in rows), dtype=np.int64)
@@ -331,29 +333,35 @@ def label_centroids_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "vec_id long, label int, cos_centroid double"))
 
 
-# --- Arrow int8 quantizer (twin of similarity.embedding_quantize) ------
+# --- Arrow int8 quantizer ---------------------------------------------
 
 _QUANT_SCHEMA = ("vec_id long, label int, scale double, q8 string, "
                  "recon_err double")
 
 
 def embedding_quantize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] Arrow twin of :func:`similarity.embedding_quantize` —
-    identical grid, same oracle. The JVM plan is narrow and
-    shuffle-free but spends its time in interpreted transform/zip_with
-    lambdas (3 per row over 64 elements); this kernel vectorizes the
-    whole batch in numpy while replicating the JVM semantics exactly:
+    """[Q] symmetric int8 quantization per vector — the storage/transfer
+    form a 100 TB embedding store ships (4x smaller, SIMD dot-products
+    downstream), EMBEDDING_QUANTIZE_ORACLE. scale = max|x| / 127 per
+    vector; q[i] = round(x[i] / scale) clamped to [-127, 127]; zero
+    vectors carry scale 0 and all-zero codes. recon_err round-trips
+    the quantization so the oracle proves the exact grid. One numpy
+    kernel per Arrow batch (a declarative plan spends its time in
+    interpreted transform/zip_with lambdas, 3 per row over 64
+    elements), with the oracle's semantics kept exact:
 
     - q = round(x / scale) is HALF_UP over the value's decimal
       representation; numpy's rint is HALF_EVEN, so exact .5 ties
       (they exist: any element at absmax/2 lands on one) are detected
       with ``y - floor(y) == 0.5`` and re-rounded away from zero;
-    - the reconstruction sum accumulates column-by-column in the same
-      sequential order as the JVM ``aggregate`` fold (numpy's pairwise
-      axis-sum would differ in final ulps);
+    - the reconstruction sum accumulates column-by-column in dimension
+      order, the oracle's sequential fold (numpy's pairwise axis-sum
+      would differ in final ulps);
     - scale / recon_err round to 6 via the shortest-decimal HALF_UP
       contract (Decimal(repr(x))).
-    Bit-identity to the JVM twin is pytest-guarded."""
+    q8 is a comma-joined string: array-typed result columns break
+    pandas-based row hashers, and the string form cuts collect transfer
+    ~4x. Hash-pinned to the oracle in tests/test_round7_ops.py."""
     import numpy as np  # noqa: F401 (module-level import reused)
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -383,7 +391,7 @@ def embedding_quantize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             r = m - q * scale[:, None]
             sq = r * r
             acc = np.zeros(len(m), dtype=np.float64)
-            for j in range(sq.shape[1]):  # JVM fold order, exactly
+            for j in range(sq.shape[1]):  # sequential fold order
                 acc = acc + sq[:, j]
             err = np.sqrt(acc)
             import pandas as pd

@@ -171,86 +171,6 @@ MIN_FRAC_UNIQUE = 0.4
 MAX_DUP_3GRAM_FRAC = 0.05
 
 
-def _mode_count(arr):
-    """Largest multiplicity in an array, linear-time: sort the array
-    (O(n log n), codegen) then one run-length fold over the sorted
-    copy.  Replaces the r2 per-distinct-element rescan
-    (transform(array_distinct(a), w -> size(filter(a, x == w)))) which
-    was O(unique·len) AND — the real 421 s killer in BENCH_r02 —
-    re-inlined the un-materialized split() producing `arr` into every
-    lambda body, re-tokenizing the document per element."""
-    s = F.array_sort(arr)
-
-    def _step(acc, x):
-        run = F.when(acc["prev"].eqNullSafe(x), acc["run"] + 1) \
-            .otherwise(F.lit(1).cast("long"))
-        return F.struct(x.alias("prev"), run.alias("run"),
-                        F.greatest(acc["best"], run).alias("best"))
-
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best"))
-    return F.aggregate(s, init, _step, lambda acc: acc["best"])
-
-
-def repetition_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] Gopher-style repetition quality signals per document:
-    unique-word fraction, most-common-word fraction, most-common-bigram
-    fraction, duplicate-3-gram fraction, and a composite repetitive
-    flag.
-
-    Scale design: fully narrow — zero Exchange, zero Window, one scan.
-    The token / bigram / trigram arrays are materialized in STAGED
-    projections (separate .select calls) so CollapseProject keeps each
-    expensive array built exactly once per row; mode counts are then a
-    linear sort + run-length fold per doc.  The alternative
-    posexplode + lead + three-groupBy port of the DuckDB oracle
-    (text.py REPETITION_FLAGS_ORACLE below) is also linear but shuffles
-    the entire token stream — at 100 TB that is a corpus-sized
-    Exchange, while this plan ships nothing.  Guarded by
-    tests/test_plans.py (no Exchange/Window, no nested filter-in-
-    transform rescan)."""
-    d = load_table(spark, sf_dir, "documents")
-    # stage 1: tokenize once
-    toks = d.select("doc_id", _words_col().alias("ws"))
-    n = F.size("ws")
-    # stage 2: build n-gram arrays from the materialized token array
-    # (element_at over an attribute — no re-tokenization)
-    grams = toks.select(
-        "doc_id", "ws",
-        F.when(n >= 2, F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(" ", F.element_at("ws", i),
-                                  F.element_at("ws", i + 1))))
-        .otherwise(F.array().cast("array<string>")).alias("bs"),
-        F.when(n >= 3, F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.concat_ws(" ", F.element_at("ws", i),
-                                  F.element_at("ws", i + 1),
-                                  F.element_at("ws", i + 2))))
-        .otherwise(F.array().cast("array<string>")).alias("ts"))
-    # stage 3: linear per-row stats over the materialized arrays
-    n_tri = F.size("ts")
-    stats = grams.select(
-        "doc_id",
-        n.cast("long").alias("n_words"),
-        F.round(F.size(F.array_distinct("ws")) / n, 6)
-        .alias("frac_unique"),
-        F.round(_mode_count(F.col("ws")) / n, 6).alias("top_word_frac"),
-        F.when(n >= 2, F.round(
-            _mode_count(F.col("bs")) / F.size("bs"), 6))
-        .otherwise(0.0).alias("top_bigram_frac"),
-        F.when(n_tri > 0, F.round(
-            1 - F.size(F.array_distinct("ts")) / n_tri, 6))
-        .otherwise(0.0).alias("dup_3gram_frac"))
-    return stats.withColumn(
-        "flag_repetitive",
-        (F.col("frac_unique") < MIN_FRAC_UNIQUE)
-        | (F.col("top_word_frac") > MAX_TOP_WORD_FRAC)
-        | (F.col("dup_3gram_frac") > MAX_DUP_3GRAM_FRAC))
-
-
 _BIGRAMS_SQL = (f"list_transform(range(1, greatest(len({_WORDS}), 1)), "
                 f"i -> {_WORDS}[i] || ' ' || {_WORDS}[i+1])")
 _TRIGRAMS_SQL = (
@@ -420,22 +340,19 @@ FROM ord
 
 
 # ---------------------------------------------------------------------------
-# Arrow twin of repetition_flags (r6 verdict ask #4): the JVM plan above
-# is narrow and shuffle-free but its per-row mode counts are interpreted
-# higher-order-function folds (array_sort + aggregate lambda), measured
-# 4.5x DuckDB at sf1. This twin computes the identical statistics in an
-# Arrow ``mapInPandas`` kernel — C-backed dict counting per document,
-# one pass, still zero Exchange (mapInPandas preserves partitioning), so
-# the 100 TB story is unchanged: embarrassingly parallel per-row work.
-# Bit-compatibility: tokenization replicates Spark's
+# Gopher-style repetition flags as one Arrow ``mapInPandas`` kernel:
+# per-document Counter mode counts in a single pass. A declarative plan
+# would need interpreted higher-order-function folds (array_sort +
+# aggregate lambda) per row, which run outside whole-stage codegen;
+# the kernel is zero-Exchange (mapInPandas preserves partitioning), so
+# the work stays embarrassingly parallel per row at any scale.
+# Spark/DuckDB-compatible semantics: tokenization replicates
 # split(trim(text), '\\s+') exactly (trim strips ' ' only; Java \\s is
 # the ASCII class [ \\t\\n\\x0b\\f\\r]; limit=-1 keeps leading/trailing
 # empty tokens), and rounding replicates Spark's round() HALF_UP over
 # the shortest-decimal representation (Double.toString == repr(float)).
-# Guarded bit-identical against the JVM twin in tests/test_text.py.
+# Hash-pinned to REPETITION_FLAGS_ORACLE in tests/test_round7_ops.py.
 # ---------------------------------------------------------------------------
-
-_JAVA_WS = None  # compiled lazily inside the kernel (executor-side)
 
 _REP_ARROW_SCHEMA = ("doc_id bigint, n_words bigint, frac_unique double, "
                      "top_word_frac double, top_bigram_frac double, "
@@ -465,8 +382,8 @@ def _rep_stats_batches(batches):
                                "dup_3gram_frac", "flag_repetitive")}
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
             if text is None:
-                # JVM twin: split(trim(NULL)) is NULL, size(NULL) is
-                # NULL -> every stat (and the flag) null-propagates
+                # Spark's split(trim(NULL)) and size(NULL) are NULL
+                # -> every stat (and the flag) null-propagates
                 out["doc_id"].append(doc_id)
                 for k in ("n_words", "frac_unique", "top_word_frac",
                           "top_bigram_frac", "dup_3gram_frac",
@@ -503,9 +420,11 @@ def _rep_stats_batches(batches):
 
 
 def repetition_flags_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] Arrow-kernel twin of :func:`repetition_flags` — identical
-    output (same oracle), per-doc Counter mode counts instead of
-    interpreted HOF folds. Zero Exchange; scales as a narrow map."""
+    """[Q] Gopher-style repetition quality signals per document:
+    unique-word fraction, most-common-word fraction, most-common-bigram
+    fraction, duplicate-3-gram fraction, and a composite repetitive
+    flag (REPETITION_FLAGS_ORACLE). One Arrow kernel pass of per-doc
+    Counter mode counts; zero Exchange, so it scales as a narrow map."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return d.mapInPandas(_rep_stats_batches, schema=_REP_ARROW_SCHEMA)
 
@@ -513,7 +432,7 @@ def repetition_flags_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # C4-style heuristic quality filters (round 8; Raffel et al. 2020 §2.2
 # adapted to document granularity). Complements the Gopher-style
-# repetition signals (repetition_flags) and the composite
+# repetition signals (repetition_flags_arrow) and the composite
 # quality_score (token_stats) with the classic boolean gate battery a
 # C4-like cleaning pass applies before anything model-based runs. The
 # denylist is a 2-phrase demo stand-in for the configurable blocklist

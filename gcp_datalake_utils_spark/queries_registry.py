@@ -402,8 +402,6 @@ register("decontamination", decontam.decontamination,
 register("text_token_stats", text.token_stats, text.TOKEN_STATS_ORACLE)
 register("text_fingerprints", text.fingerprints,
          text.FINGERPRINTS_ORACLE)
-register("repetition_flags", text.repetition_flags,
-         text.REPETITION_FLAGS_ORACLE)
 register("vocab_entropy", text.vocab_entropy,
          text.VOCAB_ENTROPY_ORACLE)
 register("doc_chunks", chunks.doc_chunks, chunks.DOC_CHUNKS_ORACLE)
@@ -610,14 +608,10 @@ register("bm25_topk_capped", retrieval.bm25_topk_capped,
          retrieval.BM25_TOPK_CAPPED_ORACLE)
 register("inverted_index", index.inverted_index,
          index.INVERTED_INDEX_ORACLE)
-register("embedding_quantize", similarity.embedding_quantize,
-         similarity.EMBEDDING_QUANTIZE_ORACLE)
 register("tfidf_top_terms", tfidf.tfidf_top_terms,
          tfidf.TFIDF_TOP_TERMS_ORACLE)
 register("corpus_vocabulary", tfidf.corpus_vocabulary,
          tfidf.CORPUS_VOCABULARY_ORACLE)
-register("label_centroids", similarity.label_centroids,
-         similarity.LABEL_CENTROIDS_ORACLE)
 register("events_in_type_windows", rangejoin.events_in_type_windows,
          rangejoin.EVENTS_IN_TYPE_WINDOWS_ORACLE)
 register("ann_recall_audit", similarity.ann_recall_audit,

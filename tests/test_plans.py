@@ -132,27 +132,6 @@ def test_scd2_single_exchange_merged_windows(spark, sf_dir):
         "lead+row_number must merge into one Window operator"
 
 
-def test_repetition_flags_narrow_linear(spark, sf_dir):
-    """Repetition flags must stay a zero-shuffle narrow projection with
-    LINEAR per-doc mode counts: no Exchange/Window anywhere, and no
-    nested filter-inside-transform rescan (the r2 plan's
-    transform(array_distinct(a), w -> size(filter(a, ...))) was
-    O(unique·len) per doc and re-tokenized the document per element —
-    421.9 s of BENCH_r02)."""
-    from gcp_datalake_utils_spark.llm import text
-    df = text.repetition_flags(spark, sf_dir)
-    plan = _formatted_plan(df)
-    assert "Exchange" not in plan
-    assert "Window" not in plan
-    # the quadratic shape: a lambda filter nested inside a transform
-    import re
-    assert not re.search(r"transform\([^\n]*lambdafunction\([^\n]*"
-                         r"size\(filter\(", plan), \
-        "per-distinct-element rescan is back"
-    # the linear shape: sorted-array run-length fold
-    assert "array_sort" in plan and "aggregate(" in plan
-
-
 def test_inverted_index_cap_bounded_no_global_sort(spark, sf_dir):
     """The posting-list cap is enforced inside the agg (collect_list
     over a rank-capped when(), which skips nulls) so no aggregation

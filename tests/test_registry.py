@@ -1,0 +1,47 @@
+"""Registry consistency: every name the benchmarks time resolves to a
+registered query, and retired names stay retired. No Spark session is
+started here."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import __spark_entry__ as entry  # noqa: E402
+import bench  # noqa: E402
+from perfbench.workloads import WORKLOADS, resolve  # noqa: E402
+
+# JVM fold plans folded into their Arrow kernels; each name's oracle
+# now pins the `<name>_arrow` query
+RETIRED = ("repetition_flags", "label_centroids", "embedding_quantize")
+
+
+def test_headline_names_are_registered():
+    queries = entry.queries()
+    missing = [n for n in bench.HEADLINE if n not in queries]
+    assert not missing, missing
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
+
+
+def test_perfbench_workloads_resolve():
+    queries = entry.queries()
+    for workload in WORKLOADS:
+        assert resolve(workload, queries)
+
+
+def test_retired_names_absent():
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    for name in RETIRED:
+        assert name not in queries
+        assert name not in oracles
+        assert name not in bench.HEADLINE
+        assert f"{name}_arrow" in oracles
+
+
+def test_semdedup_cache_is_eager():
+    from gcp_datalake_utils_spark.llm import semdedup
+    from gcp_datalake_utils_spark.session import SessionCache
+    assert isinstance(semdedup._SEM_CACHE, SessionCache)

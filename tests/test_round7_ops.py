@@ -1,26 +1,40 @@
-"""Round-7 additions: Arrow repetition twin, force-layout coordinates,
-rule-compiler truth table, approx profile."""
+"""Round-7 additions: Arrow kernels for interpreted-fold hotspots,
+force-layout coordinates, rule-compiler truth table, approx profile."""
 
 from __future__ import annotations
+
+import os
+import sys
+
+import pytest
 
 from gcp_datalake_utils_spark.formatters import layout
 from gcp_datalake_utils_spark.llm import text
 from gcp_datalake_utils_spark.operators import profile
 from gcp_datalake_utils_spark.rules import compiler as rc
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import __spark_entry__ as entry  # noqa: E402
+from tools.check import run_duck, table_hash  # noqa: E402
+
 
 def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_repetition_arrow_bit_identical_to_jvm(spark, sf_dir):
-    jvm = _sorted_rows(text.repetition_flags(spark, sf_dir))
-    arrow = _sorted_rows(text.repetition_flags_arrow(spark, sf_dir))
-    assert len(jvm) == len(arrow) > 0
-    for a, b in zip(jvm, arrow):
-        # bit-identical, not approx: same tokenization, same HALF_UP
-        # rounding over the shortest-decimal representation
-        assert a == b
+@pytest.mark.parametrize("name", ["repetition_flags_arrow",
+                                  "label_centroids_arrow",
+                                  "embedding_quantize_arrow"])
+def test_arrow_kernel_matches_oracle(spark, sf_dir, name):
+    """The single implementation of each fold hotspot hash-matches its
+    DuckDB oracle (tools/check.py's order-insensitive value hash)."""
+    sdf = entry.queries()[name](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    drows, dcols = run_duck(entry.oracle_sql()[name], sf_dir)
+    assert len(srows) == len(drows) > 0
+    assert table_hash(srows, sdf.columns) == table_hash(drows, dcols)
 
 
 def test_repetition_arrow_no_exchange(spark, sf_dir):
@@ -169,20 +183,3 @@ def test_value_percentiles_approx_rank_bracket(spark, sf_dir):
         assert b["q9750"] - 1e-9 <= r["p99"] <= b["qmax"] + 1e-9
 
 
-def test_quantize_arrow_bit_identical_to_jvm(spark, sf_dir):
-    """Same int8 grid, same recon_err fold, same string form."""
-    from gcp_datalake_utils_spark.llm import similarity, similarity_arrow
-    jvm = _sorted_rows(similarity.embedding_quantize(spark, sf_dir))
-    arrow = _sorted_rows(
-        similarity_arrow.embedding_quantize_arrow(spark, sf_dir))
-    assert len(jvm) == len(arrow) > 0
-    assert jvm == arrow
-
-
-def test_label_centroids_arrow_bit_identical_to_jvm(spark, sf_dir):
-    from gcp_datalake_utils_spark.llm import similarity, similarity_arrow
-    jvm = _sorted_rows(similarity.label_centroids(spark, sf_dir))
-    arrow = _sorted_rows(
-        similarity_arrow.label_centroids_arrow(spark, sf_dir))
-    assert len(jvm) == len(arrow) > 0
-    assert jvm == arrow
