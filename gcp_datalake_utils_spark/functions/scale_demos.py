@@ -130,6 +130,11 @@ def revenue_by_nation_bucketed(spark: SparkSession,
             .agg(*payload.revenue_agg_exprs()))
 
 
+# line revenue as exact BIGINT 1e-4 units: payload._dsum's per-row term
+_REVENUE_UNITS = payload._dterm_sql(
+    "l_extendedprice * (1 - l_discount)", 4)
+
+
 def revenue_by_nation_preagg(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """[Q] the bucketed revenue join with the exact-distinct residual
@@ -149,16 +154,16 @@ def revenue_by_nation_preagg(spark: SparkSession,
        distinct re-exchange: count(*) IS n_orders because each
        orderkey occurs exactly once after step 1.
 
-    Exact decimal arithmetic is associative, so the regrouped sums
+    Exact integer arithmetic is associative, so the regrouped sums
     hash-match the same oracle at every scale and partitioning
     (REVENUE_BY_NATION_ORACLE, shared with the other three twins).
-    The per-row term is extracted to INT64 1e-4 units (an exact
-    decimal multiply, never a float truncation) so the 15M-group
-    aggregate runs on primitive-long buffers instead of DECIMAL(28,4)
-    — measured 4.1 -> 2.9 s on the agg at sf10; the unit total
-    re-enters decimals through an exact /10000 division at the
-    25-row rollup. Overflow headroom: ~1e9 units/order, ~6e16
-    corpus-wide << 2^63.
+    The per-row term is payload._dsum's exact BIGINT 1e-4 unit
+    (payload._dterm_sql), so the 15M-group aggregate runs on
+    primitive-long buffers — measured 4.1 -> 2.9 s on the agg at sf10
+    against DECIMAL(28,4) buffers; the unit total re-enters decimals
+    through the kernel's exact division (payload._dunits_sql) at the
+    25-row rollup. One BIGINT sum suffices here, without the kernel's
+    limbs: ~1e9 units/order, ~6e16 corpus-wide << 2^63.
 
     Plan-guarded in tests/test_plans.py: no Expand, and zero Exchange
     at or below the orders join. sf10 itemization (warm, min-of-3):
@@ -168,11 +173,8 @@ def revenue_by_nation_preagg(spark: SparkSession,
     pays; the approx-profile monitor family (profile_orders_approx)
     is the documented escape when exactness is not required."""
     _ensure_bucketed(spark, sf_dir)
-    units = F.expr(
-        "CAST(CAST(round(l_extendedprice * (1 - l_discount), 4)"
-        " AS DECIMAL(18,4)) * 10000 AS BIGINT)")
     per_order = (spark.table("bk_lineitem")
-                 .select("l_orderkey", units.alias("u"))
+                 .select("l_orderkey", F.expr(_REVENUE_UNITS).alias("u"))
                  .groupBy("l_orderkey")
                  .agg(F.sum("u").alias("rev_units"),
                       F.count("*").alias("items")))
@@ -186,8 +188,7 @@ def revenue_by_nation_preagg(spark: SparkSession,
             .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
             .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
             .groupBy("r_name", "n_name")
-            .agg(F.expr("CAST(CAST(SUM(rev_units) AS DECIMAL(38,4))"
-                        " / 10000 AS DECIMAL(38,6))")
+            .agg(F.expr(payload._dunits_sql("sum(rev_units)", 4))
                  .cast("string").alias("revenue"),
                  F.sum("items").cast("long").alias("n_items"),
                  F.count("*").alias("n_orders")))
@@ -221,15 +222,10 @@ def revenue_by_nation_approx(spark: SparkSession,
     shipped scale shape here and this twin is the documented
     high-fan-in escape."""
     _ensure_bucketed(spark, sf_dir)
-    # same INT64 1e-4-unit extraction as the exact twin (its measured
-    # 4.1 -> 2.9 s agg win applies here too: the 60M-row sum runs on
-    # primitive longs, not DECIMAL(28,4) buffers) and the identical
-    # final conversion, so `revenue` stays bit-equal to the exact twin
-    units = F.expr(
-        "CAST(CAST(round(l_extendedprice * (1 - l_discount), 4)"
-        " AS DECIMAL(18,4)) * 10000 AS BIGINT)")
+    # same 1e-4-unit terms and final conversion as the exact twin, so
+    # `revenue` stays bit-equal to it
     li = (spark.table("bk_lineitem")
-          .select("l_orderkey", units.alias("u")))
+          .select("l_orderkey", F.expr(_REVENUE_UNITS).alias("u")))
     o = spark.table("bk_orders").hint("SHUFFLE_HASH")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
@@ -239,8 +235,7 @@ def revenue_by_nation_approx(spark: SparkSession,
             .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
             .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
             .groupBy("r_name", "n_name")
-            .agg(F.expr("CAST(CAST(SUM(u) AS DECIMAL(38,4))"
-                        " / 10000 AS DECIMAL(38,6))")
+            .agg(F.expr(payload._dunits_sql("sum(u)", 4))
                  .cast("string").alias("revenue"),
                  F.count("*").alias("n_items"),
                  F.approx_count_distinct("o_orderkey")

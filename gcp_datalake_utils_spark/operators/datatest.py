@@ -5,8 +5,9 @@ bigquery-to-erd) as DataFrame aggregations over full columns instead of
 driver-side Python sets over ``LIMIT n`` samples:
 
 - referential integrity = |distinct src ∩ distinct tgt| / |distinct src|
-  (``_calculate_referential_integrity`` :153-177) — here a join of
-  per-value frequency tables (one shuffle each side, combiner-applied)
+  (``_calculate_referential_integrity`` :153-177) — here one per-value
+  frequency table carrying both sides' counts (one combiner-applied
+  shuffle for all specs)
 - orphan_count = total_source_rows − overlap  (:91, the reference counts
   sample rows minus the set intersection size)
 - distribution similarity = avg(1 − |ratio_src − ratio_tgt|) over common
@@ -20,18 +21,19 @@ scale) and exposes ``sample_fraction`` for seeded ``df.sample`` at 100 TB
 — both engines then see the same rows only in full-data mode, so the
 oracle pins full-data.
 
-At scale: both sides reduce to per-value counts BEFORE joining (map-side
-combine), so the join input is |distinct values|, not |rows|; AQE handles
-skewed hot keys.
+At scale: both sides reduce to per-value counts map-side, so the one
+exchange carries |distinct values|, not |rows|; AQE handles skewed hot
+keys.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from gcp_datalake_utils_spark.sources import load_table
-from gcp_datalake_utils_spark.session import session_key
+from gcp_datalake_utils_spark.session import SessionCache, session_key
 
 # (src_table, src_col, tgt_table, tgt_col) relationship specs tested by
 # the canonical data-test report — the TPC-H star-schema edges plus one
@@ -77,58 +79,97 @@ def type_compat_score(src_type: str, tgt_type: str) -> float:
     return 0.2
 
 
-def _freq(spark: SparkSession, sf_dir: str, spec: int, table: str,
-          col: str, cname: str,
+def _key_type(t: DataType) -> str:
+    """The type a relationship's values are counted in: integral types
+    widen to BIGINT and float to DOUBLE (both lossless); any other
+    type stays as it is."""
+    name = t.simpleString()
+    if name in ("tinyint", "smallint", "int", "bigint"):
+        return "bigint"
+    if name in ("float", "double"):
+        return "double"
+    return name
+
+
+def _freq(spark: SparkSession, sf_dir: str,
+          specs: list[tuple[str, str, str, str, str, str]],
           sample_fraction: float | None) -> DataFrame:
-    """Per-value frequency table keyed (spec, v) — grouping on the join
-    key itself, so the downstream equi-join consumes this exchange with
-    no re-shuffle, and the per-side totals aggregation reuses it too."""
-    t = load_table(spark, sf_dir, table).select(F.col(col).alias("v"))
-    t = t.where(F.col("v").isNotNull())
-    if sample_fraction is not None:
-        t = t.sample(fraction=sample_fraction, seed=42)
-    return (t.select(F.lit(spec).alias("spec"), "v")
-            .groupBy("spec", "v").agg(F.count("*").alias(cname)))
+    """(spec, ca, cb) per distinct non-NULL value of every spec: ``ca``
+    counts the value on the source side, ``cb`` on the target side.
+
+    Each table is scanned ONCE for all of its spec columns: its rows
+    explode into one (spec, is_src, v) entry per column, and a single
+    partial-aggregated count grouped on (spec, v) carries both sides —
+    one exchange for the whole report. Every spec column must widen to
+    the same key type; otherwise this raises instead of comparing
+    through a silent cast. ``sample_fraction`` samples each table
+    (hence each side) with a fixed seed before it explodes."""
+    tables: dict[str, DataFrame] = {}
+    uses: dict[str, list[tuple[int, bool, str]]] = {}
+    key = None
+    for i, (st, sc, tt, tc, _, _) in enumerate(specs):
+        for t, c, is_src in ((st, sc, True), (tt, tc, False)):
+            if t not in tables:
+                tables[t] = load_table(spark, sf_dir, t)
+            k = _key_type(tables[t].schema[c].dataType)
+            if key is not None and k != key:
+                raise TypeError(
+                    f"{t}.{c} ({k}) and the other spec columns ({key}) "
+                    "do not widen to one key type")
+            key = k
+            uses.setdefault(t, []).append((i, is_src, c))
+    rows = None
+    for t, cols in uses.items():
+        src = tables[t].select(*sorted({c for _, _, c in cols}))
+        if sample_fraction is not None:
+            src = src.sample(fraction=sample_fraction, seed=42)
+        e = src.select(F.explode(F.array(*[
+            F.struct(F.lit(i).alias("spec"),
+                     F.lit(is_src).alias("is_src"),
+                     F.col(c).cast(key).alias("v"))
+            for i, is_src, c in cols])).alias("e")).select("e.*")
+        rows = e if rows is None else rows.unionByName(e)
+    return (rows.where(F.col("v").isNotNull())
+            .groupBy("spec", "v")
+            .agg(F.count_if("is_src").alias("ca"),
+                 F.count_if(~F.col("is_src")).alias("cb"))
+            .drop("v"))
 
 
 def _report_for_specs(spark: SparkSession, sf_dir: str,
                       specs: list[tuple[str, str, str, str, str, str]],
                       sample_fraction: float | None = None) -> DataFrame:
-    """All specs in ONE plan with each side scanned and shuffled ONCE:
+    """All specs in ONE plan over ONE frequency exchange (_freq):
 
-    - spec-tagged frequency tables (partial-agg + one exchange per side)
-    - per-side totals = groupBy(spec) over the frequency tables — reuses
-      the same exchanges (ReuseExchange), no second scan
-    - common-value stats = one INNER join on (spec, v) + one grouped agg,
-      with the 1-row-per-spec totals broadcast into the similarity term
+    - per-side totals = groupBy(spec) over the frequency table, a value
+      counting for a side when its count there is positive; a side
+      with no values gets NULL rows, as the oracle's ``sum`` does
+    - common-value stats = the values with both counts positive, one
+      grouped agg with the 1-row-per-spec totals broadcast into the
+      similarity term — no join of the two sides at all
 
-    The join input stays |distinct values| per spec (map-side combined),
-    never |rows|; AQE splits skewed hot keys."""
-    fa = fb = None
-    for i, (st, sc, tt, tc, _, _) in enumerate(specs):
-        a = _freq(spark, sf_dir, i, st, sc, "ca", sample_fraction)
-        b = _freq(spark, sf_dir, i, tt, tc, "cb", sample_fraction)
-        fa = a if fa is None else fa.unionByName(a)
-        fb = b if fb is None else fb.unionByName(b)
-    sa = fa.groupBy("spec").agg(
-        F.count("*").alias("na_distinct"),
-        F.sum("ca").alias("na_rows"))
-    sb = fb.groupBy("spec").agg(
-        F.count("*").alias("nb_distinct"),
-        F.sum("cb").alias("nb_rows"))
-    # full outer + the meta left-join below keep a spec whose side(s)
-    # are empty (all-NULL column, zero sample): it must yield a zeros
-    # row like the oracle's always-1-row sa/sb CTEs, not vanish
-    totals = sa.join(sb, "spec", "full_outer")
-    stats = (fa.join(fb, ["spec", "v"])
+    Both aggregations re-read the same exchange (ReuseExchange); its
+    size is |distinct values| per spec (map-side combined), never
+    |rows|."""
+    freq = _freq(spark, sf_dir, specs, sample_fraction)
+    ca, cb = F.col("ca"), F.col("cb")
+    totals = freq.groupBy("spec").agg(
+        F.count_if(ca > 0).alias("na_distinct"),
+        F.sum(F.when(ca > 0, ca)).alias("na_rows"),
+        F.count_if(cb > 0).alias("nb_distinct"),
+        F.sum(F.when(cb > 0, cb)).alias("nb_rows"))
+    stats = (freq.where((ca > 0) & (cb > 0))
              .join(F.broadcast(
                  totals.select("spec", "na_rows", "nb_rows")), "spec")
              .groupBy("spec")
              .agg(F.count("*").alias("n_common"),
                   F.sum("ca").alias("common_src_rows"),
-                  F.avg(1.0 - F.abs(F.col("ca") / F.col("na_rows")
-                                    - F.col("cb") / F.col("nb_rows")))
+                  F.avg(1.0 - F.abs(ca / F.col("na_rows")
+                                    - cb / F.col("nb_rows")))
                   .alias("avg_sim")))
+    # the meta left-joins keep a spec whose side(s) are empty (all-NULL
+    # column, zero sample): it must yield a zeros row like the oracle's
+    # always-1-row sa/sb CTEs, not vanish
     meta = F.broadcast(spark.createDataFrame(
         [(i, f"{st}.{sc}->{tt}.{tc}", type_compat_score(sty, tty))
          for i, (st, sc, tt, tc, sty, tty) in enumerate(specs)],
@@ -189,7 +230,7 @@ def test_relationship(spark: SparkSession, sf_dir: str,
     return _report_for_specs(spark, sf_dir, [spec], sample_fraction)
 
 
-_REPORT_CACHE: dict[tuple, DataFrame] = {}
+_REPORT_CACHE = SessionCache()
 
 
 def data_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,12 +241,11 @@ def data_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (relationship_cache.py, 24 h TTL — data-test metrics feed detection
     enhancement and are cached with it): the metrics are immutable for a
     given snapshot, so consumers get the materialized 5-row report
-    instead of re-deriving the frequency-join plan."""
-    key = (session_key(spark), sf_dir)
-    if key not in _REPORT_CACHE:
-        _REPORT_CACHE[key] = _report_for_specs(
-            spark, sf_dir, DATA_TEST_SPECS).localCheckpoint()
-    return _REPORT_CACHE[key]
+    instead of re-deriving the frequency plan."""
+    return _REPORT_CACHE.get_or_build(
+        (session_key(spark), sf_dir),
+        lambda: _report_for_specs(
+            spark, sf_dir, DATA_TEST_SPECS).localCheckpoint())
 
 
 def _one_oracle(src_table: str, src_col: str, tgt_table: str, tgt_col: str,

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from gcp_datalake_utils_spark.catalog import fixtures as fx
 from gcp_datalake_utils_spark.operators.classify import classified_columns
 from gcp_datalake_utils_spark.rules import compiler as rc
-from gcp_datalake_utils_spark.session import session_key
+from gcp_datalake_utils_spark.session import SessionCache, session_key
 
 # strategy union order in detect_relationships
 # (relationship_detector.py:58-77) — the tie-break the reference gets from
@@ -485,7 +485,8 @@ def validate_relationships(rels: DataFrame, cls: DataFrame) -> DataFrame:
         .select(*REL_COLS))
 
 
-_DETECT_CACHE: dict[tuple[int, bool], DataFrame] = {}
+# (applicationId, filtered) -> checkpointed relationships table
+_DETECT_CACHE = SessionCache()
 
 
 def detect_all(spark: SparkSession,
@@ -500,12 +501,17 @@ def detect_all(spark: SparkSession,
     quality / formatter layers, and the catalog is immutable within a
     session — consumers get a materialized metadata-sized DataFrame
     instead of re-deriving the five-strategy plan."""
-    memo_key = ((session_key(spark), filtered)
-                if cls is None else None)
-    if memo_key is not None and memo_key in _DETECT_CACHE:
-        return _DETECT_CACHE[memo_key]
-    c = cls if cls is not None else classified_columns(spark)
-    c = c.cache()
+    if cls is None:
+        return _DETECT_CACHE.get_or_build(
+            (session_key(spark), filtered),
+            lambda: _detect(spark, classified_columns(spark), filtered)
+            .localCheckpoint())
+    return _detect(spark, cls, filtered)
+
+
+def _detect(spark: SparkSession, cls: DataFrame,
+            filtered: bool) -> DataFrame:
+    c = cls.cache()
     rels = (detect_foreign_keys(spark, c)
             .unionByName(detect_naming_conventions(spark, c))
             .unionByName(detect_enhanced_pk_fk(spark, c))
@@ -514,9 +520,5 @@ def detect_all(spark: SparkSession,
     resolved = resolve_conflicts(rels)
     out = filter_relationships(resolved) if filtered \
         else resolved.select(*REL_COLS)
-    out = validate_relationships(out, c) \
+    return validate_relationships(out, c) \
         .withColumn("confidence", F.round("confidence", 6))
-    if memo_key is not None:
-        out = out.localCheckpoint()
-        _DETECT_CACHE[memo_key] = out
-    return out

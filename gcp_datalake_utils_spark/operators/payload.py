@@ -26,22 +26,57 @@ from gcp_datalake_utils_spark.sources import (
 
 # --- TPC-H Q1-style pricing summary (A-family flagship aggregation) ----
 
-def _dsum(col, scale: int):
-    """Order-independent big sum, emitted as exact DECIMAL(38,6).
+_LIMB = 10 ** 9
 
-    Terms are rounded to their exact decimal width (the testdata's
-    money/quantity columns carry <= 2 decimals, so products carry
-    <= 4/6 — the round is lossless) and summed as DECIMAL. Plain
-    double sums are non-associative: the salted and bucketed twins of
-    revenue_by_nation produced last-ulp divergence at sf0.1 under
-    their different partitionings. The OUTPUT also stays decimal: at
-    sf1 the exact sum_charge carries 17 significant digits — more than
-    double holds — and Spark's BigDecimal cast vs DuckDB's int128/10^k
-    division landed 1 ulp apart, so any float output re-introduces the
-    flake at some scale. DECIMAL end to end is bit-stable at every SF
-    and partitioning."""
-    return F.sum(F.round(col, scale).cast(f"decimal(18,{scale})")) \
-        .cast("decimal(38,6)")
+
+def _dterm_sql(expr: str, scale: int) -> str:
+    """round(expr, s) as an exact BIGINT count of 10^-s units: the
+    per-row term of :func:`_dsum`. Spark's double round(x, s) yields
+    the double nearest the decimal D it rounded to; scaling that by
+    10^s lands within |D·10^s|·2^-52 of the integer D·10^s, so rint
+    recovers it exactly while |D·10^s| < 2^51."""
+    return f"CAST(rint(round({expr}, {scale}) * {10 ** scale}) AS BIGINT)"
+
+
+def _dunits_sql(units: str, scale: int) -> str:
+    """An exact integer count of 10^-s units as DECIMAL(38,6) (the
+    division by 10^s is exact because s <= 6)."""
+    return (f"CAST(CAST({units} AS DECIMAL(38,0)) / {10 ** scale}"
+            " AS DECIMAL(38,6))")
+
+
+def _dsum(expr: str, scale: int):
+    """Order-independent exact sum of round(expr, s), as DECIMAL(38,6).
+
+    Contract: the result equals the DECIMAL sum of the per-row
+    round(x, s) values exactly — the value the oracle's
+    ``sum(CAST(round(x, s) AS DECIMAL(18,s)))`` computes — so it is
+    bit-stable under any partitioning, merge order and core count, at
+    every scale. Plain double sums are not: the salted and bucketed
+    twins of revenue_by_nation diverged in the last ulp at sf0.1, and
+    at sf1 sum_charge carries 17 significant digits, more than a
+    double holds (hence the DECIMAL / string outputs below).
+
+    Kernel: each row becomes v = round(x, s)·10^s as BIGINT
+    (:func:`_dterm_sql`), split into limbs lo = pmod(v, 10^9) and
+    hi = (v - lo) div 10^9, and each limb is summed on a primitive
+    long buffer — no per-row BigDecimal add. The group's total
+    hi_sum·10^9 + lo_sum is rebuilt once per group as DECIMAL(38,0)
+    and divided exactly by 10^s. Headroom: terms are exact while
+    |v| < 2^51; lo_sum (each lo < 10^9) stays exact up to ~9e9 rows
+    per group and hi_sum (|hi| < 2.3e6) far beyond, whereas a single
+    BIGINT sum of v would overflow sum_charge near sf15. An overflow
+    raises under ANSI mode; it never wraps silently. NULL rows add
+    nothing and an all-NULL group sums to NULL.
+
+    ``expr`` is Spark SQL, like the oracle helpers' argument: the
+    kernel is parsed as one expression, which costs a fraction of the
+    driver round trips that composing it from Column calls does."""
+    v = _dterm_sql(expr, scale)
+    lo = f"pmod({v}, {_LIMB})"
+    hi = f"({v} - {lo}) div {_LIMB}"
+    return F.expr(_dunits_sql(
+        f"CAST(sum({hi}) AS DECIMAL(38,0)) * {_LIMB} + sum({lo})", scale))
 
 
 def _dsum_sql(expr: str, scale: int) -> str:
@@ -49,7 +84,7 @@ def _dsum_sql(expr: str, scale: int) -> str:
             f"AS DECIMAL(18,{scale})) ) AS DECIMAL(38,6))")
 
 
-def _dstr(col, scale: int):
+def _dstr(expr: str, scale: int):
     """_dsum presented as its canonical string.
 
     The driver's value hasher normalizes DECIMAL differently from
@@ -62,21 +97,20 @@ def _dstr(col, scale: int):
     STRING cast is byte-identical on both engines ("123.456000", full
     scale, verified) — the one presentation that is simultaneously
     exact, partition-order-independent, and hashable by any harness."""
-    return _dsum(col, scale).cast("string")
+    return _dsum(expr, scale).cast("string")
 
 
 def _dstr_sql(expr: str, scale: int) -> str:
     return f"CAST({_dsum_sql(expr, scale)} AS VARCHAR)"
 
 
-def _dsum_dbl(col, scale: int):
+def _dsum_dbl(expr: str, scale: int):
     """Double-valued exact sum for RATIO numerators (avg columns): safe
     while the scaled sum stays below 2^53 (true through sf100 for these
     columns — both engines then cast the exact decimal to the identical
     nearest double); the plain sums use _dsum's decimal output
     instead, which has no such bound."""
-    return F.sum(F.round(col, scale).cast(f"decimal(18,{scale})")) \
-        .cast("double")
+    return _dsum(expr, scale).cast("double")
 
 
 def _dsum_dbl_sql(expr: str, scale: int) -> str:
@@ -88,14 +122,14 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[Q] A1/A8/F9: grouped aggregate battery over lineitem. One
     shuffle on the tiny (returnflag, linestatus) key space; partial
     aggregation does nearly all the work map-side. Sums and averages
-    use exact decimal addition (_dsum) so the result is independent of
-    partition count and merge order at any scale."""
+    use the exact fixed-point kernel (_dsum) so the result is
+    independent of partition count and merge order at any scale."""
     li = load_table(spark, sf_dir, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc * (1 + F.col("l_tax"))
+    disc = "l_extendedprice * (1 - l_discount)"
+    charge = f"{disc} * (1 + l_tax)"
     cnt = F.count("*")
     # round 14: the partial-agg pass ran on ONE core on single-split
-    # local scans; every output column folds exactly (_dsum decimals,
+    # local scans; every output column folds exactly (_dsum limbs,
     # counts), so the conditional fan-out is hash-safe at any core
     # count. Filter stays below the exchange (pushdown intact);
     # projection shrinks the exchange to the 7 used columns.
@@ -109,15 +143,15 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         src
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _dstr(F.col("l_quantity"), 2).alias("sum_qty"),
-            _dstr(F.col("l_extendedprice"), 2).alias("sum_base_price"),
+            _dstr("l_quantity", 2).alias("sum_qty"),
+            _dstr("l_extendedprice", 2).alias("sum_base_price"),
             _dstr(disc, 4).alias("sum_disc_price"),
             _dstr(charge, 6).alias("sum_charge"),
-            F.round(_dsum_dbl(F.col("l_quantity"), 2) / cnt, 6)
+            F.round(_dsum_dbl("l_quantity", 2) / cnt, 6)
             .alias("avg_qty"),
-            F.round(_dsum_dbl(F.col("l_extendedprice"), 2) / cnt, 6)
+            F.round(_dsum_dbl("l_extendedprice", 2) / cnt, 6)
             .alias("avg_price"),
-            F.round(_dsum_dbl(F.col("l_discount"), 2) / cnt, 6)
+            F.round(_dsum_dbl("l_discount", 2) / cnt, 6)
             .alias("avg_disc"),
             cnt.alias("count_order")))
 
@@ -153,7 +187,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 14: fan the lineitem side out by the JOIN key — the same
     # exchange the orderkey join needs anyway, so on the local
     # single-split corpus this parallelizes the scan+join at the cost
-    # of zero extra shuffles at scale (revenue folds _dsum decimals —
+    # of zero extra shuffles at scale (revenue folds _dsum limbs —
     # hash-safe at any core count). Measured 2.89 -> 1.49 s at sf0.1.
     li = scaled_repartition(
         load_table(spark, sf_dir, "lineitem")
@@ -174,10 +208,10 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def revenue_agg_exprs() -> list:
     """The revenue rollup shared by revenue_by_nation and its salted /
-    bucketed twins: exact decimal summation (_dsum) so all three
+    bucketed twins: exact fixed-point summation (_dsum) so all three
     partitionings hash-match the one oracle at every scale."""
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return [_dstr(disc, 4).alias("revenue"),
+    return [_dstr("l_extendedprice * (1 - l_discount)", 4)
+            .alias("revenue"),
             F.count("*").alias("n_items"),
             F.countDistinct("o_orderkey").alias("n_orders")]
 

@@ -124,6 +124,10 @@ class SessionCache:
         with self._lock:
             return key in self._d
 
+    def __len__(self) -> int:
+        with self._lock:
+            return len(self._d)
+
     def put(self, key, value):
         with self._lock:
             self._d[key] = value

@@ -101,6 +101,16 @@ def test_relationship_empty_side_yields_zero_row(spark, sf_dir):
     assert r.distinct_source == 0 and r.common_values == 0
 
 
+def test_relationship_rejects_types_that_do_not_widen(spark, sf_dir):
+    """A spec pairing a string column with an integer one raises while
+    the plan is built; it is never compared through a silent cast."""
+    from gcp_datalake_utils_spark.operators import datatest
+    with pytest.raises(TypeError, match="do not widen"):
+        datatest.test_relationship(
+            spark, sf_dir, "customer", "c_mktsegment", "nation",
+            "n_nationkey", "STRING", "INTEGER")
+
+
 def test_events_queries_utc_under_non_utc_host(spark, sf_dir):
     """load_table must pin the session timezone to UTC: a host session
     configured for another zone would otherwise shift every rendered

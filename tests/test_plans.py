@@ -405,3 +405,66 @@ def test_pmi_gram_kernel_shape(spark, sf_dir):
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final  # one vocab computation, not two
+
+
+def _plan_nodes(df) -> list:
+    """Every node of the physical plan (AQE's initial plan in place of
+    its AdaptiveSparkPlan wrapper), parents before children."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.initialPlan()
+        out.append(node)
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+def _partial_sum_buffer_types(df) -> list[str]:
+    types = []
+    for node in _plan_nodes(df):
+        if node.nodeName() != "HashAggregate":
+            continue
+        aggs = node.aggregateExpressions()
+        for i in range(aggs.size()):
+            agg = aggs.apply(i)
+            if (agg.mode().toString() == "Partial"
+                    and agg.aggregateFunction().prettyName() == "sum"):
+                buf = agg.aggregateFunction().aggBufferAttributes()
+                types += [buf.apply(j).dataType().typeName()
+                          for j in range(buf.size())]
+    return types
+
+
+def _exchanges(df) -> dict[str, int]:
+    """Exchanges by kind: BroadcastExchange, or a shuffle by origin —
+    ENSURE_REQUIREMENTS (a join or grouping needs it) or
+    REPARTITION_BY_NUM (the scaled_repartition fan-out, present only
+    when the scan has fewer splits than cores)."""
+    out: dict[str, int] = {}
+    for node in _plan_nodes(df):
+        kind = node.nodeName()
+        if kind == "Exchange":
+            kind = node.shuffleOrigin().toString()
+        elif kind != "BroadcastExchange":
+            continue
+        out[kind] = out.get(kind, 0) + 1
+    return out
+
+
+def test_exact_sums_run_on_long_buffers(spark, sf_dir):
+    """pricing_summary and revenue_by_nation sum through the fixed-point
+    kernel (payload._dsum): every partial sum buffer is a BIGINT, never
+    a per-row DECIMAL accumulator, and the exchanges are the ones the
+    decimal-buffer plans had."""
+    for fn, want in ((payload.pricing_summary,
+                      {"ENSURE_REQUIREMENTS": 1}),
+                     (payload.revenue_by_nation,
+                      {"ENSURE_REQUIREMENTS": 1, "BroadcastExchange": 4})):
+        df = fn(spark, sf_dir)
+        types = _partial_sum_buffer_types(df)
+        assert types and set(types) == {"long"}, (fn.__name__, types)
+        got = _exchanges(df)
+        assert got.pop("REPARTITION_BY_NUM", 0) <= 1, fn.__name__
+        assert got == want, (fn.__name__, got)

@@ -45,3 +45,16 @@ def test_semdedup_cache_is_eager():
     from gcp_datalake_utils_spark.llm import semdedup
     from gcp_datalake_utils_spark.session import SessionCache
     assert isinstance(semdedup._SEM_CACHE, SessionCache)
+
+
+def test_result_memos_are_session_caches():
+    """The data-test and detection memos are bounded, locked caches,
+    and len() (read by the benchmark's memo probe) counts entries."""
+    from gcp_datalake_utils_spark.operators import datatest, detection
+    from gcp_datalake_utils_spark.session import SessionCache
+    for memo in (datatest._REPORT_CACHE, detection._DETECT_CACHE):
+        assert isinstance(memo, SessionCache)
+    c = SessionCache(maxsize=2)
+    for k in "abc":
+        c.put(k, k)
+    assert len(c) == 2 and "a" not in c

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
@@ -72,7 +73,10 @@ def main() -> int:
         else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
 
-    sys.path.insert(0, "/root/repo")
+    # the checkout this script belongs to, so a parent copy beside the
+    # change checks its own code
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     # Deliberately a VANILLA session (not our session factory): the
     # driver's harness builds its own SparkSession, so any conf the engine
