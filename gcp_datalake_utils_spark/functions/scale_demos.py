@@ -24,7 +24,7 @@ from gcp_datalake_utils_spark.functions.skew import (
 from gcp_datalake_utils_spark.operators import payload
 from gcp_datalake_utils_spark.sources import load_events, load_table
 from gcp_datalake_utils_spark.sources.bucketing import write_bucketed
-from gcp_datalake_utils_spark.session import session_key
+from gcp_datalake_utils_spark.session import SessionCache, session_key
 
 
 def revenue_by_nation_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,7 +72,8 @@ FROM events
 GROUP BY event_type
 """
 
-_BUCKETED: dict[tuple, bool] = {}
+# layout memo: one bucketed write per (session, sf_dir)
+_BUCKETED = SessionCache()
 
 
 def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> None:
@@ -84,23 +85,23 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> None:
     sorted buckets let a merge join read both sides in key order — no
     per-query Sort under the SMJ (at 100 TB the sort, like the
     shuffle, belongs in the write-time layout, not in every query)."""
-    key = (session_key(spark), sf_dir)
-    if key in _BUCKETED:
-        return
-    from gcp_datalake_utils_spark.sources.scratch import pid_scratch
-    loc = pid_scratch("/tmp/spark_graft_bucketed", sf_dir)
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity",
-                "l_extendedprice", "l_discount"),
-        "bk_lineitem", "l_orderkey", buckets=32,
-        sort_cols=["l_orderkey"], path=loc)
-    write_bucketed(
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey"),
-        "bk_orders", "o_orderkey", buckets=32,
-        sort_cols=["o_orderkey"], path=loc)
-    _BUCKETED[key] = True
+    def _build() -> str:
+        from gcp_datalake_utils_spark.sources.scratch import pid_scratch
+        loc = pid_scratch("/tmp/spark_graft_bucketed", sf_dir)
+        write_bucketed(
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_linenumber", "l_quantity",
+                    "l_extendedprice", "l_discount"),
+            "bk_lineitem", "l_orderkey", buckets=32,
+            sort_cols=["l_orderkey"], path=loc)
+        write_bucketed(
+            load_table(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_custkey"),
+            "bk_orders", "o_orderkey", buckets=32,
+            sort_cols=["o_orderkey"], path=loc)
+        return loc
+
+    _BUCKETED.get_or_build((session_key(spark), sf_dir), _build)
 
 
 def revenue_by_nation_bucketed(spark: SparkSession,

@@ -13,9 +13,9 @@ Spark-first composition of three existing oracled primitives:
   broadcast-seeded, no shuffle beyond one row per vector); its
   ``cosine`` column IS the centroid-similarity the keep rule ranks on,
   so no second scoring pass is needed;
-- within-cluster pair generation reuses the 64-plane banded candidate
-  machinery (:func:`llm.similarity._cand64_from`) with the CLUSTER as
-  the banding label — candidates are an equi-join on
+- within-cluster pair generation is the shared banded candidate join
+  (:func:`llm.similarity._banded_candidates` at 8 bands of 8 bits)
+  with the CLUSTER as the banding label — candidates are an equi-join on
   (cluster, band, key), never a per-cluster cross join, so the stage
   scales exactly like the near-dup family (bounded block mass);
 - verification is the shared label-cogrouped Arrow kernel at
@@ -85,8 +85,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semantic_dedup_from(e: DataFrame) -> DataFrame:
     assign = sim._kmeans_assign_from(e).localCheckpoint()
     ec = _cluster_labeled(e, assign)
-    pairs = sim._verify_pairs_arrow(sim._cand64_from(ec), ec,
-                                    SEMDEDUP_EPS)
+    cand = sim._banded_candidates(ec, sim.ND64_BITS, sim.ND64_BANDS)
+    pairs = sim._verify_pairs_arrow(cand, ec, SEMDEDUP_EPS)
     groups = _eps_groups(pairs)
     w = Window.partitionBy("group_id").orderBy(
         F.asc("centroid_cosine"), F.asc("vec_id"))
@@ -112,38 +112,10 @@ ec AS (
          a.cosine AS centroid_cosine
   FROM embeddings e JOIN assign a USING (vec_id)
 ),
-sig AS (
-  SELECT vec_id, label,
-         {sim._bucket32_duck('embedding', 32)} AS b_hi,
-         {sim._bucket32_duck('embedding', 0)} AS b_lo
-  FROM ec
-),
-bands AS (
-  SELECT vec_id, label, j AS band,
-         CASE WHEN j < 4
-              THEN (b_lo >> ({sim.ND64_BITS} * j)) & {sim._ND64_MASK}
-              ELSE (b_hi >> ({sim.ND64_BITS} * (j - 4)))
-                   & {sim._ND64_MASK}
-         END AS key
-  FROM sig, unnest(range({sim.ND64_BANDS})) AS t(j)
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM bands a
-  JOIN bands b ON a.label = b.label AND a.band = b.band
-              AND a.key = b.key AND a.vec_id < b.vec_id
-),
-pairs AS (
-  SELECT c.vec_a, c.vec_b
-  FROM cand c
-  JOIN ec ea ON ea.vec_id = c.vec_a
-  JOIN ec eb ON eb.vec_id = c.vec_b
-  WHERE round(({sim._DOT_SQL.format(a='ea.embedding',
-                                    b='eb.embedding')})
-              / (({sim._NORM_SQL.format(a='ea.embedding')})
-                 * ({sim._NORM_SQL.format(a='eb.embedding')})), 6)
-        >= {SEMDEDUP_EPS}
-)"""
+bands AS ({sim._band_rows_sql(
+    'ec', sim._plan_sql(sim.ND64_BITS, sim.ND64_BANDS), sim.ND64_BANDS)}),
+{sim._CAND_SQL},
+pairs AS ({sim._rescore_sql('cand', 'ec', SEMDEDUP_EPS)})"""
 
 SEMANTIC_DEDUP_ORACLE = f"""
 WITH RECURSIVE {_SEM_PAIRS_SQL},

@@ -25,7 +25,7 @@ or impute AT THE LOADER, before any operator in this module.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gcp_datalake_utils_spark.session import (SessionCache,
@@ -39,6 +39,14 @@ _DOT_SQL = ("list_sum(list_transform(list_zip({a}, {b}), "
             "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))")
 _NORM_SQL = ("sqrt(list_sum(list_transform({a}, "
              "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))")
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """The oracle cosine of two array expressions, rounded to 6 — the
+    repo-wide cross-engine contract: dot / (norm_a * norm_b)."""
+    return (f"round(({_DOT_SQL.format(a=a, b=b)}) / "
+            f"(({_NORM_SQL.format(a=a)}) * ({_NORM_SQL.format(a=b)})), 6)")
+
 
 # int8-prefilter SQL primitives (defined up here because every
 # near-dup oracle embeds them since the round-13 default flip; the
@@ -63,15 +71,13 @@ FROM (
 """
 
 
-_Q8_CODES_SQL = _q8_codes_sql()
-
 _Q8_NORM_SQL = ("sqrt(list_sum(list_transform({q}, "
                 "x -> CAST(x AS BIGINT) * x)))")
 _Q8_DOT_SQL = ("list_sum(list_transform(list_zip({a}, {b}), "
                "p -> CAST(p[1] AS BIGINT) * p[2]))")
 
 # the prefilter's admission predicate over code tables qa/qb — the
-# SQL twin of _prefilter_pairs_quantized's kernel
+# SQL twin of quantized_verify's int8 stage
 _Q8_PRE_COND = (
     "(" + _Q8_NORM_SQL.format(q="qa.q8") + ") > 0\n    AND ("
     + _Q8_NORM_SQL.format(q="qb.q8") + ") > 0\n    AND round(("
@@ -128,18 +134,11 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _topk_ranked(scored)
 
 
-def _cosine_sql() -> str:
-    dot = _DOT_SQL.format(a="e.embedding", b="q.embedding")
-    na = _NORM_SQL.format(a="e.embedding")
-    nb = _NORM_SQL.format(a="q.embedding")
-    return f"round(({dot}) / (({na}) * ({nb})), 6)"
-
-
 COSINE_TOPK_ORACLE = f"""
 WITH q AS (SELECT embedding, label AS q_label FROM embeddings
            WHERE vec_id = {QUERY_VEC_ID}),
 scored AS (
-  SELECT e.vec_id, e.label, {_cosine_sql()} AS cosine
+  SELECT e.vec_id, e.label, {_cos_sql('e.embedding', 'q.embedding')} AS cosine
   FROM embeddings e, q
   WHERE e.vec_id <> {QUERY_VEC_ID}
 )
@@ -165,7 +164,7 @@ IVF_TOPK_ORACLE = f"""
 WITH q AS (SELECT embedding, label AS q_label FROM embeddings
            WHERE vec_id = {QUERY_VEC_ID}),
 scored AS (
-  SELECT e.vec_id, e.label, {_cosine_sql()} AS cosine
+  SELECT e.vec_id, e.label, {_cos_sql('e.embedding', 'q.embedding')} AS cosine
   FROM embeddings e, q
   WHERE e.vec_id <> {QUERY_VEC_ID} AND e.label = q.q_label
 )
@@ -186,8 +185,7 @@ WHERE rank <= {TOP_K}
 # At 100 TB the signature table is written partitioned by bucket and the
 # probe join prunes to nprobe/2^H of the corpus. Plane signs use pure
 # integer arithmetic so both engines derive bit-identical planes; the
-# projection is rounded to 6 places before the sign so float noise at
-# the boundary cannot flip a bit in one engine only.
+# sign test's rounding contract is written once, on `_rp_signature`.
 
 N_PLANES = 16
 N_DIMS = 64
@@ -213,22 +211,90 @@ def _plane_sign_sql_expr(j_expr: str, d_expr: str,
             f" % {_PM}) % 2 = 0 THEN 1.0 ELSE -1.0 END")
 
 
-def _plane_sign_sql(j: int, d: str) -> str:
-    return _plane_sign_sql_expr(str(j), d)
-
-
 def _plane_matrix(n_planes: int, dims: int = N_DIMS):
-    """The same ±1 plane matrix for the numpy (Arrow-kernel) twins —
-    bit-identical to the SQL hash above (pytest-asserted). ``dims``
-    generalizes the family to non-64-dim corpora (the 768-dim
-    crossover fixture); at dims=64 the matrix is bit-identical to the
-    historical one (k = j*dims + d degenerates to j*64 + d). Integer-
-    hash safety holds to k ~ 3.5e5 (k^2 * PA < 2^63)."""
+    """The same ±1 plane matrix for the numpy kernel — bit-identical
+    to the SQL hash above (pytest-asserted). ``dims`` generalizes the
+    family to non-64-dim corpora (the 768-dim crossover fixture); at
+    dims=64 the matrix is bit-identical to the historical one
+    (k = j*dims + d degenerates to j*64 + d). Integer-hash safety
+    holds to k ~ 3.5e5 (k^2 * PA < 2^63)."""
     import numpy as np
     j = np.arange(n_planes, dtype=np.int64)[:, None]
     d = np.arange(dims, dtype=np.int64)[None, :]
     k = j * dims + d
     return np.where(((k * k * _PA + k * _PB) % _PM) % 2 == 0, 1.0, -1.0)
+
+
+def _rp_signature(e: DataFrame, bits: int, bands: int,
+                  dims: int = N_DIMS) -> DataFrame:
+    """``e``'s columns plus ``keys``: ``bands`` random-projection keys
+    of ``bits`` bits each. Key j packs the signs of planes
+    [j*bits, (j+1)*bits), plane j*bits + i at bit i, from one numpy
+    GEMV per Arrow batch over ``_plane_matrix(bits * bands, dims)`` —
+    the one place the package runs the plane projection outside the
+    two JVM reference forms. Every column of ``e`` (which must hold
+    ``embedding``) passes through, so the caller's select decides what
+    rides along.
+
+    Shapes in use: the 16-bit bucket is (16, 1), the ANN probe bucket
+    (its low RP_PROBE_BITS bits) is (RP_PROBE_BITS, 1), the 64-plane
+    halves are (32, 2) with b_lo = keys[0] and b_hi = keys[1], and the
+    near-dup bands are (4, 4), (8, 8) or the auto plan.
+
+    Boundary contract: the projection is rounded to 6 places BEFORE
+    the sign test, the tolerance that reconciles numpy's pairwise/SIMD
+    summation with the sequential JVM folds (`_bucket_spark`,
+    `_bucket64_exploded`) and DuckDB's list_sum (`_rp_key_sql`). That
+    equality is corpus-verified (pytest bit-equality against both JVM
+    forms, hash-matched oracles at sf0.01–sf1), not structural: a
+    projection within float noise of a ±5e-7 boundary could flip a
+    bit in one engine only. If an oracle mismatch appears at a NEW
+    scale on a bucketized query, suspect this boundary first and
+    compare against `_bucket64_exploded` before anything else."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import (ArrayType, LongType, StructField,
+                                   StructType)
+
+    planes = _plane_matrix(bits * bands, dims)
+    w = 1 << np.arange(bits, dtype=np.int64)
+
+    def sign_keys(batches):
+        # mapInArrow, not mapInPandas: the pass-through columns go
+        # back untouched and the vectors are read as one flat buffer;
+        # a pandas round trip of `embedding` doubles the kernel's cost
+        # (200k vectors, 12 x 8 bands: 1.2 s vs 3.2-3.9 s)
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            m = (batch.column("embedding").flatten()
+                 .to_numpy(zero_copy_only=False)
+                 .reshape(n, dims).astype(np.float64))
+            s = (np.round(m @ planes.T, 6) >= 0).astype(np.int64)
+            keys = (s.reshape(n, bands, bits) * w).sum(axis=2)
+            yield batch.append_column("keys", pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n * bands + 1, bands,
+                                   dtype=np.int32)),
+                pa.array(keys.ravel())))
+
+    return e.mapInArrow(sign_keys, StructType(
+        e.schema.fields
+        + [StructField("keys", ArrayType(LongType(), False), False)]))
+
+
+def _rp_key_sql(j: int | str, bits: int | str, dims: int = N_DIMS) -> str:
+    """DuckDB twin of ``_rp_signature``'s key j over the row's
+    ``embedding``: a BIGINT packing the signs of planes
+    [j*bits, (j+1)*bits). ``j`` and ``bits`` are integers or SQL
+    expressions (a band index, the auto plan's column)."""
+    sign = _plane_sign_sql_expr(f"({j}) * ({bits}) + i", "d", dims)
+    return f"""CAST(list_sum(list_transform(range({bits}), i ->
+           CASE WHEN round(list_sum(list_transform(range({dims}), d ->
+                  CAST(embedding[d + 1] AS DOUBLE) * ({sign}))), 6)
+                >= 0
+           THEN CAST(1 AS BIGINT) << i ELSE CAST(0 AS BIGINT) END))
+         AS BIGINT)"""
 
 
 def _bucket_spark(col: str):
@@ -245,61 +311,6 @@ CAST(aggregate(transform(sequence(0, {N_PLANES - 1}), j ->
   THEN shiftleft(1, j) ELSE 0 END), 0, (acc, x) -> acc + x) AS INT)""")
 
 
-def _bucket_duck(col: str) -> str:
-    bits = []
-    for j in range(N_PLANES):
-        proj = (f"round(list_sum(list_transform(range({N_DIMS}), d -> "
-                f"CAST({col}[d + 1] AS DOUBLE)"
-                f" * ({_plane_sign_sql(j, 'd')}))), 6)")
-        bits.append(f"CASE WHEN {proj} >= 0 THEN {1 << j} ELSE 0 END")
-    return "CAST(" + " + ".join(bits) + " AS INT)"
-
-
-def _with_bucket64_arrow(e: DataFrame) -> DataFrame:
-    """(vec_id, label, embedding, b_hi, b_lo): the 64-plane signature
-    halves via one numpy GEMV per Arrow batch — replaces the
-    posexplode + 64-codegen-aggregate build (`_bucket64_exploded`)
-    on the query path; the exploded form remains the documented
-    write-time backfill shape. Same integer-derived planes, same
-    round-6-before-sign contract (pytest asserts equality).
-
-    Determinism caveat: the round-6-before-sign test relies on numpy's
-    pairwise/SIMD summation landing in the same ROUNDED value as the
-    sequential JVM/DuckDB folds. That equality is corpus-verified
-    (pytest bit-equality + hash-matched oracles at sf0.01–sf1), not
-    structural — a projection within float noise of a ±5e-7 boundary
-    could flip a signature bit in one engine only. If an oracle
-    mismatch appears at a NEW scale on a bucketized query, suspect
-    this boundary first (compare `_bucket64_exploded` output before
-    anything else)."""
-    import numpy as np
-    import pandas as pd
-
-    planes = _plane_matrix(64)
-    w_lo = (1 << np.arange(32, dtype=np.int64))
-    w_hi = (1 << np.arange(32, dtype=np.int64))
-
-    def bucketize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            bits = (np.round(m @ planes.T, 6) >= 0).astype(np.int64)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "label": pdf["label"].astype("int32"),
-                "embedding": pdf["embedding"],
-                "b_hi": (bits[:, 32:] * w_hi).sum(axis=1),
-                "b_lo": (bits[:, :32] * w_lo).sum(axis=1),
-            })
-
-    return (e.select("vec_id", "label", "embedding")
-            .mapInPandas(bucketize,
-                         "vec_id long, label int, "
-                         "embedding array<float>, "
-                         "b_hi long, b_lo long"))
-
-
 def _verify_pairs_arrow(cand: DataFrame, e: DataFrame,
                         threshold: float) -> DataFrame:
     """Exact-cosine verification of (vec_a, vec_b, label) candidate
@@ -314,10 +325,13 @@ def _verify_pairs_arrow(cand: DataFrame, e: DataFrame,
 
     The cosine is computed with the oracle's exact expression shape,
     dot / (norm_a * norm_b), rounded to 6 before the threshold — the
-    repo-wide cross-engine contract. Memory note for the 100 TB
-    deployment: one label's candidate set must fit a task (chunked
-    inside the kernel); a label whose candidates outgrow that is
-    salted into band-disjoint sub-verifies upstream."""
+    repo-wide cross-engine contract. A zero-norm vector gives a NaN
+    cosine, which no threshold admits. ``e``'s ``embedding`` may be
+    float or integer: the int8 codes of ``quantized_verify`` run
+    through here too. Memory note for the 100 TB deployment: one
+    label's candidate set must fit a task (chunked inside the kernel);
+    a label whose candidates outgrow that is salted into band-disjoint
+    sub-verifies upstream."""
     import numpy as np
     import pandas as pd
 
@@ -339,8 +353,9 @@ def _verify_pairs_arrow(cand: DataFrame, e: DataFrame,
         for lo in range(0, len(cpdf), 500_000):
             ia = ia_all[lo:lo + 500_000]
             ib = ib_all[lo:lo + 500_000]
-            cos = np.round((m[ia] * m[ib]).sum(axis=1)
-                           / (norm[ia] * norm[ib]), 6)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = np.round((m[ia] * m[ib]).sum(axis=1)
+                               / (norm[ia] * norm[ib]), 6)
             keep = cos >= threshold
             out.append(pd.DataFrame({
                 "vec_a": cpdf["vec_a"].to_numpy()[lo:lo + 500_000][keep]
@@ -360,46 +375,6 @@ def _verify_pairs_arrow(cand: DataFrame, e: DataFrame,
                 "vec_a long, vec_b long, label int, cosine double"))
 
 
-def _with_bucket16_arrow(e: DataFrame) -> DataFrame:
-    """(vec_id, label, embedding, bucket): the 16-plane signature
-    computed as ONE numpy matrix product per Arrow batch instead of
-    the nested JVM HOF fold (16 planes x 64 dims of interpreted
-    expression eval per row — measured 7.2 s for 500k vectors at sf1;
-    this path does the identical math in ~1 s).
-
-    Bit-compatibility contract: the plane matrix comes from the same
-    integer hash as ``_bucket_spark``/``_bucket_duck``, and the
-    projection is rounded to 6 places BEFORE the sign test — the same
-    tolerance that already reconciles the JVM fold with DuckDB's
-    list_sum, so all three implementations agree on every bucket
-    (pytest asserts JVM == Arrow on the driver corpus)."""
-    import numpy as np
-    import pandas as pd
-
-    planes = _plane_matrix(N_PLANES)
-    weights = (1 << np.arange(N_PLANES)).astype(np.int64)
-
-    def bucketize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            proj = np.round(m @ planes.T, 6)
-            bucket = ((proj >= 0).astype(np.int64) * weights) \
-                .sum(axis=1).astype(np.int32)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "label": pdf["label"].astype("int32"),
-                "embedding": pdf["embedding"],
-                "bucket": bucket,
-            })
-
-    return (e.select("vec_id", "label", "embedding")
-            .mapInPandas(bucketize,
-                         "vec_id long, label int, "
-                         "embedding array<float>, bucket int"))
-
-
 def rp_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[Q] bucket histogram of the random-hyperplane signatures — the
     load-balance view a partition-by-bucket layout would exhibit."""
@@ -410,14 +385,38 @@ def rp_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RP_LSH_BUCKETS_ORACLE = f"""
-SELECT {_bucket_duck('embedding')} AS bucket, count(*) AS n_vecs
+SELECT CAST({_rp_key_sql(0, N_PLANES)} AS INTEGER) AS bucket,
+       count(*) AS n_vecs
 FROM embeddings
 GROUP BY 1
 """
 
 
 RP_PROBE_BITS = 8  # ANN probe bucket = low 8 bits of the signature
-_RP_PROBE_MASK = (1 << RP_PROBE_BITS) - 1
+
+
+def _probe_buckets(e: DataFrame) -> DataFrame:
+    """``e``'s columns plus ``bucket``: the RP_PROBE_BITS-bit ANN probe
+    bucket, i.e. the low bits of the 16-plane signature."""
+    return (_rp_signature(e, RP_PROBE_BITS, 1)
+            .withColumn("bucket", F.col("keys")[0]).drop("keys"))
+
+
+def _probe_keys(col: str) -> Column:
+    """The bucket itself plus its RP_PROBE_BITS hamming-1 neighbours —
+    the multi-probe key set, exploded per query row."""
+    return F.explode(F.array(F.col(col), *[
+        F.col(col).bitwiseXOR(F.lit(1 << j))
+        for j in range(RP_PROBE_BITS)]))
+
+
+_PROBE_SIG_SQL = f"""sig AS (
+  SELECT vec_id, label, embedding,
+         {_rp_key_sql(0, RP_PROBE_BITS)} AS bucket
+  FROM embeddings
+)"""
+_PROBE_KEYS_SQL = (f"unnest([bucket] || list_transform("
+                   f"range({RP_PROBE_BITS}), j -> xor(bucket, 1 << j)))")
 
 
 def rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,8 +425,8 @@ def rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     any hamming-1 probe of it (9 probe keys exploded from the
     broadcast query row -> equi-join on bucket, partition-prunable at
     scale); exact cosine + TakeOrdered top-k over the candidate set
-    only. Signatures come from the Arrow bucketizer (same buckets as
-    the JVM fold, ~7x cheaper — see ``_with_bucket16_arrow``).
+    only. Signatures come from the Arrow kernel (same bits as the JVM
+    fold, ~7x cheaper — see ``_rp_signature``).
 
     Probe width is a density knob DECOUPLED from the signature width
     (r7): with the fixed plane-hash (see ``_plane_sign_sql_expr``)
@@ -436,17 +435,11 @@ def rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-bit probe buckets keep ~n/256 vectors per bucket at every test
     SF, and at larger corpora the knob widens (more bits) rather than
     the plan changing shape."""
-    e = (_with_bucket16_arrow(load_table(spark, sf_dir, "embeddings"))
-         .withColumn("bucket",
-                     F.col("bucket").bitwiseAND(F.lit(_RP_PROBE_MASK))))
-    probes = [F.col("q_bucket")] + [
-        F.col("q_bucket").bitwiseXOR(F.lit(1 << j))
-        for j in range(RP_PROBE_BITS)]
+    e = _probe_buckets(load_table(spark, sf_dir, "embeddings")
+                       .select("vec_id", "label", "embedding"))
     q = (e.where(F.col("vec_id") == QUERY_VEC_ID)
          .select(F.col("embedding").alias("q_embedding"),
-                 F.col("bucket").alias("q_bucket"))
-         .select("q_embedding",
-                 F.explode(F.array(*probes)).alias("bucket")))
+                 _probe_keys("bucket").alias("bucket")))
     scored = (e.where(F.col("vec_id") != QUERY_VEC_ID)
               .join(F.broadcast(q), "bucket")
               .select("vec_id", "label", _cosine_col().alias("cosine")))
@@ -454,18 +447,14 @@ def rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 RP_LSH_TOPK_ORACLE = f"""
-WITH sig AS (
-  SELECT vec_id, label, embedding,
-         {_bucket_duck('embedding')} & {_RP_PROBE_MASK} AS bucket
-  FROM embeddings
-),
+WITH {_PROBE_SIG_SQL},
 q AS (
-  SELECT embedding, unnest([bucket] || list_transform(
-           range({RP_PROBE_BITS}), j -> xor(bucket, 1 << j))) AS bucket
+  SELECT embedding, {_PROBE_KEYS_SQL} AS bucket
   FROM sig WHERE vec_id = {QUERY_VEC_ID}
 ),
 scored AS (
-  SELECT e.vec_id, e.label, {_cosine_sql()} AS cosine
+  SELECT e.vec_id, e.label, {_cos_sql('e.embedding', 'q.embedding')}
+           AS cosine
   FROM sig e JOIN q ON e.bucket = q.bucket
   WHERE e.vec_id <> {QUERY_VEC_ID}
 )
@@ -514,9 +503,7 @@ WITH seeds AS (
 ),
 scored AS (
   SELECT e.vec_id, s.cluster,
-         round(({_DOT_SQL.format(a='e.embedding', b='s.seed')})
-               / (({_NORM_SQL.format(a='e.embedding')})
-                  * ({_NORM_SQL.format(a='s.seed')})), 6) AS cosine
+         {_cos_sql('e.embedding', 's.seed')} AS cosine
   FROM embeddings e, seeds s
 )
 SELECT vec_id, CAST(cluster AS INTEGER) AS cluster, cosine
@@ -536,9 +523,85 @@ QUALIFY row_number() OVER (PARTITION BY vec_id
 # well-defined operator at every SF — the standard LSH recall trade-off
 # is part of the operator contract (same design as the MinHash-banded
 # dedup_near_pairs).
+#
+# Per-label-group sharding (round 12, the documented >= 1e9-vector
+# lever). Past bits = 24 the plane budget binds and keys cannot widen,
+# so a single candidate join's in-flight state (band-key shuffle +
+# per-(label, band, key) block fan-out) grows with n with no remaining
+# knob. But candidate pairs NEVER cross labels — the join already keys
+# on label — so restricting both sides to one GROUP of labels
+# (shard = label % n_shards, a pure function of the join key) is
+# LOSSLESS: the union over shards is exactly the unsharded pair set,
+# and block mass per (label, band, key) within a shard equals the
+# unsharded mass for those labels. In-DAG, the shard rides the
+# exchange as the leading join key, so a cluster can range-place whole
+# label groups (and AQE sees the skew grain). Sequentially, shards run
+# as SEPARATE JOBS, each parquet-committed before the next starts, so
+# peak shuffle/heap is ONE SHARD'S — what actually failed locally at
+# 16M (kernel-OOM at 64g with 32 workers, r10 BASELINE note); a lost
+# executor re-runs one shard, not the whole join (the fuzzydedup
+# durable-stage pattern).
 N_BANDS = 4
 BAND_BITS = 4
-_BAND_MASK = (1 << BAND_BITS) - 1
+
+
+def _band_rows(e: DataFrame, bits: int, bands: int,
+               dims: int = N_DIMS) -> DataFrame:
+    """(vec_id, label, band, key): one row per (vector, band) of a
+    ``bands`` x ``bits``-bit plan."""
+    return (_rp_signature(e.select("vec_id", "label", "embedding"),
+                          bits, bands, dims)
+            .select("vec_id", "label",
+                    F.posexplode("keys").alias("band", "key")))
+
+
+def _banded_candidates(e: DataFrame, bits: int, bands: int,
+                       dims: int = N_DIMS, n_shards: int | None = None,
+                       scratch_dir: str | None = None) -> DataFrame:
+    """(vec_a, vec_b, label) candidate pairs: two vectors of one label
+    that share the key of at least one of ``bands`` bands of ``bits``
+    bits — the one candidate join behind every banded near-dup row,
+    semantic dedup and the band stress tool. Parameterized so tests
+    can drive it at forced past-clamp plans without a
+    multi-million-row corpus.
+
+    ``n_shards`` adds shard = label % n_shards as the leading equi-join
+    key (see the sharding comment above): same pairs, per label group.
+    With ``scratch_dir`` the band rows become a parquet store
+    partitioned by shard (each shard job prunes to its own files; a
+    localCheckpoint of the 100M+ band rows starved execution memory at
+    16M vectors) and each shard's join is its own parquet-committed
+    job."""
+    sig = _band_rows(e, bits, bands, dims)
+    on = ["label", "band", "key"]
+    if n_shards:
+        sig = sig.withColumn("shard", F.pmod(F.col("label"),
+                                             F.lit(n_shards)).cast("int"))
+        on = ["shard"] + on
+
+    def pairs(s: DataFrame) -> DataFrame:
+        a = s.select(F.col("vec_id").alias("vec_a"), *on)
+        b = s.select(F.col("vec_id").alias("vec_b"), *on)
+        return (a.join(b, on)
+                .where(F.col("vec_a") < F.col("vec_b"))
+                .select("vec_a", "vec_b", "label")
+                .distinct())
+
+    if scratch_dir is None:
+        # checkpointed before the a/b self-join: both sides read the
+        # same kernel subtree and Spark has no DataFrame-level CSE, so
+        # without it the GEMV runs twice (the dedup_groups lesson)
+        return pairs(sig.localCheckpoint())
+    spark = e.sparkSession
+    sig.write.mode("overwrite").partitionBy("shard") \
+        .parquet(f"{scratch_dir}/sig")
+    store = spark.read.parquet(f"{scratch_dir}/sig")
+    for g in range(n_shards):
+        (pairs(store.where(F.col("shard") == g))
+         .write.mode("overwrite")
+         .parquet(f"{scratch_dir}/shard={g}"))
+    return spark.read.parquet(
+        *[f"{scratch_dir}/shard={g}" for g in range(n_shards)])
 
 
 def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,54 +613,83 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     #2): the pair join keys on (label, band, band_key) — a hot label no
     longer implies O(cell^2) pairs, only same-band-key collisions meet.
     The band join ships only (vec_id, label, band, key) int rows, never
-    embeddings; candidates are distinct'd id-wise and the two embedding
-    fetch joins shuffle on vec_id.  Signature = one `_bucket_spark` pass
-    per row; band keys are bit-slices of it (Arrow bucketizer — same
-    buckets as the JVM fold, ~7x cheaper)."""
+    embeddings; candidates are distinct'd id-wise and verified by the
+    cogrouped float kernel. The 4 x 4-bit bands are the 16-plane
+    signature's bit-slices."""
     e = load_table(spark, sf_dir, "embeddings")
-    sig = (_with_bucket16_arrow(e)
-           .select("vec_id", "label", "bucket")
-           .select("vec_id", "label", F.explode(F.array(*[
-               F.struct(
-                   F.lit(j).alias("band"),
-                   F.shiftrightunsigned("bucket", BAND_BITS * j)
-                   .bitwiseAND(F.lit(_BAND_MASK)).alias("key"))
-               for j in range(N_BANDS)])).alias("bk"))
-           .select("vec_id", "label", "bk.band", "bk.key"))
-    a = sig.select(F.col("vec_id").alias("vec_a"), "label", "band", "key")
-    b = sig.select(F.col("vec_id").alias("vec_b"), "label", "band", "key")
-    cand = (a.join(b, ["label", "band", "key"])
-            .where(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b", "label")
-            .distinct())
-    return _verify_pairs_arrow(cand, e, 0.95)
+    return _verify_pairs_arrow(_banded_candidates(e, BAND_BITS, N_BANDS),
+                               e, 0.95)
 
 
-EMBEDDING_NEAR_DUP_ORACLE = f"""
-WITH sig AS (
-  SELECT vec_id, label, {_bucket_duck('embedding')} AS bucket
-  FROM embeddings
-),
-bands AS (
+# The oracle side of the banded candidate join: one band-row generator
+# over a (bits, n_bands) plan row, one candidate self-join, one rescore.
+
+
+def _plan_sql(bits: int, bands: int) -> str:
+    return f"SELECT {bits} AS bits, {bands} AS n_bands"
+
+
+def _band_rows_sql(src: str, plan: str, max_bands: int,
+                   dims: int = N_DIMS) -> str:
+    """(vec_id, label, band, key) rows of ``src`` under the one-row
+    (bits, n_bands) SELECT ``plan``; ``max_bands`` bounds n_bands."""
+    return f"""
   SELECT vec_id, label, j AS band,
-         (bucket >> ({BAND_BITS} * j)) & {_BAND_MASK} AS key
-  FROM sig, unnest(range({N_BANDS})) AS t(j)
-),
-cand AS (
+         {_rp_key_sql('j', 'p.bits', dims)} AS key
+  FROM {src}, ({plan}) p, unnest(range({max_bands})) AS t(j)
+  WHERE j < p.n_bands"""
+
+
+_CAND_SQL = """cand AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label
   FROM bands a
   JOIN bands b ON a.label = b.label AND a.band = b.band
               AND a.key = b.key AND a.vec_id < b.vec_id
+)"""
+
+
+def _rescore_sql(pairs: str, corpus: str, threshold: float) -> str:
+    """Exact-cosine verify of the (vec_a, vec_b, label) rows of
+    ``pairs`` against the vectors of ``corpus``."""
+    cos = _cos_sql("ea.embedding", "eb.embedding")
+    return f"""SELECT c.vec_a, c.vec_b, c.label, {cos} AS cosine
+FROM {pairs} c
+JOIN {corpus} ea ON ea.vec_id = c.vec_a
+JOIN {corpus} eb ON eb.vec_id = c.vec_b
+WHERE {cos} >= {threshold}"""
+
+
+_CORPUS_SQL = "SELECT vec_id, label, embedding FROM embeddings"
+
+
+def _near_dups_oracle(corpus: str, plan: str, max_bands: int,
+                      dims: int = N_DIMS) -> str:
+    """Oracle of ``quantized_verify(_banded_candidates(...), e)`` over
+    the corpus SELECT ``corpus``: banded candidates -> int8 prefilter
+    at ND_Q_PREFILTER -> exact rescore at 0.95, stage for stage. ``plan``
+    may read the corpus as ``e`` (the auto plan sizes itself from it)."""
+    return f"""
+WITH e AS ({corpus}),
+bands AS ({_band_rows_sql('e', plan, max_bands, dims)}),
+{_CAND_SQL},
+q AS ({_q8_codes_sql('e')}),
+pre AS (
+  SELECT c.vec_a, c.vec_b, c.label
+  FROM cand c
+  JOIN q qa ON qa.vec_id = c.vec_a
+  JOIN q qb ON qb.vec_id = c.vec_b
+  WHERE {_Q8_PRE_COND}
 )
-SELECT c.vec_a, c.vec_b, c.label, {{cos}} AS cosine
-FROM cand c
-JOIN embeddings ea ON ea.vec_id = c.vec_a
-JOIN embeddings eb ON eb.vec_id = c.vec_b
-WHERE {{cos}} >= 0.95
-""".format(cos=(
-    "round((" + _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
-    + ") / ((" + _NORM_SQL.format(a="ea.embedding") + ") * ("
-    + _NORM_SQL.format(a="eb.embedding") + ")), 6)"))
+{_rescore_sql('pre', 'e', 0.95)}
+"""
+
+
+EMBEDDING_NEAR_DUP_ORACLE = f"""
+WITH bands AS ({_band_rows_sql('embeddings', _plan_sql(BAND_BITS, N_BANDS),
+                               N_BANDS)}),
+{_CAND_SQL}
+{_rescore_sql('cand', 'embeddings', 0.95)}
+"""
 
 
 N_DIMS_CENTROID = 64
@@ -638,10 +730,7 @@ cent AS (
   GROUP BY label
 )
 SELECT e.vec_id, e.label,
-       round(({_DOT_SQL.format(a='e.embedding', b='cent.centroid')})
-             / (({_NORM_SQL.format(a='e.embedding')})
-                * ({_NORM_SQL.format(a='cent.centroid')})), 6)
-         AS cos_centroid
+       {_cos_sql('e.embedding', 'cent.centroid')} AS cos_centroid
 FROM embeddings e JOIN cent USING (label)
 """
 
@@ -710,9 +799,7 @@ def kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_oracle() -> str:
-    cos = ("round((" + _DOT_SQL.format(a="e.embedding", b="s.centroid")
-           + ") / ((" + _NORM_SQL.format(a="e.embedding") + ") * ("
-           + _NORM_SQL.format(a="s.centroid") + ")), 6)")
+    cos = _cos_sql("e.embedding", "s.centroid")
     ctes = [f"""c0 AS (
   SELECT CAST(vec_id AS INTEGER) AS cluster, embedding AS centroid
   FROM embeddings ORDER BY vec_id LIMIT {N_CLUSTERS})"""]
@@ -807,49 +894,9 @@ N_BATCH_QUERIES = 10
 BATCH_TOP_K = 5
 
 
-def batch_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] batched ANN: top-K neighbors for MANY query vectors in one
-    job — the production query pattern (a query batch arriving every
-    micro-batch / the all-pairs-lite "nearest catalog item" join).
-
-    Each of the N_BATCH_QUERIES query vectors explodes to its 17
-    multi-probe bucket keys; ONE equi-join on bucket matches all
-    queries against the corpus simultaneously (no per-query scan — the
-    classic batching win), then a per-query window keeps top-K. The
-    probe side is |queries| x 9 rows -> broadcast; the corpus side is
-    scanned once regardless of batch size. Signatures come from the
-    Arrow bucketizer (identical buckets, ~7x cheaper). Probes key on
-    the 8-bit density knob, not the raw signature — see
-    ``rp_lsh_topk``."""
-    base = load_table(spark, sf_dir, "embeddings")
-    e = (_with_bucket16_arrow(base)
-         .withColumn("bucket",
-                     F.col("bucket").bitwiseAND(F.lit(_RP_PROBE_MASK))))
-    probes = [F.col("q_bucket")] + [
-        F.col("q_bucket").bitwiseXOR(F.lit(1 << j))
-        for j in range(RP_PROBE_BITS)]
-    # round 14 (guide §4.2/§2.3): the probe side previously filtered
-    # AFTER the signature kernel, and mapInPandas is opaque to filter
-    # pushdown — the whole corpus ran through the bucketizer TWICE
-    # (once per join side). Bucketizing the filtered scan computes the
-    # identical per-row signatures on |queries| rows, so the corpus
-    # pays exactly one kernel pass.
-    q = (_with_bucket16_arrow(base.where(F.col("vec_id")
-                                         < N_BATCH_QUERIES))
-         .withColumn("bucket",
-                     F.col("bucket").bitwiseAND(F.lit(_RP_PROBE_MASK)))
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_embedding"),
-                 F.col("bucket").alias("q_bucket"))
-         .select("query_id", "q_embedding",
-                 F.explode(F.array(*probes)).alias("bucket"))
-         .dropDuplicates(["query_id", "bucket"]))
-    cos = F.round(
-        _dot(F.col("embedding"), F.col("q_embedding"))
-        / (_norm(F.col("embedding")) * _norm(F.col("q_embedding"))), 6)
-    scored = (e.join(F.broadcast(q), "bucket")
-              .where(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", "vec_id", "label", cos.alias("cosine")))
+def _batch_topk_ranked(scored: DataFrame) -> DataFrame:
+    """Per-query top-BATCH_TOP_K of (query_id, vec_id, label, cosine)
+    rows, ranked on the rounded cosine with a vec_id tie-break."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), "vec_id")
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -858,36 +905,64 @@ def batch_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("rank").cast("int").alias("rank")))
 
 
-BATCH_ANN_TOPK_ORACLE = f"""
-WITH sig AS (
-  SELECT vec_id, label, embedding,
-         {_bucket_duck('embedding')} & {_RP_PROBE_MASK} AS bucket
-  FROM embeddings
-),
-q AS (
-  SELECT DISTINCT vec_id AS query_id, embedding AS q_embedding, probe
-  FROM (
-    SELECT vec_id, embedding,
-           unnest([bucket] || list_transform(
-             range({RP_PROBE_BITS}), j -> xor(bucket, 1 << j))) AS probe
-    FROM sig WHERE vec_id < {N_BATCH_QUERIES}
-  )
-),
-scored AS (
-  SELECT q.query_id, e.vec_id, e.label,
-         round(({_DOT_SQL.format(a='e.embedding', b='q.q_embedding')})
-               / (({_NORM_SQL.format(a='e.embedding')})
-                  * ({_NORM_SQL.format(a='q.q_embedding')})), 6)
-           AS cosine
-  FROM sig e JOIN q ON e.bucket = q.probe
-  WHERE e.vec_id <> q.query_id
-)
+_BATCH_TOPK_SQL = f"""
 SELECT query_id, vec_id, label, cosine, CAST(rank AS INTEGER) AS rank
 FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                                    ORDER BY cosine DESC, vec_id) AS rank
       FROM scored)
 WHERE rank <= {BATCH_TOP_K}
 """
+
+
+def batch_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[Q] batched ANN: top-K neighbors for MANY query vectors in one
+    job — the production query pattern (a query batch arriving every
+    micro-batch / the all-pairs-lite "nearest catalog item" join).
+
+    Each of the N_BATCH_QUERIES query vectors explodes to its 9
+    multi-probe bucket keys; ONE equi-join on bucket matches all
+    queries against the corpus simultaneously (no per-query scan — the
+    classic batching win), then a per-query window keeps top-K. The
+    probe side is |queries| x 9 rows -> broadcast; the corpus side is
+    scanned once regardless of batch size. Probes key on the 8-bit
+    density knob, not the raw signature — see ``rp_lsh_topk``."""
+    base = load_table(spark, sf_dir, "embeddings") \
+        .select("vec_id", "label", "embedding")
+    e = _probe_buckets(base)
+    # round 14 (guide §4.2/§2.3): the probe side previously filtered
+    # AFTER the signature kernel, and mapInPandas is opaque to filter
+    # pushdown — the whole corpus ran through the kernel TWICE (once
+    # per join side). Signing the filtered scan computes the identical
+    # per-row signatures on |queries| rows, so the corpus pays exactly
+    # one kernel pass.
+    q = (_probe_buckets(base.where(F.col("vec_id") < N_BATCH_QUERIES))
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("q_embedding"),
+                 _probe_keys("bucket").alias("bucket"))
+         .dropDuplicates(["query_id", "bucket"]))
+    scored = (e.join(F.broadcast(q), "bucket")
+              .where(F.col("vec_id") != F.col("query_id"))
+              .select("query_id", "vec_id", "label",
+                      _cosine_col().alias("cosine")))
+    return _batch_topk_ranked(scored)
+
+
+BATCH_ANN_TOPK_ORACLE = f"""
+WITH {_PROBE_SIG_SQL},
+q AS (
+  SELECT DISTINCT vec_id AS query_id, embedding AS q_embedding, probe
+  FROM (
+    SELECT vec_id, embedding, {_PROBE_KEYS_SQL} AS probe
+    FROM sig WHERE vec_id < {N_BATCH_QUERIES}
+  )
+),
+scored AS (
+  SELECT q.query_id, e.vec_id, e.label,
+         {_cos_sql('e.embedding', 'q.q_embedding')} AS cosine
+  FROM sig e JOIN q ON e.bucket = q.probe
+  WHERE e.vec_id <> q.query_id
+)
+{_BATCH_TOPK_SQL}"""
 
 
 # --- 64-plane batched ANN (the production-width bucket space) ----------
@@ -906,7 +981,8 @@ WHERE rank <= {BATCH_TOP_K}
 
 def _bucket64_exploded(e: DataFrame) -> DataFrame:
     """Append (b_hi, b_lo) 32-plane halves via posexplode + 64 codegen
-    sum aggregates — the simhash64 shape.
+    sum aggregates — the simhash64 shape, kept as the JVM reference
+    ``_rp_signature``'s (32, 2) keys are pinned against.
 
     Three designs measured at sf0.1 (2k vecs x 64 planes x 64 dims):
     a nested-lambda HOF fold (interpreted expressions, ~4 s), a flat
@@ -926,7 +1002,7 @@ def _bucket64_exploded(e: DataFrame) -> DataFrame:
     base = e.select("vec_id", "label", "embedding",
                     F.posexplode("embedding").alias("d", "x"))
     projs = [F.expr(
-        f"sum(CAST(x AS DOUBLE) * ({_plane_sign_sql(j, 'd')}))")
+        f"sum(CAST(x AS DOUBLE) * ({_plane_sign_sql_expr(str(j), 'd')}))")
         .alias(f"_p{j}") for j in range(2 * 32)]
     agg = base.groupBy("vec_id", "label", "embedding").agg(*projs)
 
@@ -943,25 +1019,19 @@ def _bucket64_exploded(e: DataFrame) -> DataFrame:
                           _pack_sql(0) + " AS b_lo")
 
 
-def _bucket32_duck(col: str, offset: int) -> str:
-    bits = []
-    for j in range(offset, offset + 32):
-        proj = (f"round(list_sum(list_transform(range({N_DIMS}), d -> "
-                f"CAST({col}[d + 1] AS DOUBLE)"
-                f" * ({_plane_sign_sql(j, 'd')}))), 6)")
-        bits.append(f"CASE WHEN {proj} >= 0 "
-                    f"THEN CAST({1 << (j - offset)} AS BIGINT) "
-                    f"ELSE CAST(0 AS BIGINT) END")
-    return "CAST(" + " + ".join(bits) + " AS BIGINT)"
-
-
 def batch_ann64_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[Q] batched multi-probe ANN over the 64-plane bucket space:
     top-K per query via ONE corpus scan, broadcast (query x 65-probe)
-    side, equi-join on (b_hi, b_lo). Signatures from the Arrow
-    bucketizer (identical halves, no exploded agg on the query path)."""
-    base = load_table(spark, sf_dir, "embeddings")
-    e = _with_bucket64_arrow(base)
+    side, equi-join on (b_hi, b_lo). Signatures from the Arrow kernel
+    at (32, 2) (identical halves, no exploded agg on the query path)."""
+    def halves(df: DataFrame) -> DataFrame:
+        return (_rp_signature(df, 32, 2)
+                .withColumn("b_lo", F.col("keys")[0])
+                .withColumn("b_hi", F.col("keys")[1]).drop("keys"))
+
+    base = load_table(spark, sf_dir, "embeddings") \
+        .select("vec_id", "label", "embedding")
+    e = halves(base)
     probe_items = ["struct(q_hi AS b_hi, q_lo AS b_lo)"]
     probe_items += [
         f"struct(q_hi AS b_hi, CAST(q_lo ^ {1 << j} AS BIGINT) AS b_lo)"
@@ -970,10 +1040,9 @@ def batch_ann64_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"struct(CAST(q_hi ^ {1 << j} AS BIGINT) AS b_hi, q_lo AS b_lo)"
         for j in range(32)]
     probes_expr = F.expr("array(" + ", ".join(probe_items) + ")")
-    # probe side bucketized from the FILTERED scan — one corpus kernel
+    # probe side signed from the FILTERED scan — one corpus kernel
     # pass instead of two (see batch_ann_topk)
-    q = (_with_bucket64_arrow(base.where(F.col("vec_id")
-                                         < N_BATCH_QUERIES))
+    q = (halves(base.where(F.col("vec_id") < N_BATCH_QUERIES))
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("q_embedding"),
                  F.col("b_hi").alias("q_hi"),
@@ -984,26 +1053,18 @@ def batch_ann64_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("p.b_hi").alias("b_hi"),
                  F.col("p.b_lo").alias("b_lo"))
          .dropDuplicates(["query_id", "b_hi", "b_lo"]))
-    cos = F.round(
-        _dot(F.col("embedding"), F.col("q_embedding"))
-        / (_norm(F.col("embedding")) * _norm(F.col("q_embedding"))), 6)
     scored = (e.join(F.broadcast(q), ["b_hi", "b_lo"])
               .where(F.col("vec_id") != F.col("query_id"))
               .select("query_id", "vec_id", "label",
-                      cos.alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), "vec_id")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= BATCH_TOP_K)
-            .select("query_id", "vec_id", "label", "cosine",
-                    F.col("rank").cast("int").alias("rank")))
+                      _cosine_col().alias("cosine")))
+    return _batch_topk_ranked(scored)
 
 
 BATCH_ANN64_TOPK_ORACLE = f"""
 WITH sig AS (
   SELECT vec_id, label, embedding,
-         {_bucket32_duck('embedding', 32)} AS b_hi,
-         {_bucket32_duck('embedding', 0)} AS b_lo
+         {_rp_key_sql(1, 32)} AS b_hi,
+         {_rp_key_sql(0, 32)} AS b_lo
   FROM embeddings
 ),
 q AS (
@@ -1022,19 +1083,11 @@ q AS (
 ),
 scored AS (
   SELECT q.query_id, e.vec_id, e.label,
-         round(({_DOT_SQL.format(a='e.embedding', b='q.q_embedding')})
-               / (({_NORM_SQL.format(a='e.embedding')})
-                  * ({_NORM_SQL.format(a='q.q_embedding')})), 6)
-           AS cosine
+         {_cos_sql('e.embedding', 'q.q_embedding')} AS cosine
   FROM sig e JOIN q ON e.b_hi = q.p_hi AND e.b_lo = q.p_lo
   WHERE e.vec_id <> q.query_id
 )
-SELECT query_id, vec_id, label, cosine, CAST(rank AS INTEGER) AS rank
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, vec_id) AS rank
-      FROM scored)
-WHERE rank <= {BATCH_TOP_K}
-"""
+{_BATCH_TOPK_SQL}"""
 
 
 # --- ANN quality audit: recall@K vs exact brute force ------------------
@@ -1128,10 +1181,7 @@ exact AS (
     SELECT q.vec_id AS query_id, e.vec_id,
            row_number() OVER (
              PARTITION BY q.vec_id
-             ORDER BY round(({_DOT_SQL.format(a='e.embedding',
-                                              b='q.embedding')})
-                   / (({_NORM_SQL.format(a='e.embedding')})
-                      * ({_NORM_SQL.format(a='q.embedding')})), 6)
+             ORDER BY {_cos_sql('e.embedding', 'q.embedding')}
                DESC, e.vec_id) AS rk
     FROM embeddings e, embeddings q
     WHERE q.vec_id < {N_BATCH_QUERIES} AND e.vec_id <> q.vec_id)
@@ -1159,7 +1209,6 @@ LEFT JOIN per_q p ON q.vec_id = p.query_id
 
 ND64_BANDS = 8
 ND64_BITS = 8
-_ND64_MASK = (1 << ND64_BITS) - 1
 
 
 def embedding_near_dups64(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,83 +1231,18 @@ def embedding_near_dups64(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _near_dups64_from(load_table(spark, sf_dir, "embeddings"))
 
 
-def _cand64_from(e: DataFrame) -> DataFrame:
-    """Banded candidate pairs from the 64-plane signature (8x8-bit
-    bands): the generation stage shared by the float and quantized
-    verify paths. Checkpoints the signatures before the a/b self-join:
-    both sides reference the same Arrow-bucketizer subtree and Spark
-    has no DataFrame-level CSE — without it the 64-plane GEMV pass
-    runs twice (the dedup_groups lesson, same bug class)."""
-    sig = _with_bucket64_arrow(e).select("vec_id", "label",
-                                         "b_hi", "b_lo") \
-        .localCheckpoint()
-    bands = sig.select(
-        "vec_id", "label", F.explode(F.array(*[
-            F.struct(
-                F.lit(j).alias("band"),
-                (F.shiftrightunsigned(
-                    "b_lo" if j < 4 else "b_hi",
-                    ND64_BITS * (j % 4))
-                 .bitwiseAND(F.lit(_ND64_MASK))).alias("key"))
-            for j in range(ND64_BANDS)])).alias("bk")) \
-        .select("vec_id", "label", "bk.band", "bk.key")
-    a = bands.select(F.col("vec_id").alias("vec_a"), "label",
-                     "band", "key")
-    b = bands.select(F.col("vec_id").alias("vec_b"), "label",
-                     "band", "key")
-    return (a.join(b, ["label", "band", "key"])
-            .where(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b", "label")
-            .distinct())
-
-
 def _near_dups64_from(e: DataFrame) -> DataFrame:
     # round 13: quantized_verify is the DEFAULT verify for every
     # banded near-dup row (the r12 ledger: it wins wall AND shuffle
     # bytes at both measured widths); _verify_pairs_arrow remains the
     # documented fallback for candidates~pairs corpora, where a
     # prefilter cannot remove anything by construction.
-    return quantized_verify(_cand64_from(e), e, 0.95)
+    return quantized_verify(_banded_candidates(e, ND64_BITS, ND64_BANDS),
+                            e, 0.95)
 
 
-EMBEDDING_NEAR_DUP64_ORACLE = f"""
-WITH sig AS (
-  SELECT vec_id, label,
-         {_bucket32_duck('embedding', 32)} AS b_hi,
-         {_bucket32_duck('embedding', 0)} AS b_lo
-  FROM embeddings
-),
-bands AS (
-  SELECT vec_id, label, j AS band,
-         CASE WHEN j < 4
-              THEN (b_lo >> ({ND64_BITS} * j)) & {_ND64_MASK}
-              ELSE (b_hi >> ({ND64_BITS} * (j - 4))) & {_ND64_MASK}
-         END AS key
-  FROM sig, unnest(range({ND64_BANDS})) AS t(j)
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label
-  FROM bands a
-  JOIN bands b ON a.label = b.label AND a.band = b.band
-              AND a.key = b.key AND a.vec_id < b.vec_id
-),
-q AS ({_q8_codes_sql('embeddings')}),
-pre AS (
-  SELECT c.vec_a, c.vec_b, c.label
-  FROM cand c
-  JOIN q qa ON qa.vec_id = c.vec_a
-  JOIN q qb ON qb.vec_id = c.vec_b
-  WHERE {_Q8_PRE_COND}
-)
-SELECT c.vec_a, c.vec_b, c.label, {{cos}} AS cosine
-FROM pre c
-JOIN embeddings ea ON ea.vec_id = c.vec_a
-JOIN embeddings eb ON eb.vec_id = c.vec_b
-WHERE {{cos}} >= 0.95
-""".format(cos=(
-    "round((" + _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
-    + ") / ((" + _NORM_SQL.format(a="ea.embedding") + ") * ("
-    + _NORM_SQL.format(a="eb.embedding") + ")), 6)"))
+EMBEDDING_NEAR_DUP64_ORACLE = _near_dups_oracle(
+    _CORPUS_SQL, _plan_sql(ND64_BITS, ND64_BANDS), ND64_BANDS)
 
 
 # ---------------------------------------------------------------------------
@@ -1271,66 +1255,24 @@ WHERE {{cos}} >= 0.95
 #                         = q_a.q_b / (|q_a| |q_b|)
 # so the prefilter is a pure INTEGER dot over int8 codes — exactly
 # reproducible in DuckDB (the quantization grid itself is the proven
-# EMBEDDING_QUANTIZE contract). Quantization perturbs a true cosine by
-# O(1/127) at 64 dims, so the prefilter admits at 0.94 and only the
-# SURVIVORS — the near-dup sliver, not the candidate mass — fetch
-# float vectors for the exact >= 0.95 rescore. Both stages are
-# mirrored in the oracle, so cross-engine parity is exact (no
-# tolerance story beyond the repo-wide round-6 contract).
+# EMBEDDING_QUANTIZE contract), and exact in the float64 verify kernel
+# too, since every dot and squared norm is an integer below 2^53.
+# Quantization perturbs a true cosine by O(1/127) at 64 dims, so the
+# prefilter admits at 0.94 and only the SURVIVORS — the near-dup
+# sliver, not the candidate mass — fetch float vectors for the exact
+# >= 0.95 rescore. Both stages are mirrored in the oracle, so
+# cross-engine parity is exact (no tolerance story beyond the
+# repo-wide round-6 contract).
 # ---------------------------------------------------------------------------
 
 
 def _quantized_codes(e: DataFrame) -> DataFrame:
-    """(vec_id, label, q8): int8 codes as array<tinyint> — the 1 B/dim
-    transfer form the prefilter cogroup actually shuffles."""
+    """(vec_id, label, embedding): the int8 codes as array<tinyint> —
+    the 1 B/dim transfer form the prefilter cogroup actually shuffles,
+    in the column the verify kernel reads."""
     return _staged_quantized(e).select(
         "vec_id", "label",
-        F.col("qarr").cast("array<tinyint>").alias("q8"))
-
-
-def _prefilter_pairs_quantized(cand: DataFrame,
-                               qt: DataFrame) -> DataFrame:
-    """Survivor pairs of the int8-cosine prefilter, label-cogrouped
-    like _verify_pairs_arrow but over codes: each label's code matrix
-    crosses the Arrow boundary once at 1/4 the float bytes. Pairs with
-    a zero quantized norm (all-zero vectors) cannot pass — their exact
-    cosine is undefined and the exact verifier would never emit them."""
-    import numpy as np
-    import pandas as pd
-
-    def prefilter(cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cpdf) or not len(qpdf):
-            return pd.DataFrame({"vec_a": pd.Series(dtype="int64"),
-                                 "vec_b": pd.Series(dtype="int64"),
-                                 "label": pd.Series(dtype="int32")})
-        m = np.stack(qpdf["q8"].to_numpy()).astype(np.int32)
-        norm = np.sqrt((m * m).sum(axis=1).astype(np.float64))
-        idx = pd.Series(np.arange(len(qpdf)),
-                        index=qpdf["vec_id"].to_numpy())
-        out = []
-        ia_all = idx[cpdf["vec_a"].to_numpy()].to_numpy()
-        ib_all = idx[cpdf["vec_b"].to_numpy()].to_numpy()
-        for lo in range(0, len(cpdf), 500_000):
-            ia = ia_all[lo:lo + 500_000]
-            ib = ib_all[lo:lo + 500_000]
-            na, nb = norm[ia], norm[ib]
-            dot = (m[ia] * m[ib]).sum(axis=1).astype(np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.round(dot / (na * nb), 6)
-            keep = (na > 0) & (nb > 0) & (cos >= ND_Q_PREFILTER)
-            out.append(pd.DataFrame({
-                "vec_a": cpdf["vec_a"].to_numpy()[lo:lo + 500_000][keep]
-                .astype("int64"),
-                "vec_b": cpdf["vec_b"].to_numpy()[lo:lo + 500_000][keep]
-                .astype("int64"),
-                "label": cpdf["label"].to_numpy()[lo:lo + 500_000][keep]
-                .astype("int32"),
-            }))
-        return pd.concat(out, ignore_index=True)
-
-    return (cand.groupBy("label")
-            .cogroup(qt.groupBy("label"))
-            .applyInPandas(prefilter, "vec_a long, vec_b long, label int"))
+        F.col("qarr").cast("array<tinyint>").alias("embedding"))
 
 
 def embedding_near_dups_quantized(spark: SparkSession,
@@ -1369,7 +1311,7 @@ def embedding_near_dups_quantized(spark: SparkSession,
     ~0.96-0.99 — above the 0.95 verify threshold but NOT at the int8
     prefilter's trivial fixed point, so the quantized dot/norm
     arithmetic is exercised on a value the oracle must reproduce."""
-    return _near_dups_quantized_from(_with_planted_twins(
+    return _near_dups64_from(_with_planted_twins(
         load_table(spark, sf_dir, "embeddings")))
 
 
@@ -1377,7 +1319,9 @@ def quantized_verify(cand: DataFrame, e: DataFrame,
                      threshold: float = 0.95) -> DataFrame:
     """int8 prefilter -> float rescore over an arbitrary candidate
     set — the quantized twin's verify composition, shared by the [Q]
-    row and the crossover measurement tool.
+    rows and the crossover measurement tool. Both stages are the one
+    cogrouped kernel, ``_verify_pairs_arrow``: first over the int8
+    codes at ND_Q_PREFILTER, then over the floats at ``threshold``.
 
     The survivor set is checkpointed because it feeds BOTH the
     endpoint semi-join and the rescore cogroup — without it the int8
@@ -1389,8 +1333,9 @@ def quantized_verify(cand: DataFrame, e: DataFrame,
     savings the int8 codes bought (837 MB total vs the float path's
     679 MB); survivor-endpoint semi-joining makes the rescore
     exchange survivor-sized, as the crossover arithmetic assumes."""
-    survivors = _prefilter_pairs_quantized(cand, _quantized_codes(e)) \
-        .localCheckpoint()
+    survivors = _verify_pairs_arrow(cand, _quantized_codes(e),
+                                    ND_Q_PREFILTER) \
+        .select("vec_a", "vec_b", "label").localCheckpoint()
     ids = (survivors.select(F.col("vec_a").alias("vec_id"))
            .unionByName(survivors.select(F.col("vec_b")
                                          .alias("vec_id")))
@@ -1398,10 +1343,6 @@ def quantized_verify(cand: DataFrame, e: DataFrame,
     return _verify_pairs_arrow(survivors,
                                e.join(ids, "vec_id", "leftsemi"),
                                threshold)
-
-
-def _near_dups_quantized_from(e: DataFrame) -> DataFrame:
-    return quantized_verify(_cand64_from(e), e, 0.95)
 
 
 # Planted near-dup twins (round 12): the sf0.01 corpus is 500 random
@@ -1463,50 +1404,8 @@ SELECT vec_id + {ND_PLANT_OFFSET} AS vec_id,
 FROM embeddings WHERE vec_id < {ND_PLANT_N}
 """
 
-EMBEDDING_NEAR_DUP_QUANTIZED_ORACLE = f"""
-WITH pl AS ({_PLANTED_SQL}),
-sig AS (
-  SELECT vec_id, label,
-         {_bucket32_duck('embedding', 32)} AS b_hi,
-         {_bucket32_duck('embedding', 0)} AS b_lo
-  FROM pl
-),
-bands AS (
-  SELECT vec_id, label, j AS band,
-         CASE WHEN j < 4
-              THEN (b_lo >> ({ND64_BITS} * j)) & {_ND64_MASK}
-              ELSE (b_hi >> ({ND64_BITS} * (j - 4))) & {_ND64_MASK}
-         END AS key
-  FROM sig, unnest(range({ND64_BANDS})) AS t(j)
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label
-  FROM bands a
-  JOIN bands b ON a.label = b.label AND a.band = b.band
-              AND a.key = b.key AND a.vec_id < b.vec_id
-),
-q AS ({_q8_codes_sql('pl')}),
-pre AS (
-  SELECT c.vec_a, c.vec_b, c.label
-  FROM cand c
-  JOIN q qa ON qa.vec_id = c.vec_a
-  JOIN q qb ON qb.vec_id = c.vec_b
-  WHERE ({_Q8_NORM_SQL.format(q='qa.q8')}) > 0
-    AND ({_Q8_NORM_SQL.format(q='qb.q8')}) > 0
-    AND round(({_Q8_DOT_SQL.format(a='qa.q8', b='qb.q8')})
-              / (({_Q8_NORM_SQL.format(q='qa.q8')})
-                 * ({_Q8_NORM_SQL.format(q='qb.q8')})), 6)
-        >= {ND_Q_PREFILTER}
-)
-SELECT c.vec_a, c.vec_b, c.label, {{cos}} AS cosine
-FROM pre c
-JOIN pl ea ON ea.vec_id = c.vec_a
-JOIN pl eb ON eb.vec_id = c.vec_b
-WHERE {{cos}} >= 0.95
-""".format(cos=(
-    "round((" + _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
-    + ") / ((" + _NORM_SQL.format(a="ea.embedding") + ") * ("
-    + _NORM_SQL.format(a="eb.embedding") + ")), 6)"))
+EMBEDDING_NEAR_DUP_QUANTIZED_ORACLE = _near_dups_oracle(
+    _PLANTED_SQL, _plan_sql(ND64_BITS, ND64_BANDS), ND64_BANDS)
 
 
 # ---------------------------------------------------------------------------
@@ -1523,10 +1422,9 @@ WHERE {{cos}} >= 0.95
 # — a PURE-INTEGER recurrence both engines replicate exactly (Python
 # int.bit_length == DuckDB length(printf('%b', m))); never a float
 # log2, whose boundary rounding could diverge and change the whole
-# candidate set. Band keys are built DIRECTLY from the plane signs
-# (band j uses planes [j*bits, (j+1)*bits) of the same quadratic
-# integer-hash plane family, up to 24*24 = 576 planes), skipping the
-# packed-word representation that capped the 64-plane variant.
+# candidate set. Band j uses planes [j*bits, (j+1)*bits) of the same
+# quadratic integer-hash plane family (up to 24*24 = 576 planes) — the
+# signature kernel at (bits(n), bands(n)).
 #
 # Recall trade (documented, pytest-asserted on planted pairs): wider
 # keys lower per-band collide probability — at cosine 0.95,
@@ -1579,56 +1477,16 @@ def _auto_band_plan(n: int) -> tuple[int, int]:
     return bits, ND_BANDS_AUTO + ND_EXTRA_BANDS_PER_BIT * max(0, bits - 16)
 
 
-def _band_key_rows(e: DataFrame, bits: int, bands: int,
-                   dims: int = N_DIMS) -> DataFrame:
-    """(vec_id, label, band, key): one exploded RP-LSH band-key row per
-    (vector, band), keys from one numpy GEMV per Arrow batch over the
-    shared quadratic-integer-hash plane family. ``dims`` follows the
-    corpus width (default the 64-dim driver corpora)."""
-    import numpy as np
-    import pandas as pd
-
-    planes = _plane_matrix(bands * bits, dims)
-    w = (1 << np.arange(bits, dtype=np.int64))
-
-    def band_keys(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            s = (np.round(m @ planes.T, 6) >= 0).astype(np.int64)
-            keys = [(s[:, j * bits:(j + 1) * bits] * w).sum(axis=1)
-                    for j in range(bands)]
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "label": pdf["label"].astype("int32"),
-                "keys": list(np.stack(keys, axis=1)),
-            })
-
-    return (e.select("vec_id", "label", "embedding")
-            .mapInPandas(band_keys,
-                         "vec_id long, label int, keys array<bigint>")
-            .select("vec_id", "label",
-                    F.posexplode("keys").alias("band", "key")))
-
-
-def _banded_candidates(e: DataFrame, bits: int, bands: int,
-                       dims: int = N_DIMS) -> DataFrame:
-    """(vec_a, vec_b, label) candidate pairs from `bands` RP-LSH bands
-    of `bits` bits each — the shared generator behind the auto knob and
-    the band stress tool, parameterized so tests can drive it at forced
-    past-clamp plans without a multi-million-row corpus."""
-    # checkpointed before the a/b self-join (same rationale as
-    # _near_dups64_from: the GEMV bucketizer must not run twice)
-    sig = _band_key_rows(e, bits, bands, dims).localCheckpoint()
-    a = sig.select(F.col("vec_id").alias("vec_a"), "label",
-                   "band", "key")
-    b = sig.select(F.col("vec_id").alias("vec_b"), "label",
-                   "band", "key")
-    return (a.join(b, ["label", "band", "key"])
-            .where(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b", "label")
-            .distinct())
+def _auto_plan_sql(src: str) -> str:
+    """The one-row (bits, n_bands) SELECT of ``_auto_band_plan`` over
+    the rows of ``src``."""
+    return f"""
+    SELECT bits, {ND_BANDS_AUTO} + {ND_EXTRA_BANDS_PER_BIT} *
+                   GREATEST(bits - 16, 0) AS n_bands
+    FROM (SELECT GREATEST(8, LEAST({ND_BITS_CAP}, length(printf(
+                   '%b', GREATEST(count(*) // {ND_TARGET_BLOCK}, 1)))))
+                 AS bits
+          FROM {src})"""
 
 
 def embedding_near_dups_auto(spark: SparkSession,
@@ -1639,9 +1497,8 @@ def embedding_near_dups_auto(spark: SparkSession,
     bits(n) = clamp(8, 24, bit_length(n // 64)),
     bands(n) = 8 + 2 * max(0, bits(n) - 16). One count() driver
     round-trip sizes the knobs (same eager pattern as the k-means
-    coordinator); the band keys come from one numpy GEMV per Arrow
-    batch; candidate generation and the cogrouped exact-cosine verify
-    are the shared near-dup plan."""
+    coordinator); candidate generation and the quantized verify are
+    the shared near-dup plan."""
     e = load_table(spark, sf_dir, "embeddings")
     bits, bands = _auto_band_plan(e.count())
     # quantized verify by default (round 13) — see _near_dups64_from
@@ -1649,136 +1506,24 @@ def embedding_near_dups_auto(spark: SparkSession,
                             e, 0.95)
 
 
-# ---------------------------------------------------------------------------
-# Per-label-group sharding (round 12 — the documented >= 1e9-vector
-# lever, now code). Past bits = 24 the plane budget binds and keys
-# cannot widen, so a single candidate join's in-flight state (band-key
-# shuffle + per-(label, band, key) block fan-out) grows with n with no
-# remaining knob. But candidate pairs NEVER cross labels — the join
-# already keys on label — so restricting both sides to one GROUP of
-# labels (shard = label % n_shards, a pure function of the join key)
-# is LOSSLESS: the union over shards is exactly the unsharded pair
-# set. Two forms:
-#
-#  * in-DAG (`_banded_candidates_sharded`): one join carrying `shard`
-#    as an extra leading equi-join key — same result, same total
-#    work; the shard column rides the exchange so a cluster can
-#    range-place whole label groups (and AQE sees the skew grain).
-#  * sequential (`scratch_dir=`): shards run as SEPARATE JOBS, each
-#    parquet-committed before the next starts — peak shuffle/heap is
-#    ONE SHARD'S, which is what actually failed locally at 16M
-#    (kernel-OOM at 64g with 32 workers, r10 BASELINE note). This is
-#    the fuzzydedup durable-stage pattern applied to candidate
-#    generation: at 1e9+ vectors each shard is a bounded-mass job and
-#    a lost executor re-runs one shard, not the whole join.
-#
-# Block mass per (label, band, key) within a shard equals the
-# unsharded mass for those labels (sharding splits the JOB, the
-# blocks were already label-disjoint) — the stress table records
-# per-shard block mass to pin that claim at 16M.
-# ---------------------------------------------------------------------------
-
-
-def _banded_candidates_sharded(e: DataFrame, bits: int, bands: int,
-                               n_shards: int,
-                               scratch_dir: str | None = None
-                               ) -> DataFrame:
-    """(vec_a, vec_b, label) — identical result to
-    _banded_candidates, computed per label group. With scratch_dir the
-    shards are materialized sequentially (bounded peak state); without
-    it the shard key joins in-DAG as one extra equi-join column."""
-    sig = _band_key_rows(e, bits, bands) \
-        .withColumn("shard",
-                    F.pmod(F.col("label"), F.lit(n_shards))
-                    .cast("int")) \
-        .localCheckpoint()
-
-    def _pairs(s: DataFrame) -> DataFrame:
-        a = s.select(F.col("vec_id").alias("vec_a"), "shard",
-                     "label", "band", "key")
-        b = s.select(F.col("vec_id").alias("vec_b"), "shard",
-                     "label", "band", "key")
-        return (a.join(b, ["shard", "label", "band", "key"])
-                .where(F.col("vec_a") < F.col("vec_b"))
-                .select("vec_a", "vec_b", "label")
-                .distinct())
-
-    if scratch_dir is None:
-        return _pairs(sig)
-    spark = e.sparkSession
-    for g in range(n_shards):
-        (_pairs(sig.where(F.col("shard") == g))
-         .write.mode("overwrite")
-         .parquet(f"{scratch_dir}/shard={g}"))
-    return spark.read.parquet(
-        *[f"{scratch_dir}/shard={g}" for g in range(n_shards)])
-
-
 def embedding_near_dups_sharded(spark: SparkSession, sf_dir: str,
                                 n_shards: int = 4,
                                 scratch_dir: str | None = None
                                 ) -> DataFrame:
     """embedding_near_dups_auto computed through the label-group-
-    sharded candidate generator — same knobs, same verify, same
-    result set (pytest-asserted equal to the auto path); the form a
+    sharded candidate join — same knobs, same verify, same result set
+    (pytest-asserted equal to the auto path); the form a
     >= 1e9-vector corpus runs."""
     e = load_table(spark, sf_dir, "embeddings")
     bits, bands = _auto_band_plan(e.count())
-    cand = _banded_candidates_sharded(e, bits, bands, n_shards,
-                                      scratch_dir)
+    cand = _banded_candidates(e, bits, bands, n_shards=n_shards,
+                              scratch_dir=scratch_dir)
     # quantized verify by default (round 13) — see _near_dups64_from
     return quantized_verify(cand, e, 0.95)
 
 
-EMBEDDING_NEAR_DUPS_AUTO_ORACLE = f"""
-WITH p0 AS (
-  SELECT GREATEST(8, LEAST({ND_BITS_CAP}, length(printf(
-           '%b', GREATEST(count(*) // {ND_TARGET_BLOCK}, 1)))))
-         AS bits
-  FROM embeddings
-),
-p AS (
-  SELECT bits,
-         {ND_BANDS_AUTO} + {ND_EXTRA_BANDS_PER_BIT} *
-           GREATEST(bits - 16, 0) AS n_bands
-  FROM p0
-),
-bands AS (
-  SELECT vec_id, label, j AS band,
-         list_sum(list_transform(range(bits), i ->
-           CASE WHEN round(list_sum(list_transform(
-                  range({N_DIMS}), d ->
-                  CAST(embedding[d + 1] AS DOUBLE) *
-                  ({_plane_sign_sql_expr('(j * bits + i)', 'd')}))), 6)
-                >= 0
-           THEN CAST(1 AS BIGINT) << i ELSE CAST(0 AS BIGINT) END))
-           AS key
-  FROM embeddings, p, unnest(range({ND_BANDS_CAP})) AS t(j)
-  WHERE j < p.n_bands
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label
-  FROM bands a
-  JOIN bands b ON a.label = b.label AND a.band = b.band
-              AND a.key = b.key AND a.vec_id < b.vec_id
-),
-q AS ({_q8_codes_sql('embeddings')}),
-pre AS (
-  SELECT c.vec_a, c.vec_b, c.label
-  FROM cand c
-  JOIN q qa ON qa.vec_id = c.vec_a
-  JOIN q qb ON qb.vec_id = c.vec_b
-  WHERE {_Q8_PRE_COND}
-)
-SELECT c.vec_a, c.vec_b, c.label, {{cos}} AS cosine
-FROM pre c
-JOIN embeddings ea ON ea.vec_id = c.vec_a
-JOIN embeddings eb ON eb.vec_id = c.vec_b
-WHERE {{cos}} >= 0.95
-""".format(cos=(
-    "round((" + _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
-    + ") / ((" + _NORM_SQL.format(a="ea.embedding") + ") * ("
-    + _NORM_SQL.format(a="eb.embedding") + ")), 6)"))
+EMBEDDING_NEAR_DUPS_AUTO_ORACLE = _near_dups_oracle(
+    _CORPUS_SQL, _auto_plan_sql("e"), ND_BANDS_CAP)
 
 
 def _e128(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1821,95 +1566,21 @@ def embedding_near_dups_sharded_planted(spark: SparkSession,
     e = _with_planted_twins(
         load_table(spark, sf_dir, "embeddings")).localCheckpoint()
     bits, bands = _auto_band_plan(e.count())
-    cand = _banded_candidates_sharded(e, bits, bands, n_shards=4)
+    cand = _banded_candidates(e, bits, bands, n_shards=4)
     # quantized verify by default (round 13) — see _near_dups64_from
     return quantized_verify(cand, e, 0.95)
 
 
-# shared skeleton for the planted near-dup oracles: the auto band
-# plan + banded candidates + exact-cosine verify over a corpus CTE
-_ND_PLANTED_ORACLE_TMPL = """
-WITH e0 AS ({planted}),
-e AS (
-  {corpus_select}
-),
-p0 AS (
-  SELECT GREATEST(8, LEAST({bits_cap}, length(printf(
-           '%b', GREATEST(count(*) // {target_block}, 1)))))
-         AS bits
-  FROM e
-),
-p AS (
-  SELECT bits,
-         {bands_auto} + {extra_bands} * GREATEST(bits - 16, 0)
-           AS n_bands
-  FROM p0
-),
-bands AS (
-  SELECT vec_id, label, j AS band,
-         list_sum(list_transform(range(bits), i ->
-           CASE WHEN round(list_sum(list_transform(
-                  range({dims}), d ->
-                  CAST(embedding[d + 1] AS DOUBLE) *
-                  ({sign}))), 6)
-                >= 0
-           THEN CAST(1 AS BIGINT) << i ELSE CAST(0 AS BIGINT) END))
-           AS key
-  FROM e, p, unnest(range({bands_cap})) AS t(j)
-  WHERE j < p.n_bands
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label
-  FROM bands a
-  JOIN bands b ON a.label = b.label AND a.band = b.band
-              AND a.key = b.key AND a.vec_id < b.vec_id
-),
-q AS ({q8codes}),
-pre AS (
-  SELECT c.vec_a, c.vec_b, c.label
-  FROM cand c
-  JOIN q qa ON qa.vec_id = c.vec_a
-  JOIN q qb ON qb.vec_id = c.vec_b
-  WHERE {q8cond}
-)
-SELECT c.vec_a, c.vec_b, c.label, {cos} AS cosine
-FROM pre c
-JOIN e ea ON ea.vec_id = c.vec_a
-JOIN e eb ON eb.vec_id = c.vec_b
-WHERE {cos} >= 0.95
-"""
-
-
-def _nd_planted_oracle(dims: int, corpus_select: str) -> str:
-    return _ND_PLANTED_ORACLE_TMPL.format(
-        planted=_PLANTED_SQL,
-        corpus_select=corpus_select,
-        bits_cap=ND_BITS_CAP,
-        target_block=ND_TARGET_BLOCK,
-        bands_auto=ND_BANDS_AUTO,
-        extra_bands=ND_EXTRA_BANDS_PER_BIT,
-        bands_cap=ND_BANDS_CAP,
-        dims=dims,
-        sign=_plane_sign_sql_expr('(j * bits + i)', 'd', dims),
-        q8codes=_q8_codes_sql("e"),
-        q8cond=_Q8_PRE_COND,
-        cos=(
-            "round(("
-            + _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
-            + ") / ((" + _NORM_SQL.format(a="ea.embedding") + ") * ("
-            + _NORM_SQL.format(a="eb.embedding") + ")), 6)"))
-
-
-EMBEDDING_NEAR_DUPS_128_ORACLE = _nd_planted_oracle(
-    2 * N_DIMS,
+EMBEDDING_NEAR_DUPS_128_ORACLE = _near_dups_oracle(
     "SELECT vec_id, label,\n"
     "         list_concat(embedding, list_reverse(embedding))"
-    " AS embedding\n  FROM e0")
+    f" AS embedding\n  FROM ({_PLANTED_SQL})",
+    _auto_plan_sql("e"), ND_BANDS_CAP, 2 * N_DIMS)
 
 # the sharded row's oracle: sharding is invisible to the result set,
 # so the oracle is simply the planted auto plan at the native width
-EMBEDDING_NEAR_DUPS_SHARDED_ORACLE = _nd_planted_oracle(
-    N_DIMS, "SELECT vec_id, label, embedding FROM e0")
+EMBEDDING_NEAR_DUPS_SHARDED_ORACLE = _near_dups_oracle(
+    _PLANTED_SQL, _auto_plan_sql("e"), ND_BANDS_CAP)
 
 
 # ---------------------------------------------------------------------------
@@ -1939,7 +1610,7 @@ def _ensure_corpus_sig_store(spark: SparkSession,
         corpus = e.where(F.col("vec_id") % EMB_BATCH_MOD != 0)
         bits, bands = _auto_band_plan(corpus.count())
         loc = pid_scratch("/tmp/spark_graft_sigstore", sf_dir) + "/sig"
-        (_band_key_rows(corpus, bits, bands)
+        (_band_rows(corpus, bits, bands)
          .write.mode("overwrite").parquet(loc))
         return (loc, bits, bands)
 
@@ -1965,7 +1636,7 @@ def embedding_incremental_dedup(spark: SparkSession,
     loc, bits, bands = _ensure_corpus_sig_store(spark, sf_dir)
     store = spark.read.parquet(loc)
     batch = e.where(F.col("vec_id") % EMB_BATCH_MOD == 0)
-    bsig = _band_key_rows(batch, bits, bands)
+    bsig = _band_rows(batch, bits, bands)
     cand = (store.select(F.col("vec_id").alias("vec_b"),
                          "label", "band", "key")
             .join(F.broadcast(bsig.select(F.col("vec_id").alias("vec_a"),
@@ -1987,31 +1658,10 @@ def embedding_incremental_dedup(spark: SparkSession,
 
 
 EMBEDDING_INCREMENTAL_DEDUP_ORACLE = f"""
-WITH p0 AS (
-  SELECT GREATEST(8, LEAST({ND_BITS_CAP}, length(printf(
-           '%b', GREATEST(count(*) // {ND_TARGET_BLOCK}, 1)))))
-         AS bits
-  FROM embeddings WHERE vec_id % {EMB_BATCH_MOD} != 0
-),
-p AS (
-  SELECT bits,
-         {ND_BANDS_AUTO} + {ND_EXTRA_BANDS_PER_BIT} *
-           GREATEST(bits - 16, 0) AS n_bands
-  FROM p0
-),
-bands AS (
-  SELECT vec_id, label, j AS band,
-         list_sum(list_transform(range(bits), i ->
-           CASE WHEN round(list_sum(list_transform(
-                  range({N_DIMS}), d ->
-                  CAST(embedding[d + 1] AS DOUBLE) *
-                  ({_plane_sign_sql_expr('(j * bits + i)', 'd')}))), 6)
-                >= 0
-           THEN CAST(1 AS BIGINT) << i ELSE CAST(0 AS BIGINT) END))
-           AS key
-  FROM embeddings, p, unnest(range({ND_BANDS_CAP})) AS t(j)
-  WHERE j < p.n_bands
-),
+WITH bands AS ({_band_rows_sql(
+    'embeddings',
+    _auto_plan_sql(f"embeddings WHERE vec_id % {EMB_BATCH_MOD} != 0"),
+    ND_BANDS_CAP)}),
 cand AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label
   FROM bands a
@@ -2020,13 +1670,7 @@ cand AS (
   WHERE a.vec_id % {EMB_BATCH_MOD} = 0
     AND b.vec_id % {EMB_BATCH_MOD} != 0
 ),
-ver AS (
-  SELECT c.vec_a, c.vec_b, {{cos}} AS cosine
-  FROM cand c
-  JOIN embeddings ea ON ea.vec_id = c.vec_a
-  JOIN embeddings eb ON eb.vec_id = c.vec_b
-  WHERE {{cos}} >= 0.95
-),
+ver AS ({_rescore_sql('cand', 'embeddings', 0.95)}),
 best AS (
   SELECT vec_a, vec_b, cosine,
          row_number() OVER (PARTITION BY vec_a
@@ -2040,7 +1684,4 @@ SELECT e.vec_id,
 FROM embeddings e
 LEFT JOIN best b ON b.vec_a = e.vec_id AND b.rn = 1
 WHERE e.vec_id % {EMB_BATCH_MOD} = 0
-""".format(cos=(
-    "round((" + _DOT_SQL.format(a="ea.embedding", b="eb.embedding")
-    + ") / ((" + _NORM_SQL.format(a="ea.embedding") + ") * ("
-    + _NORM_SQL.format(a="eb.embedding") + ")), 6)"))
+"""

@@ -522,20 +522,14 @@ def embedding_decontamination(spark: SparkSession,
 
 
 def _embedding_decon_oracle() -> str:
-    from gcp_datalake_utils_spark.llm.similarity import (
-        _DOT_SQL,
-        _NORM_SQL,
-    )
-    dot = _DOT_SQL.format(a="e.embedding", b="b.embedding")
-    ne = _NORM_SQL.format(a="e.embedding")
-    nb = _NORM_SQL.format(a="b.embedding")
+    from gcp_datalake_utils_spark.llm.similarity import _cos_sql
     return f"""
 WITH b AS (
   SELECT embedding FROM embeddings WHERE vec_id % {DECON_MOD} = 0
 ),
 s AS (
   SELECT e.vec_id,
-         round(({dot}) / (({ne}) * ({nb})), 6) AS sim
+         {_cos_sql('e.embedding', 'b.embedding')} AS sim
   FROM embeddings e, b
   WHERE e.vec_id % {DECON_MOD} <> 0
 )

@@ -170,10 +170,12 @@ def _report_for_specs(spark: SparkSession, sf_dir: str,
     # the meta left-joins keep a spec whose side(s) are empty (all-NULL
     # column, zero sample): it must yield a zeros row like the oracle's
     # always-1-row sa/sb CTEs, not vanish
-    meta = F.broadcast(spark.createDataFrame(
+    # (no broadcast hint: meta is the preserved side of both left
+    # joins, which Spark cannot build, so the hint was only a WARN)
+    meta = spark.createDataFrame(
         [(i, f"{st}.{sc}->{tt}.{tc}", type_compat_score(sty, tty))
          for i, (st, sc, tt, tc, sty, tty) in enumerate(specs)],
-        ["spec", "relationship", "tscore"]))
+        ["spec", "relationship", "tscore"])
     row = (meta.join(totals, "spec", "left").join(stats, "spec", "left")
            .withColumn("na_distinct",
                        F.coalesce(F.col("na_distinct"), F.lit(0)))

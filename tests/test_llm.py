@@ -94,7 +94,7 @@ def test_rp_lsh_candidates_within_probe_distance(spark, sf_dir):
     low RP_PROBE_BITS of the signature) up to hamming distance 1 (the
     multi-probe radius), and ranks must follow cosine."""
     from pyspark.sql import functions as F
-    mask = similarity._RP_PROBE_MASK
+    mask = (1 << similarity.RP_PROBE_BITS) - 1
     e = (similarity.load_table(spark, sf_dir, "embeddings")
          .withColumn("bucket", similarity._bucket_spark("embedding")))
     q_bucket = e.where(

@@ -31,8 +31,10 @@ def spark():
 # --- image_dhash live-path pin (r13 driver-red, VERDICT item 1) -------------
 
 def test_image_dhash_live_path_pinned(spark):
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from tools.check import run_duck, table_hash
 

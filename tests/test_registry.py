@@ -48,11 +48,14 @@ def test_semdedup_cache_is_eager():
 
 
 def test_result_memos_are_session_caches():
-    """The data-test and detection memos are bounded, locked caches,
-    and len() (read by the benchmark's memo probe) counts entries."""
+    """The data-test, detection and bucketed-layout memos are bounded,
+    locked caches, and len() (read by the benchmark's memo probe)
+    counts entries."""
+    from gcp_datalake_utils_spark.functions import scale_demos
     from gcp_datalake_utils_spark.operators import datatest, detection
     from gcp_datalake_utils_spark.session import SessionCache
-    for memo in (datatest._REPORT_CACHE, detection._DETECT_CACHE):
+    for memo in (datatest._REPORT_CACHE, detection._DETECT_CACHE,
+                 scale_demos._BUCKETED):
         assert isinstance(memo, SessionCache)
     c = SessionCache(maxsize=2)
     for k in "abc":

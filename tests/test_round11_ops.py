@@ -313,13 +313,14 @@ def test_quantized_near_dups_match_float_path(spark):
         [(i, [float(x) for x in v], lbl) for i, v, lbl in rows],
         "vec_id long, embedding array<float>, label int")
     quant = {(r.vec_a, r.vec_b): r.cosine
-             for r in similarity._near_dups_quantized_from(e).collect()}
+             for r in similarity._near_dups64_from(e).collect()}
     # the float path explicitly (since round 13 _near_dups64_from
     # routes through quantized_verify by default, so comparing against
     # it would be tautological)
     exact = {(r.vec_a, r.vec_b): r.cosine
              for r in similarity._verify_pairs_arrow(
-                 similarity._cand64_from(e), e, 0.95).collect()}
+                 similarity._banded_candidates(e, 8, 8), e, 0.95)
+             .collect()}
     assert {(100, 101), (102, 103), (104, 105)} <= set(quant)
     assert quant == exact
 

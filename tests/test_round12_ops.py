@@ -248,10 +248,10 @@ def test_sharded_candidates_equal_unsharded(spark, tmp_path):
     base = set(map(tuple, S._banded_candidates(e, bits, bands)
                    .collect()))
     assert base, "need non-empty candidates for a meaningful check"
-    indag = set(map(tuple, S._banded_candidates_sharded(
+    indag = set(map(tuple, S._banded_candidates(
         e, bits, bands, n_shards=4).collect()))
     assert indag == base
-    seq = set(map(tuple, S._banded_candidates_sharded(
+    seq = set(map(tuple, S._banded_candidates(
         e, bits, bands, n_shards=3,
         scratch_dir=str(tmp_path / "cand")).collect()))
     assert seq == base
@@ -270,7 +270,7 @@ def test_sharded_candidates_plan_shape(spark):
     from gcp_datalake_utils_spark.sources import load_table
 
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    df = S._banded_candidates_sharded(e, 8, 8, n_shards=4)
+    df = S._banded_candidates(e, 8, 8, n_shards=4)
     plan = _formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

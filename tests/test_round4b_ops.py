@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from gcp_datalake_utils_spark.llm import lm, paradedup, sampling
@@ -151,19 +152,26 @@ def test_lm_quality_bins_partition_corpus(spark, sf_dir):
         assert hi.worst_lp >= lo.best_lp
 
 
-def test_arrow_bucketizer_matches_jvm_fold(spark, sf_dir):
-    """Every vector must land in the identical 16-plane bucket under
-    the Arrow GEMV path and the JVM HOF fold."""
+@pytest.mark.parametrize("bits,bands", [(16, 1), (32, 2)],
+                         ids=["bucket16", "halves64"])
+def test_rp_signature_matches_jvm_reference(spark, sf_dir, bits, bands):
+    """The one signature kernel puts every vector on the bits of the
+    JVM references: the 16-plane HOF fold's bucket at (16, 1), and the
+    exploded 64-plane aggregate's (b_lo, b_hi) at (32, 2)."""
     from gcp_datalake_utils_spark.llm import similarity
-    from gcp_datalake_utils_spark.sources import load_table
     e = load_table(spark, sf_dir, "embeddings")
-    jvm = {r.vec_id: r.bucket for r in e.select(
-        "vec_id",
-        similarity._bucket_spark("embedding").alias("bucket")).collect()}
-    arrow = {r.vec_id: r.bucket
-             for r in similarity._with_bucket16_arrow(e)
-             .select("vec_id", "bucket").collect()}
-    assert arrow == jvm
+    if bands == 1:
+        jvm = {r.vec_id: [r.bucket] for r in e.select(
+            "vec_id",
+            similarity._bucket_spark("embedding").alias("bucket"))
+            .collect()}
+    else:
+        jvm = {r.vec_id: [r.b_lo, r.b_hi]
+               for r in similarity._bucket64_exploded(e).collect()}
+    got = {r.vec_id: r["keys"] for r in similarity._rp_signature(
+        e.select("vec_id", "label", "embedding"), bits, bands)
+        .select("vec_id", "keys").collect()}
+    assert got == jvm
 
 
 def test_near_dups64_finds_planted_pairs(spark, sf_dir):
@@ -201,21 +209,6 @@ def test_near_dups64_finds_planted_pairs(spark, sf_dir):
         na = math.sqrt(sum(x * x for x in va))
         nb = math.sqrt(sum(x * x for x in vb))
         assert dot / (na * nb) >= 0.95
-
-
-def test_arrow_bucket64_matches_exploded(spark, sf_dir):
-    """The Arrow 64-plane signature halves must equal the exploded
-    codegen-aggregate build for every vector."""
-    from gcp_datalake_utils_spark.llm import similarity
-    from gcp_datalake_utils_spark.sources import load_table
-    e = load_table(spark, sf_dir, "embeddings")
-    jvm = {r.vec_id: (r.b_hi, r.b_lo)
-           for r in similarity._bucket64_exploded(e)
-           .select("vec_id", "b_hi", "b_lo").collect()}
-    arrow = {r.vec_id: (r.b_hi, r.b_lo)
-             for r in similarity._with_bucket64_arrow(e)
-             .select("vec_id", "b_hi", "b_lo").collect()}
-    assert arrow == jvm
 
 
 def test_profile_orders_matches_pandas(spark, sf_dir):

@@ -26,10 +26,17 @@ def _sorted_rows(df):
 
 @pytest.mark.parametrize("name", ["repetition_flags_arrow",
                                   "label_centroids_arrow",
-                                  "embedding_quantize_arrow"])
+                                  "embedding_quantize_arrow",
+                                  "batch_ann_topk",
+                                  "embedding_near_dups_quantized",
+                                  "embedding_near_dups_sharded",
+                                  "semantic_dedup"])
 def test_arrow_kernel_matches_oracle(spark, sf_dir, name):
-    """The single implementation of each fold hotspot hash-matches its
-    DuckDB oracle (tools/check.py's order-insensitive value hash)."""
+    """The single implementation of each Arrow-kernel row hash-matches
+    its DuckDB oracle (tools/check.py's order-insensitive value hash)
+    on a non-empty result: the three fold hotspots, and one row per
+    path of the signature kernel, candidate join and verify (probe
+    buckets, int8 prefilter, sharded join, cluster-labelled bands)."""
     sdf = entry.queries()[name](spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     drows, dcols = run_duck(entry.oracle_sql()[name], sf_dir)

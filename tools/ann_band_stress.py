@@ -9,12 +9,13 @@ Prints one JSON line per corpus:
    "cand_sec":..., "full_sec":..., "pairs":...}
 
 --sharded N (round 12, r11 verdict ask #4): run candidate generation
-through the label-group-sharded SEQUENTIAL path instead — N separate
+through the label-group-sharded SEQUENTIAL path instead
+(`_banded_candidates(..., n_shards=N, scratch_dir=...)`) — N separate
 parquet-committed shard jobs, each bounding peak shuffle/heap to one
 label group's mass. Prints one JSON line PER SHARD with its candidate
 count and per-(label, band, key) block-mass stats, then a total line
-asserting the union equals linear accounting. Skips the verify stage
-(the sharding claim is about candidate-join state).
+with the union's size and the candidate-generation seconds. Skips the
+verify stage (the sharding claim is about candidate-join state).
 """
 
 from __future__ import annotations
@@ -62,38 +63,19 @@ def stress_sharded(spark, sf_dir: str, n_shards: int,
     e = load_table(spark, sf_dir, "embeddings")
     n = e.count()
     bits, bands = S._auto_band_plan(n)
-    # the signature STORE: parquet partitioned by shard, so each shard
-    # job scans only its own files (partition pruning) — the at-scale
-    # layout (a persisted band-key index laid out by label group), and
-    # locally it keeps the 100M+ sig rows OUT of executor memory
-    # (a localCheckpoint here starved execution memory at 16M: the
-    # MEMORY_AND_DISK cache held ~18 GB against a 24 GB heap and the
-    # shard join died with UNABLE_TO_ACQUIRE_MEMORY)
-    sig_loc = f"{scratch}/sig"
+    # the sequential sharded join writes its band-row store to
+    # {scratch}/sig (parquet partitioned by shard, so each shard job
+    # scans only its own files) and each shard's pairs to
+    # {scratch}/shard=<g>; the per-shard stats below read both back
     t0 = time.time()
-    (S._band_key_rows(e, bits, bands)
-     .withColumn("shard", F.pmod(F.col("label"),
-                                 F.lit(n_shards)).cast("int"))
-     .write.mode("overwrite").partitionBy("shard").parquet(sig_loc))
-    print(json.dumps({"sf_dir": sf_dir, "n": n, "bits": bits,
-                      "bands": bands,
-                      "sig_store_sec": round(time.time() - t0, 1)}),
-          flush=True)
-    sig = spark.read.parquet(sig_loc)
+    S._banded_candidates(e, bits, bands, n_shards=n_shards,
+                         scratch_dir=scratch)
+    cand_sec = round(time.time() - t0, 1)
+    sig = spark.read.parquet(f"{scratch}/sig")
     total = 0
     for g in range(n_shards):
         s = sig.where(F.col("shard") == g)
-        a = s.select(F.col("vec_id").alias("vec_a"), "label",
-                     "band", "key")
-        b = s.select(F.col("vec_id").alias("vec_b"), "label",
-                     "band", "key")
-        t0 = time.time()
-        loc = f"{scratch}/shard={g}"
-        (a.join(b, ["label", "band", "key"])
-         .where(F.col("vec_a") < F.col("vec_b"))
-         .select("vec_a", "vec_b", "label").distinct()
-         .write.mode("overwrite").parquet(loc))
-        cand = spark.read.parquet(loc).count()
+        cand = spark.read.parquet(f"{scratch}/shard={g}").count()
         n_vec = s.select("vec_id").distinct().count()
         bstats = (s.groupBy("label", "band", "key")
                   .count().where("count > 1")
@@ -109,11 +91,11 @@ def stress_sharded(spark, sf_dir: str, n_shards: int,
             "cand_per_vec": round(cand / max(n_vec, 1), 1),
             "blocks_ge2": bstats["blocks"],
             "mean_block": bstats["mean_block"],
-            "max_block": bstats["max_block"],
-            "cand_sec": round(time.time() - t0, 1)}), flush=True)
+            "max_block": bstats["max_block"]}), flush=True)
     print(json.dumps({"sf_dir": sf_dir, "n": n,
                       "total_candidates": total,
-                      "n_shards": n_shards}), flush=True)
+                      "n_shards": n_shards,
+                      "cand_sec": cand_sec}), flush=True)
 
 
 def main() -> None:

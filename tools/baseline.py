@@ -14,6 +14,7 @@ need cache priming to be an honest single-run upper bound).
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import threading
@@ -21,9 +22,9 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
-import os
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("SPARK_GRAFT_BASE_RUNS", "3"))
 DUCK_MEM = os.environ.get("SPARK_GRAFT_DUCK_MEM")

@@ -65,12 +65,8 @@ def main() -> None:
                       "bands": bands}), flush=True)
 
     scratch = f"/tmp/qx_cand_{os.getpid()}"
-    sig = S._band_key_rows(e, bits, bands, dims=dims).localCheckpoint()
-    a = sig.selectExpr("vec_id AS vec_a", "label", "band", "key")
-    b = sig.selectExpr("vec_id AS vec_b", "label", "band", "key")
-    (a.join(b, ["label", "band", "key"])
-     .where("vec_a < vec_b").select("vec_a", "vec_b", "label")
-     .distinct().write.mode("overwrite").parquet(scratch))
+    (S._banded_candidates(e, bits, bands, dims=dims)
+     .write.mode("overwrite").parquet(scratch))
     cand = spark.read.parquet(scratch)
     print(json.dumps({"candidates": cand.count()}), flush=True)
 
