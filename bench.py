@@ -58,7 +58,6 @@ HEADLINE = [
     # round-3 additions (snapshot_diff / restore_summary are excluded:
     # they time parquet snapshot WRITES, not query execution)
     "events_in_type_windows",
-    "kmeans_iterate",
     "corpus_mixture",
     "enriched_segment_stream",
     # round-4 additions: production-width signature spaces + nested
@@ -250,8 +249,10 @@ COLLECT_CAP = 100_000
 def prev_slowest_15() -> list[str]:
     """The 15 slowest rows of the newest committed ``BENCH_r<n>.json``
     record (its ``parsed.queries``). They stay on the stdout watchlist
-    so a row that IMPROVES out of the top 15 still prints. Raises on a
-    name that is not in HEADLINE, so a renamed row cannot drop off."""
+    so a row that IMPROVES out of the top 15 still prints. A retired
+    name counts as its survivor (``queries_registry.RETIRED``); any
+    other name not in HEADLINE raises, so a renamed row cannot drop
+    off."""
     rounds = [(int(m.group(1)), name) for name in os.listdir(ROOT)
               if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))]
     if not rounds:
@@ -259,7 +260,14 @@ def prev_slowest_15() -> list[str]:
     newest = max(rounds)[1]
     with open(os.path.join(ROOT, newest)) as f:
         timed = json.load(f)["parsed"]["queries"]
-    slowest = sorted(timed, key=timed.get, reverse=True)[:15]
+    from gcp_datalake_utils_spark.queries_registry import RETIRED
+    slowest: list[str] = []
+    for name in sorted(timed, key=timed.get, reverse=True):
+        name = RETIRED.get(name, name)
+        if name not in slowest:
+            slowest.append(name)
+        if len(slowest) == 15:
+            break
     unknown = [n for n in slowest if n not in HEADLINE]
     if unknown:
         raise ValueError(f"{newest} rows not in HEADLINE: {unknown}")

@@ -22,8 +22,8 @@ Spark-first shape, and why it holds at 100 TB:
    rows — model-sized at any corpus scale) fans out K candidates per
    (vector, subspace) and a partial-aggregated groupBy argmin ships
    ONE row per (vector, subspace); the M-step shuffles
-   |M x K x dims| component rows, never vectors (the
-   ``kmeans_iterate`` discipline, per subspace);
+   |M x K x dims| component rows, never vectors (the discipline of
+   the retired JVM ``kmeans_iterate``, per subspace);
 3. encoding IS the final assignment — codes leave the plan as an
    8-int array per vector, the only thing a production index persists
    (the float corpus is scanned once and never shuffled);

@@ -8,11 +8,13 @@ redundant core).
 
 Spark-first composition of three existing oracled primitives:
 
-- the coarse quantizer is :func:`llm.similarity.kmeans_assign` (one
-  assignment step against the K lowest-vec_id seeds — deterministic,
-  broadcast-seeded, no shuffle beyond one row per vector); its
-  ``cosine`` column IS the centroid-similarity the keep rule ranks on,
-  so no second scoring pass is needed;
+- the coarse quantizer is the k-means assignment kernel
+  (:func:`llm.similarity._assign_clusters`, one Arrow pass against the
+  K lowest-vec_id seeds — deterministic, the centroids a closure
+  constant, no join and no shuffle); it passes ``embedding`` through,
+  so the clustered corpus feeds pair generation with no join back, and
+  its ``cosine`` column IS the centroid-similarity the keep rule ranks
+  on, so no second scoring pass is needed;
 - within-cluster pair generation is the shared banded candidate join
   (:func:`llm.similarity._banded_candidates` at 8 bands of 8 bits)
   with the CLUSTER as the banding label — candidates are an equi-join on
@@ -51,17 +53,6 @@ SEMDEDUP_CC_MAX_ITER = 30
 _SEM_CACHE = SessionCache()
 
 
-def _cluster_labeled(e: DataFrame, assign: DataFrame) -> DataFrame:
-    """(vec_id, label=cluster, embedding): the cluster plays the
-    banding label, so pair generation is cluster-local by
-    construction."""
-    return (e.select("vec_id", "embedding")
-            .join(assign.select("vec_id",
-                                F.col("cluster").alias("label")),
-                  "vec_id")
-            .select("vec_id", "label", "embedding"))
-
-
 def _eps_groups(pairs: DataFrame) -> DataFrame:
     """(vec_id, group_id): connected components of the eps-pair graph
     (shared hash-to-min kernel, llm/cc.py)."""
@@ -83,8 +74,13 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_dedup_from(e: DataFrame) -> DataFrame:
-    assign = sim._kmeans_assign_from(e).localCheckpoint()
-    ec = _cluster_labeled(e, assign)
+    e = e.select("vec_id", "embedding")
+    assign = sim._assign_clusters(e, sim._seed_centroids(e)) \
+        .localCheckpoint()
+    # the cluster plays the banding label, so pair generation is
+    # cluster-local by construction
+    ec = assign.select("vec_id", F.col("cluster").alias("label"),
+                       "embedding")
     cand = sim._banded_candidates(ec, sim.ND64_BITS, sim.ND64_BANDS)
     pairs = sim._verify_pairs_arrow(cand, ec, SEMDEDUP_EPS)
     groups = _eps_groups(pairs)

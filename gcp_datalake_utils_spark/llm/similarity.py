@@ -1,9 +1,13 @@
 """Similarity search over embedding columns (north-star extension).
 
-Embeddings are ``array<float>`` columns; all math runs JVM-side via
-``zip_with``/``aggregate`` fold expressions (cast to double before
-multiply — both engines then agree to ~1e-15, far inside the round-6
-comparison window).
+Embeddings are ``array<float>`` columns. The brute-force and IVF
+cosines run JVM-side as ``zip_with``/``aggregate`` fold expressions
+(cast to double before multiply — both engines then agree to ~1e-15,
+far inside the round-6 comparison window); the random-projection
+signatures (`_rp_signature`), the k-means assignment
+(`_assign_clusters`) and the pair verify (`_verify_pairs_arrow`) are
+numpy kernels over Arrow batches, rounded to 6 before every
+comparison.
 
 - brute-force cosine top-k: one narrow projection + global top-k. At
   100 TB the projection is embarrassingly parallel and top-k is a
@@ -466,50 +470,94 @@ WHERE rank <= {TOP_K}
 
 
 N_CLUSTERS = 8
+_SEEDS_SQL = f"""
+  SELECT CAST(vec_id AS INTEGER) AS cluster, embedding AS centroid
+  FROM embeddings ORDER BY vec_id LIMIT {N_CLUSTERS}"""
+
+
+def _seed_centroids(e: DataFrame) -> list:
+    """The k-means seeds, collected: (cluster, centroid) rows of the
+    N_CLUSTERS lowest vec_ids, each vector its own cluster id."""
+    return (e.orderBy("vec_id").limit(N_CLUSTERS)
+            .select(F.col("vec_id").cast("int").alias("cluster"),
+                    F.col("embedding").alias("centroid"))
+            .collect())
+
+
+def _assign_clusters(e: DataFrame, cents: list) -> DataFrame:
+    """``e``'s columns plus ``cluster`` and ``cosine``: each vector's
+    best centroid among ``cents`` ((cluster, centroid) rows) — the one
+    place the package assigns vectors to centroids. The centroids ride
+    in as a K x D closure constant (model state, never a join) and
+    each Arrow batch scores against them with one numpy GEMM; every
+    column of ``e`` (which must hold ``embedding``, read as one flat
+    buffer D wide) passes through, so callers need no join back to
+    the corpus.
+
+    The cosine is dot / (norm_e * norm_c) rounded to 6 before the
+    argmax (the repo-wide cross-engine float contract), and the
+    centroids are sorted by cluster id so numpy's first-max argmax
+    breaks ties to the lowest cluster, like the oracles'
+    ORDER BY cosine DESC, cluster (`_assign_sql`)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import (DoubleType, IntegerType, StructField,
+                                   StructType)
+
+    cents = sorted(cents, key=lambda r: r["cluster"])
+    ids = np.array([r["cluster"] for r in cents], dtype=np.int32)
+    cm = np.array([r["centroid"] for r in cents], dtype=np.float64)
+    cn = np.sqrt((cm * cm).sum(axis=1))
+    dims = cm.shape[1]
+
+    def assign(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            m = (batch.column("embedding").flatten()
+                 .to_numpy(zero_copy_only=False)
+                 .reshape(n, dims).astype(np.float64))
+            cos = np.round(
+                (m @ cm.T)
+                / (np.sqrt((m * m).sum(axis=1))[:, None] * cn[None, :]),
+                6)
+            best = cos.argmax(axis=1)
+            yield (batch.append_column("cluster", pa.array(ids[best]))
+                   .append_column("cosine",
+                                  pa.array(cos[np.arange(n), best])))
+
+    return e.mapInArrow(assign, StructType(
+        e.schema.fields
+        + [StructField("cluster", IntegerType(), False),
+           StructField("cosine", DoubleType(), False)]))
+
+
+def _assign_sql(cents: str) -> str:
+    """DuckDB twin of ``_assign_clusters`` over ``embeddings``:
+    (vec_id, cluster, cosine) against the (cluster, centroid) relation
+    ``cents``, ties to the lowest cluster."""
+    return f"""
+SELECT vec_id, cluster, cosine FROM (
+  SELECT e.vec_id, s.cluster, {_cos_sql('e.embedding', 's.centroid')}
+           AS cosine
+  FROM embeddings e, {cents} s)
+QUALIFY row_number() OVER (PARTITION BY vec_id
+                           ORDER BY cosine DESC, cluster) = 1"""
 
 
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[Q] one k-means assignment step — the IVF coarse-quantizer
     training primitive. Seeds are the K lowest vec_ids (deterministic);
-    every vector scores against the broadcast seed set (K-row fan-out,
-    no shuffle) and keeps its best cluster via a partial-aggregated
-    groupBy argmax (shuffle carries one row per vector, not K). Cosine
-    is rounded before the argmax so ties break identically on both
-    engines (then lowest cluster id wins)."""
-    return _kmeans_assign_from(load_table(spark, sf_dir, "embeddings"))
-
-
-def _kmeans_assign_from(e: DataFrame) -> DataFrame:
-    seeds = (e.orderBy("vec_id").limit(N_CLUSTERS)
-             .select(F.col("vec_id").alias("cluster"),
-                     F.col("embedding").alias("seed")))
-    sim = F.round(
-        _dot(F.col("embedding"), F.col("seed"))
-        / (_norm(F.col("embedding")) * _norm(F.col("seed"))), 6)
-    best = F.max(F.struct(
-        sim.alias("sim"), (-F.col("cluster")).alias("negc")))
-    return (e.crossJoin(F.broadcast(seeds))
-            .groupBy("vec_id")
-            .agg(best.alias("b"))
-            .select("vec_id",
-                    (-F.col("b.negc")).cast("int").alias("cluster"),
-                    F.col("b.sim").alias("cosine")))
+    every vector keeps its best seed in one Arrow pass, with no fan-out
+    and no shuffle (`_assign_clusters`)."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _assign_clusters(e, _seed_centroids(e)).drop("embedding")
 
 
 KMEANS_ASSIGN_ORACLE = f"""
-WITH seeds AS (
-  SELECT vec_id AS cluster, embedding AS seed
-  FROM embeddings ORDER BY vec_id LIMIT {N_CLUSTERS}
-),
-scored AS (
-  SELECT e.vec_id, s.cluster,
-         {_cos_sql('e.embedding', 's.seed')} AS cosine
-  FROM embeddings e, seeds s
-)
-SELECT vec_id, CAST(cluster AS INTEGER) AS cluster, cosine
-FROM scored
-QUALIFY row_number() OVER (PARTITION BY vec_id
-                           ORDER BY cosine DESC, cluster) = 1
+WITH seeds AS ({_SEEDS_SQL})
+{_assign_sql('seeds')}
 """
 
 
@@ -738,78 +786,13 @@ FROM embeddings e JOIN cent USING (label)
 KMEANS_ITERS = 2
 
 
-def _assign_to(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """Assignment step against a broadcast centroid table: K-row
-    fan-out per vector, groupBy argmax, shuffle carries one row per
-    vector. Cosine rounded before the argmax; ties break to the lowest
-    cluster id on both engines."""
-    sim = F.round(
-        _dot(F.col("embedding"), F.col("centroid"))
-        / (_norm(F.col("embedding")) * _norm(F.col("centroid"))), 6)
-    best = F.max(F.struct(
-        sim.alias("sim"), (-F.col("cluster")).alias("negc")))
-    return (e.crossJoin(F.broadcast(cents))
-            .groupBy("vec_id")
-            .agg(best.alias("b"))
-            .select("vec_id",
-                    (-F.col("b.negc")).cast("int").alias("cluster"),
-                    F.col("b.sim").alias("cosine")))
-
-
-def _update_centroids(e: DataFrame, assign: DataFrame) -> DataFrame:
-    """M-step: component means per cluster via posexplode + partial
-    agg (shuffle is |clusters|x|dims| rows, never vectors), components
-    rounded to 6 so both engines fold identical doubles, centroids
-    re-assembled with a dims-bounded collect_list."""
-    comp = (e.join(assign.select("vec_id", "cluster"), "vec_id")
-            .select("cluster", F.posexplode("embedding").alias("dim", "v"))
-            .groupBy("cluster", "dim")
-            .agg(_davg6(F.col("v")).alias("c")))
-    return (comp.groupBy("cluster")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s["c"]).alias("centroid")))
-
-
-def kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] full Lloyd's k-means, KMEANS_ITERS assignment+update rounds
-    then a final assignment — the iterative-algorithm pattern the IVF
-    coarse quantizer trains with. Each round is one broadcast
-    assignment join plus one |clusters|x|dims| centroid shuffle; the
-    corpus is scanned per round but never shuffled whole. Every
-    intermediate is rounded so the DuckDB oracle (same CTE chain,
-    generated below) stays bit-aligned through both iterations."""
-    from gcp_datalake_utils_spark.sources import scaled_repartition
-    # round 14: every per-iteration consumer (broadcast assignment
-    # join, posexplode M-step) re-scans the corpus; on a single-split
-    # local scan the whole Lloyd chain ran one-core. The fan-out is
-    # hash-safe: assignment argmax is on round-6 cosines with
-    # struct-min ties, centroid means are _davg6 decimal-exact — no
-    # accumulation-order dependence. Measured 2.93 -> 2.38 s at sf0.1.
-    e = scaled_repartition(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding"), "vec_id")
-    cents = (e.orderBy("vec_id").limit(N_CLUSTERS)
-             .select(F.col("vec_id").cast("int").alias("cluster"),
-                     F.col("embedding").alias("centroid")))
-    for _ in range(KMEANS_ITERS):
-        assign = _assign_to(e, cents)
-        cents = _update_centroids(e, assign)
-    return _assign_to(e, cents)
-
-
 def _kmeans_oracle() -> str:
-    cos = _cos_sql("e.embedding", "s.centroid")
-    ctes = [f"""c0 AS (
-  SELECT CAST(vec_id AS INTEGER) AS cluster, embedding AS centroid
-  FROM embeddings ORDER BY vec_id LIMIT {N_CLUSTERS})"""]
+    """Oracle of the Lloyd loop (``kmeans_iterate_arrow``): seeds,
+    then KMEANS_ITERS assignment + exact-decimal mean rounds, then a
+    final assignment."""
+    ctes = [f"c0 AS ({_SEEDS_SQL})"]
     for i in range(KMEANS_ITERS):
-        ctes.append(f"""a{i} AS (
-  SELECT vec_id, cluster FROM (
-    SELECT e.vec_id, s.cluster, {cos} AS cosine
-    FROM embeddings e, c{i} s)
-  QUALIFY row_number() OVER (PARTITION BY vec_id
-                             ORDER BY cosine DESC, cluster) = 1)""")
+        ctes.append(f"a{i} AS ({_assign_sql(f'c{i}')})")
         ctes.append(f"""m{i + 1} AS (
   SELECT a.cluster, d AS dim,
          {_DAVG6_SQL.format(v='e.embedding[d + 1]')} AS c
@@ -821,11 +804,7 @@ def _kmeans_oracle() -> str:
   FROM m{i + 1} GROUP BY cluster)""")
     return f"""
 WITH {','.join(ctes)}
-SELECT vec_id, cluster, cosine FROM (
-  SELECT e.vec_id, s.cluster, {cos} AS cosine
-  FROM embeddings e, c{KMEANS_ITERS} s)
-QUALIFY row_number() OVER (PARTITION BY vec_id
-                           ORDER BY cosine DESC, cluster) = 1
+{_assign_sql(f'c{KMEANS_ITERS}')}
 """
 
 

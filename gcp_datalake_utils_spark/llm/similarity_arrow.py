@@ -32,7 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_datalake_utils_spark.llm.similarity import (
+    KMEANS_ITERS,
     QUERY_VEC_ID,
+    _assign_clusters,
+    _seed_centroids,
     _topk_ranked,
 )
 from gcp_datalake_utils_spark.sources import load_table
@@ -130,86 +133,33 @@ def ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("rank").cast("int").alias("rank")))
 
 
-# --- Arrow-scored Lloyd's k-means (driver-coordinated iterations) ------
-
-
-def _assign_arrow(e: DataFrame, cent_rows) -> DataFrame:
-    """Assignment step as one numpy GEMM per Arrow batch against the
-    collected centroid matrix (K x D closure constant — the same
-    driver-coordinated shape MLlib's KMeans uses: the model state is
-    K*D floats, never a join). Cosine rounded to 6 before the argmax
-    (the repo-wide cross-engine float contract); centroid ids sorted
-    ascending so numpy's first-max argmax breaks ties to the lowest
-    cluster exactly like the JVM struct-max and the oracle's
-    ORDER BY cosine DESC, cluster."""
-    order = sorted(range(len(cent_rows)),
-                   key=lambda i: cent_rows[i]["cluster"])
-    ids = np.array([cent_rows[i]["cluster"] for i in order],
-                   dtype=np.int32)
-    cm = np.stack([np.asarray(cent_rows[i]["centroid"],
-                              dtype=np.float64) for i in order])
-    cn = np.sqrt((cm * cm).sum(axis=1))
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            cos = np.round(
-                (m @ cm.T)
-                / (np.sqrt((m * m).sum(axis=1))[:, None] * cn[None, :]),
-                6)
-            best = cos.argmax(axis=1)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "cluster": ids[best],
-                "cosine": cos[np.arange(len(best)), best],
-            })
-
-    return (e.select("vec_id", "embedding")
-            .mapInPandas(assign, "vec_id long, cluster int, cosine double"))
+# --- Arrow Lloyd's k-means (driver-coordinated iterations) ------------
 
 
 def kmeans_iterate_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] Lloyd's k-means, Arrow-assignment twin of
-    similarity.kmeans_iterate (same oracle — identical result by
-    construction).
+    """[Q] Lloyd's k-means, KMEANS_ITERATE_ORACLE: KMEANS_ITERS
+    assignment + update rounds from the `_seed_centroids` seeds, then
+    a final assignment — the iterative-algorithm pattern the IVF
+    coarse quantizer trains with.
 
-    Two structural changes, same math:
-    1. assignment scores via numpy GEMM instead of the interpreted
-       zip_with/aggregate folds (the documented 3-5x Arrow-kernel win
-       class) and emits the per-vector argmax IN-ROW — no K-row
-       fan-out, no groupBy shuffle;
-    2. each iteration's centroids are COLLECTED to the driver (K x D
-       floats — model state, not data) and re-enter as a closure
-       constant. The declarative chain instead re-executes every
-       prior iteration inside each broadcast build (no DataFrame-level
-       CSE), which multiplies the fold cost ~2-3x at KMEANS_ITERS=2
-       and grows with the iteration count.
+    Each assignment is one `_assign_clusters` Arrow pass, which passes
+    ``embedding`` through, so the M-step (`_centroid_table_arrow`)
+    reads the assigned corpus directly: no join back on vec_id, no
+    K-row fan-out, no argmax shuffle. Each round's centroids are
+    COLLECTED to the driver (K x D floats — model state, not data)
+    and re-enter as a closure constant, so no iteration re-executes
+    inside a later one's plan.
 
     The M-step runs through `_centroid_partials` — exact integer
-    component sums per partition, bit-identical to the JVM `_davg6`
-    decimal fold including HALF_UP on representable ties (the
-    suspect-band Decimal fix-up) — because the JVM posexplode +
-    per-element decimal path measured 10-15 s solo at sf10 and
-    dominated this twin's residual cost."""
-    from gcp_datalake_utils_spark.llm.similarity import (
-        KMEANS_ITERS,
-        N_CLUSTERS,
-    )
-    e = load_table(spark, sf_dir, "embeddings")
-    cents = (e.orderBy("vec_id").limit(N_CLUSTERS)
-             .select(F.col("vec_id").cast("int").alias("cluster"),
-                     F.col("embedding").alias("centroid"))
-             .collect())
+    component sums per partition, bit-identical to the `_davg6`
+    decimal mean of the oracle including HALF_UP on representable
+    ties (the suspect-band Decimal fix-up)."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = _seed_centroids(e)
     for _ in range(KMEANS_ITERS):
-        assign = _assign_arrow(e, cents)
-        # M-step via the Arrow partial-sum kernel (bit-identical to
-        # similarity._update_centroids — see _centroid_partials)
-        joined = e.select("vec_id", "embedding").join(
-            assign.select("vec_id", "cluster"), "vec_id")
-        cents = _centroid_table_arrow(joined, "cluster").collect()
-    return _assign_arrow(e, cents)
+        cents = _centroid_table_arrow(_assign_clusters(e, cents),
+                                      "cluster").collect()
+    return _assign_clusters(e, cents).drop("embedding")
 
 
 # --- Arrow centroid partial sums (k-means M-step, label centroids) ----

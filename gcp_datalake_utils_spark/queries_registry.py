@@ -79,6 +79,16 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame],
         ORACLES[name] = oracle
 
 
+# Retired names -> the registered survivor that carries their oracle:
+# each JVM fold plan was folded into its bit-identical Arrow kernel.
+RETIRED = {
+    "repetition_flags": "repetition_flags_arrow",
+    "label_centroids": "label_centroids_arrow",
+    "embedding_quantize": "embedding_quantize_arrow",
+    "kmeans_iterate": "kmeans_iterate_arrow",
+}
+
+
 # ---------------------------------------------------------------------------
 # The per-round correctness gate hashes only the FIRST 50
 # entries of QUERIES. That window is not set by registration order: the
@@ -442,8 +452,6 @@ register("profile_orders", profile.profile_orders,
          profile.PROFILE_ORDERS_ORACLE)
 register("paragraph_dedup", paradedup.paragraph_dedup,
          paradedup.PARAGRAPH_DEDUP_ORACLE)
-register("kmeans_iterate", similarity.kmeans_iterate,
-         similarity.KMEANS_ITERATE_ORACLE)
 register("funnel_conversion", funnel.funnel_conversion,
          funnel.FUNNEL_CONVERSION_ORACLE)
 register("funnel_completions_stream",

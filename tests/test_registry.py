@@ -12,11 +12,8 @@ sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 import bench  # noqa: E402
+from gcp_datalake_utils_spark.queries_registry import RETIRED  # noqa: E402
 from perfbench.workloads import WORKLOADS, resolve  # noqa: E402
-
-# JVM fold plans folded into their Arrow kernels; each name's oracle
-# now pins the `<name>_arrow` query
-RETIRED = ("repetition_flags", "label_centroids", "embedding_quantize")
 
 
 def test_headline_names_are_registered():
@@ -34,11 +31,11 @@ def test_perfbench_workloads_resolve():
 
 def test_retired_names_absent():
     queries, oracles = entry.queries(), entry.oracle_sql()
-    for name in RETIRED:
+    for name, survivor in RETIRED.items():
         assert name not in queries
         assert name not in oracles
         assert name not in bench.HEADLINE
-        assert f"{name}_arrow" in oracles
+        assert survivor in queries and survivor in oracles
 
 
 def test_semdedup_cache_is_eager():

@@ -24,24 +24,64 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _assert_matches_oracle(spark, sf_dir, name):
+    sdf = entry.queries()[name](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    drows, dcols = run_duck(entry.oracle_sql()[name], sf_dir)
+    assert len(srows) == len(drows) > 0
+    assert table_hash(srows, sdf.columns) == table_hash(drows, dcols)
+
+
 @pytest.mark.parametrize("name", ["repetition_flags_arrow",
                                   "label_centroids_arrow",
                                   "embedding_quantize_arrow",
                                   "batch_ann_topk",
                                   "embedding_near_dups_quantized",
                                   "embedding_near_dups_sharded",
-                                  "semantic_dedup"])
+                                  "semantic_dedup",
+                                  "kmeans_iterate_arrow",
+                                  "similarity_kmeans_assign"])
 def test_arrow_kernel_matches_oracle(spark, sf_dir, name):
     """The single implementation of each Arrow-kernel row hash-matches
     its DuckDB oracle (tools/check.py's order-insensitive value hash)
-    on a non-empty result: the three fold hotspots, and one row per
-    path of the signature kernel, candidate join and verify (probe
-    buckets, int8 prefilter, sharded join, cluster-labelled bands)."""
-    sdf = entry.queries()[name](spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    drows, dcols = run_duck(entry.oracle_sql()[name], sf_dir)
-    assert len(srows) == len(drows) > 0
-    assert table_hash(srows, sdf.columns) == table_hash(drows, dcols)
+    on a non-empty result: the three fold hotspots, one row per path
+    of the signature kernel, candidate join and verify (probe buckets,
+    int8 prefilter, sharded join, cluster-labelled bands), and both
+    callers of the k-means assignment kernel (the Lloyd loop, one
+    assignment against the seeds)."""
+    _assert_matches_oracle(spark, sf_dir, name)
+
+
+@pytest.fixture(scope="module")
+def planted_dir(spark, sf_dir, tmp_path_factory):
+    """sf0.01 (beside the test corpus) with ``embeddings`` replaced by
+    ``_with_planted_twins`` of it and every other table symlinked."""
+    import pyarrow.parquet as pq
+
+    from gcp_datalake_utils_spark.llm import similarity as S
+    from gcp_datalake_utils_spark.sources import load_table
+
+    src = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    d = tmp_path_factory.mktemp("planted")
+    for f in os.listdir(src):
+        if f != "embeddings.parquet":
+            os.symlink(os.path.join(src, f), d / f)
+    e = S._with_planted_twins(load_table(spark, src, "embeddings"))
+    pq.write_table(e.toArrow(), d / "embeddings.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ["batch_ann64_topk",
+                                  "similarity_embedding_near_dups",
+                                  "embedding_near_dups64",
+                                  "embedding_near_dups_auto"])
+def test_rp_lsh_row_matches_oracle_on_planted_twins(spark, planted_dir,
+                                                    name):
+    """The RP-LSH rows that read empty on the random test corpora
+    hash-match their unchanged oracles on a non-empty result once
+    near-dup twins are planted, so their probe and verify stages are
+    checked on real pairs."""
+    _assert_matches_oracle(spark, planted_dir, name)
 
 
 def test_repetition_arrow_no_exchange(spark, sf_dir):
@@ -109,18 +149,6 @@ def test_profile_orders_approx_no_expand(spark, sf_dir):
     assert "SortAggregate" not in plan
 
 
-def test_kmeans_arrow_bit_identical_to_jvm(spark, sf_dir):
-    """The Arrow-assignment k-means must return the identical
-    (vec_id, cluster, cosine) table as the declarative JVM chain —
-    same centroids at every iteration, same final argmax."""
-    from gcp_datalake_utils_spark.llm import similarity, similarity_arrow
-    jvm = _sorted_rows(similarity.kmeans_iterate(spark, sf_dir))
-    arrow = _sorted_rows(
-        similarity_arrow.kmeans_iterate_arrow(spark, sf_dir))
-    assert len(jvm) == len(arrow) > 0
-    assert jvm == arrow
-
-
 def test_kmeans_arrow_final_plan_shape(spark, sf_dir):
     """The returned plan is ONE Arrow pass over the corpus: no
     centroid crossJoin fan-out, no argmax groupBy exchange, no
@@ -128,9 +156,24 @@ def test_kmeans_arrow_final_plan_shape(spark, sf_dir):
     from gcp_datalake_utils_spark.llm import similarity_arrow
     plan = similarity_arrow.kmeans_iterate_arrow(spark, sf_dir) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Exchange" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_kmeans_mstep_plan_has_no_join(spark, sf_dir):
+    """One Lloyd M-step reads the assignment kernel's output, which
+    carries ``embedding`` through: no join back to the corpus."""
+    from gcp_datalake_utils_spark.llm import similarity as sim
+    from gcp_datalake_utils_spark.llm import similarity_arrow as sa
+    from gcp_datalake_utils_spark.sources import load_table
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id",
+                                                       "embedding")
+    step = sa._centroid_table_arrow(
+        sim._assign_clusters(e, sim._seed_centroids(e)), "cluster")
+    plan = step._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "Join" not in plan
 
 
 def test_lm_arrow_bit_identical_to_jvm(spark, sf_dir):

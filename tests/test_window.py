@@ -67,3 +67,12 @@ def test_watchlist_raises_on_name_not_in_headline(tmp_path, monkeypatch):
                                  "retired_row": 2.0})
     with pytest.raises(ValueError, match="retired_row"):
         bench.prev_slowest_15()
+
+
+def test_watchlist_maps_retired_name_to_survivor(tmp_path, monkeypatch):
+    monkeypatch.setattr(bench, "ROOT", str(tmp_path))
+    _bench_record(tmp_path, 14, {"pricing_summary": 1.0,
+                                 "kmeans_iterate": 3.0,
+                                 "kmeans_iterate_arrow": 2.0})
+    assert bench.prev_slowest_15() == ["kmeans_iterate_arrow",
+                                       "pricing_summary"]
