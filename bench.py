@@ -135,15 +135,9 @@ HEADLINE = [
     "bm25_topk",
     "rfm_segments",
     "decontamination_hashed",
-    # round-9 additions: the df-capped BM25 twin and the cohort
-    # pre-agg family benched NEXT TO their anchors (store build lands
-    # in the discarded warm-up, like the bucketed twins), the
-    # sweep-line rolling7, the domain curation family, and the
-    # BPE-currency packing twin
+    # round-9 additions: the df-capped BM25 twin, the domain curation
+    # family, and the BPE-currency packing twin
     "bm25_topk_capped",
-    "retention_cohorts_preagg",
-    "path_transitions_preagg",
-    "active_users_rolling7_sweep",
     "domain_quota_sample",
     "domain_quality_prior",
     "domain_dedup_rollup",
@@ -346,10 +340,12 @@ def main() -> None:
     }
     # full per-query medians go to a sidecar file: the 72-query dict
     # outgrew the driver's 2 KB tail capture in round 7 (BENCH_r07.json
-    # recorded parsed:null), losing the machine-readable record
-    detail_path = os.path.join(ROOT, "bench_detail.json")
-    with open(detail_path, "w") as f:
-        json.dump({**common, "queries": per_query}, f)
+    # recorded parsed:null), losing the machine-readable record. Only a
+    # full-HEADLINE run writes it, so a subset run never replaces the
+    # committed record with a few rows.
+    if not only:
+        with open(os.path.join(ROOT, "bench_detail.json"), "w") as f:
+            json.dump({**common, "queries": per_query}, f)
     # the FINAL stdout line stays compact: headline total + the UNION
     # of {this run's slowest 15} and {the previous round's slowest 15}
     # (r13 verdict ask #9: a row that leaves the top-15 by getting

@@ -79,13 +79,19 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame],
         ORACLES[name] = oracle
 
 
-# Retired names -> the registered survivor that carries their oracle:
-# each JVM fold plan was folded into its bit-identical Arrow kernel.
+# Retired names -> the registered survivor that carries their oracle.
+# The JVM fold plans were folded into their bit-identical Arrow
+# kernels; the cohort twins (store-backed _preagg, sweep-line rolling7)
+# into the plain names, which read the daily-activity store.
 RETIRED = {
     "repetition_flags": "repetition_flags_arrow",
     "label_centroids": "label_centroids_arrow",
     "embedding_quantize": "embedding_quantize_arrow",
     "kmeans_iterate": "kmeans_iterate_arrow",
+    "retention_cohorts_preagg": "retention_cohorts",
+    "path_transitions_preagg": "path_transitions",
+    "active_users_rolling7_preagg": "active_users_rolling7",
+    "active_users_rolling7_sweep": "active_users_rolling7",
 }
 
 
@@ -170,18 +176,6 @@ register("path_transitions", cohort.path_transitions,
 register("rfm_segments", cohort.rfm_segments,
          cohort.RFM_SEGMENTS_ORACLE)
 register("active_users_rolling7", cohort.active_users_rolling7,
-         cohort.ACTIVE_USERS_ROLLING7_ORACLE)
-# round 9: the cohort family over the maintained daily-activity
-# pre-agg (r8 verdict ask #4) — same oracles as the raw-events anchors
-register("retention_cohorts_preagg", cohort.retention_cohorts_preagg,
-         cohort.RETENTION_COHORTS_ORACLE)
-register("path_transitions_preagg", cohort.path_transitions_preagg,
-         cohort.PATH_TRANSITIONS_ORACLE)
-register("active_users_rolling7_preagg",
-         cohort.active_users_rolling7_preagg,
-         cohort.ACTIVE_USERS_ROLLING7_ORACLE)
-register("active_users_rolling7_sweep",
-         cohort.active_users_rolling7_sweep,
          cohort.ACTIVE_USERS_ROLLING7_ORACLE)
 register("daily_activity_cdc", cohort.daily_activity_cdc,
          cohort.DAILY_ACTIVITY_CDC_ORACLE)

@@ -45,7 +45,6 @@ from gcp_datalake_utils_spark.llm.dedup import (
 )
 from gcp_datalake_utils_spark.sources import load_table
 from gcp_datalake_utils_spark.streaming.windows import (
-    _next_sink,
     run_available_now,
 )
 
@@ -98,7 +97,7 @@ def ingest_screen_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(corpus_index, ["band", "band_hash"], "left")
             .groupBy("doc_id")
             .agg(F.count("corpus_doc").alias("n_band_hits")))
-    out = run_available_now(hits, _next_sink())
+    out = run_available_now(hits)
     return out.select("doc_id", "n_band_hits",
                       (F.col("n_band_hits") > 0).alias("screened"))
 

@@ -32,7 +32,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from gcp_datalake_utils_spark.streaming.windows import (
     _event_stream,
-    _next_sink,
     run_available_now,
 )
 
@@ -106,8 +105,7 @@ def closed_sessions_stream_q(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """[Q] drained closed sessions (every session except each user's
     final open one), with stats session_window can't produce."""
-    out = run_available_now(
-        closed_sessions_stream(spark, sf_dir), _next_sink())
+    out = run_available_now(closed_sessions_stream(spark, sf_dir))
     return out.select("user_id", "session_start", "n_events",
                       "n_event_types", "duration_secs",
                       F.round("session_value", 6).alias("session_value"))
@@ -226,8 +224,7 @@ def funnel_completions_stream_q(spark: SparkSession,
     happen instead of recomputed per batch. Unlike the sessionizer
     there is no open-tail caveat: a completion is final the moment the
     purchase lands, so stream output == batch chain exactly."""
-    out = run_available_now(
-        funnel_completions_stream(spark, sf_dir), _next_sink())
+    out = run_available_now(funnel_completions_stream(spark, sf_dir))
     return out.select("user_id", "t_view", "t_click", "t_purchase",
                       "total_secs")
 

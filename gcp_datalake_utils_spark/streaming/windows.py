@@ -16,6 +16,8 @@ stream holds only the open windows.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,28 +79,26 @@ def dedup_stream(spark: SparkSession, sf_dir: str,
             .dropDuplicatesWithinWatermark(["event_id"]))
 
 
-def run_available_now(stream_df: DataFrame, name: str) -> DataFrame:
+def run_available_now(stream_df: DataFrame) -> DataFrame:
     """Drain the stream to a memory sink (test harness): processes all
-    available input as micro-batches, then stops."""
+    available input as micro-batches, then stops. The sink gets a
+    unique name, and its catalog view is dropped once the result frame
+    is bound, so repeated drains leave no tables behind; the frame
+    keeps the sink's rows alive."""
+    name = f"stream_q_{uuid.uuid4().hex}"
     q = (stream_df.writeStream.format("memory").queryName(name)
          .outputMode("append" if not stream_df.isStreaming
                      else "complete" if _has_agg(stream_df) else "append")
          .trigger(availableNow=True).start())
     q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    spark = stream_df.sparkSession
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def _has_agg(df: DataFrame) -> bool:
     return "Aggregate" in df._jdf.queryExecution().logical().toString()
-
-
-_Q_SEQ = 0
-
-
-def _next_sink() -> str:
-    global _Q_SEQ
-    _Q_SEQ += 1
-    return f"stream_q_{_Q_SEQ}"
 
 
 def windowed_counts_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,8 +106,7 @@ def windowed_counts_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a memory sink and flattened for the oracle: identical Catalyst
     expressions to the batch twin (events_hourly minus the countDistinct,
     which streaming aggs don't support), so batch SQL is the oracle."""
-    out = run_available_now(
-        windowed_counts_stream(spark, sf_dir), _next_sink())
+    out = run_available_now(windowed_counts_stream(spark, sf_dir))
     return out.select(
         F.date_format("window.start", "yyyy-MM-dd HH:mm:ss")
         .alias("hour_start"),
@@ -135,8 +134,7 @@ def sliding_counts_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "2 hours", "1 hour"), "event_type")
         .agg(F.count("*").alias("n_events"),
-             F.round(F.sum("value"), 6).alias("total_value")),
-        _next_sink())
+             F.round(F.sum("value"), 6).alias("total_value")))
     return out.select(
         F.date_format("window.start", "yyyy-MM-dd HH:mm:ss")
         .alias("window_start"),
@@ -172,7 +170,7 @@ def dedup_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = (e.withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark(
               ["user_id", "event_type", "hour_start"]))
-    out = run_available_now(dd, _next_sink())
+    out = run_available_now(dd)
     return out.select("user_id", "event_type", "hour_start")
 
 
@@ -203,8 +201,7 @@ def enriched_segment_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour"), "segment")
         .agg(F.count("*").alias("n_events"),
-             F.round(F.sum("value"), 6).alias("total_value")),
-        _next_sink())
+             F.round(F.sum("value"), 6).alias("total_value")))
     return out.select(
         F.date_format("window.start", "yyyy-MM-dd HH:mm:ss")
         .alias("hour_start"),
@@ -252,8 +249,7 @@ def click_attribution_stream_q(spark: SparkSession,
     out = run_available_now(
         joined.select("purchase_id", "click_id", "user_id",
                       F.round("purchase_value", 6)
-                      .alias("purchase_value")),
-        _next_sink())
+                      .alias("purchase_value")))
     return out
 
 
@@ -336,8 +332,7 @@ def daily_activity_stream_q(spark: SparkSession,
     RECOMPUTE SQL — stream state == batch recompute, hash-exactly
     (window('1 day') aligns to session-tz midnight, matching the
     batch side's to_date)."""
-    out = run_available_now(
-        daily_activity_stream(spark, sf_dir), _next_sink())
+    out = run_available_now(daily_activity_stream(spark, sf_dir))
     return out.select(
         "user_id",
         F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
@@ -394,7 +389,7 @@ def daily_activity_store_append(spark: SparkSession,
     agg = (tail.groupBy("user_id", F.window("ts", "1 day").alias("w"))
            .agg(F.min(evs).alias("mn"), F.max(evs).alias("mx"),
                 F.count("*").alias("n_events")))
-    drained = (run_available_now(agg, _next_sink())
+    drained = (run_available_now(agg)
                .select("user_id",
                        F.col("w.start").cast("date").alias("day"),
                        F.col("mn")["event_type"].alias("first_type"),

@@ -52,6 +52,16 @@ def test_arrow_kernel_matches_oracle(spark, sf_dir, name):
     _assert_matches_oracle(spark, sf_dir, name)
 
 
+@pytest.mark.parametrize("name", ["retention_cohorts",
+                                  "path_transitions",
+                                  "active_users_rolling7"])
+def test_cohort_store_matches_oracle(spark, sf_dir, name):
+    """The cohort family's single implementation of each oracle reads
+    the daily-activity store, and still hash-matches the DuckDB oracle
+    over raw events."""
+    _assert_matches_oracle(spark, sf_dir, name)
+
+
 @pytest.fixture(scope="module")
 def planted_dir(spark, sf_dir, tmp_path_factory):
     """sf0.01 (beside the test corpus) with ``embeddings`` replaced by

@@ -1,5 +1,5 @@
 """Round-9 operators: df-capped BM25 twin, budgeted LM model,
-fused multi-branch distributed ntile, cohort pre-agg twins, domain
+fused multi-branch distributed ntile, cohort store plans, domain
 curation family, BPE packing twin."""
 
 from __future__ import annotations
@@ -164,7 +164,7 @@ def test_ntile_multi_matches_sql_ntile(spark):
     assert got == exp
 
 
-# --- daily-activity pre-agg family (r8 verdict ask #4) ----------------------
+# --- cohort family over the daily-activity store (r8 verdict ask #4) --------
 
 def test_preagg_cohort_plans_have_no_user_exchange(spark, sf_dir):
     """The whole point of the bucketed store: per-user agg/join/window
@@ -172,10 +172,9 @@ def test_preagg_cohort_plans_have_no_user_exchange(spark, sf_dir):
     re-exchange. Retention's shape is additionally Sort-free."""
     from gcp_datalake_utils_spark.operators import cohort
 
-    for fn, sortfree in [(cohort.retention_cohorts_preagg, True),
-                         (cohort.path_transitions_preagg, False),
-                         (cohort.active_users_rolling7_preagg, False),
-                         (cohort.active_users_rolling7_sweep, False)]:
+    for fn, sortfree in [(cohort.retention_cohorts, True),
+                         (cohort.path_transitions, False),
+                         (cohort.active_users_rolling7, False)]:
         df = fn(spark, sf_dir)
         df.collect()
         plan = _executed_plan(df)
@@ -183,17 +182,7 @@ def test_preagg_cohort_plans_have_no_user_exchange(spark, sf_dir):
         assert "Exchange rangepartitioning" not in plan, fn
         if sortfree:
             assert "+- Sort" not in plan and "+- *(1) Sort" not in plan, \
-                "retention pre-agg must be hash-agg + hash-join, no Sort"
-
-
-def test_rolling7_sweep_matches_fanout(spark, sf_dir):
-    from gcp_datalake_utils_spark.operators import cohort
-
-    a = {tuple(r) for r in
-         cohort.active_users_rolling7_sweep(spark, sf_dir).collect()}
-    b = {tuple(r) for r in
-         cohort.active_users_rolling7(spark, sf_dir).collect()}
-    assert a == b and len(a) > 0
+                "retention_cohorts must be hash-agg + hash-join, no Sort"
 
 
 def test_daily_activity_store_one_file_per_bucket(spark, sf_dir):

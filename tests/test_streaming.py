@@ -10,8 +10,7 @@ from gcp_datalake_utils_spark.streaming import windows as sw
 
 
 def test_windowed_counts_match_batch(spark, sf_dir):
-    stream_out = sw.run_available_now(
-        sw.windowed_counts_stream(spark, sf_dir), "t_hourly")
+    stream_out = sw.run_available_now(sw.windowed_counts_stream(spark, sf_dir))
     batch = (load_events(spark, sf_dir)
              .groupBy(F.window("ts", "1 hour"), "event_type")
              .agg(F.count("*").alias("n_events")))
@@ -23,7 +22,7 @@ def test_windowed_counts_match_batch(spark, sf_dir):
 
 
 def test_streaming_dedup_drops_nothing_on_unique_ids(spark, sf_dir):
-    out = sw.run_available_now(sw.dedup_stream(spark, sf_dir), "t_dedup")
+    out = sw.run_available_now(sw.dedup_stream(spark, sf_dir))
     n_in = load_events(spark, sf_dir).count()
     assert out.count() == n_in  # event_id is unique in the testdata
 
@@ -72,3 +71,15 @@ def test_funnel_stream_matches_batch_counts(spark, sf_dir):
     for r in stream_rows:
         assert r.t_view <= r.t_click <= r.t_purchase
         assert r.total_secs >= 0
+
+
+def test_repeated_drains_leave_no_catalog_tables(spark, sf_dir):
+    """Each drain drops its memory-sink view once the result frame is
+    bound: N drains leave the catalog as they found it, and every
+    drain's frame still reads the same rows."""
+    before = len(spark.catalog.listTables())
+    results = [sorted(tuple(r) for r in
+                      sw.windowed_counts_stream_q(spark, sf_dir).collect())
+               for _ in range(3)]
+    assert len(spark.catalog.listTables()) == before
+    assert results[0] and results[0] == results[1] == results[2]
