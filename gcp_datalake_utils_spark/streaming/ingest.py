@@ -45,25 +45,16 @@ from gcp_datalake_utils_spark.llm.dedup import (
 )
 from gcp_datalake_utils_spark.sources import load_table
 from gcp_datalake_utils_spark.streaming.windows import (
+    _stream_dir,
     run_available_now,
 )
 
 
 def _doc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents layout (same symlink-dir
-    trick as the event stream; the file source needs a directory)."""
-    import hashlib
-    import os
-    src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    d = os.path.join(
-        "/tmp", "spark_graft_streams",
-        hashlib.md5(src.encode()).hexdigest()[:12])
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.lexists(link):
-        os.symlink(src, link)
+    """File-source stream over the documents layout."""
     schema = load_table(spark, sf_dir, "documents").schema
-    return spark.readStream.schema(schema).parquet(d)
+    return (spark.readStream.schema(schema)
+            .parquet(_stream_dir(sf_dir, "documents")))
 
 
 def _row_local_band_keys(docs: DataFrame) -> DataFrame:

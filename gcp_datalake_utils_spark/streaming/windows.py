@@ -11,11 +11,15 @@ differ).
 Run model: file-source streams over the parquet layout with
 ``Trigger.AvailableNow`` drain-and-stop (test mode) or continuous
 micro-batches (production); watermarks bound state so a 100 TB/day
-stream holds only the open windows.
+stream holds only the open windows. A drain runs
+``min(spark.sql.shuffle.partitions, defaultParallelism)`` state
+partitions (see ``run_available_now``): the session's shuffle setting
+is the ceiling, the cluster's task slots the cap.
 """
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,23 +32,24 @@ SESSION_GAP = "15 minutes"
 _SESSION_GAP_SQL = "INTERVAL 15 MINUTE"
 
 
-def _stream_dir(sf_dir: str) -> str:
+def _stream_dir(sf_dir: str, table: str) -> str:
     """The file stream source requires a directory; expose the single
-    events.parquet file through a per-sf symlink dir under /tmp."""
+    ``<table>.parquet`` file through a per-(sf, table) symlink dir
+    under /tmp."""
     import hashlib
     import os
     # abspath: a RELATIVE sf_dir would otherwise produce a symlink that
     # resolves relative to the link's own directory — dangling, so the
-    # stream reads 0 rows and exists() (which follows links) says False
-    # and re-links into EEXIST. lexists() tests the link itself.
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    # stream reads 0 rows.
+    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
     d = os.path.join(
         "/tmp", "spark_graft_streams",
         hashlib.md5(src.encode()).hexdigest()[:12])
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.lexists(link):
-        os.symlink(src, link)
+    try:
+        os.symlink(src, os.path.join(d, f"{table}.parquet"))
+    except FileExistsError:
+        pass  # linked earlier, or by a concurrent process
     return d
 
 
@@ -53,7 +58,7 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch loader does."""
     schema = load_table(spark, sf_dir, "events").schema
     raw = (spark.readStream.schema(schema)
-           .parquet(_stream_dir(sf_dir)))
+           .parquet(_stream_dir(sf_dir, "events")))
     return event_ts_to_micros(raw)
 
 
@@ -79,22 +84,45 @@ def dedup_stream(spark: SparkSession, sf_dir: str,
             .dropDuplicatesWithinWatermark(["event_id"]))
 
 
+# Held across a drain's conf save / set / start / restore, so two
+# concurrent drains cannot leave the session at the reduced value.
+_DRAIN_START_LOCK = threading.Lock()
+
+
 def run_available_now(stream_df: DataFrame) -> DataFrame:
     """Drain the stream to a memory sink (test harness): processes all
     available input as micro-batches, then stops. The sink gets a
     unique name, and its catalog view is dropped once the result frame
-    is bound, so repeated drains leave no tables behind; the frame
-    keeps the sink's rows alive."""
-    name = f"stream_q_{uuid.uuid4().hex}"
-    q = (stream_df.writeStream.format("memory").queryName(name)
-         .outputMode("append" if not stream_df.isStreaming
-                     else "complete" if _has_agg(stream_df) else "append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    is bound (or the drain fails), so drains leave no tables behind;
+    the frame keeps the sink's rows alive.
+
+    State partitions: a stateful query fixes its state-partition count
+    at ``start()`` from ``spark.sql.shuffle.partitions``, and AQE never
+    coalesces stateful stages, so partitions beyond the task slots only
+    add task waves and state-store commits. The query therefore starts
+    with that conf at ``min(<session value>, defaultParallelism)``, and
+    the session's value is restored as soon as ``start()`` returns."""
     spark = stream_df.sparkSession
-    out = spark.table(name)
-    spark.catalog.dropTempView(name)
-    return out
+    name = f"stream_q_{uuid.uuid4().hex}"
+    writer = (stream_df.writeStream.format("memory").queryName(name)
+              .outputMode("complete" if _has_agg(stream_df) else "append")
+              .trigger(availableNow=True))
+    key = "spark.sql.shuffle.partitions"
+    with _DRAIN_START_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(min(
+            int(prev), spark.sparkContext.defaultParallelism)))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set(key, prev)
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        if q.isActive:
+            q.stop()
+        spark.catalog.dropTempView(name)
 
 
 def _has_agg(df: DataFrame) -> bool:

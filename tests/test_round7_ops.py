@@ -62,6 +62,23 @@ def test_cohort_store_matches_oracle(spark, sf_dir, name):
     _assert_matches_oracle(spark, sf_dir, name)
 
 
+@pytest.mark.parametrize("name", ["windowed_counts_stream",
+                                  "sliding_counts_stream",
+                                  "dedup_stream",
+                                  "enriched_segment_stream",
+                                  "click_attribution_stream",
+                                  "daily_activity_stream",
+                                  "daily_activity_store_stream",
+                                  "closed_sessions_stream",
+                                  "funnel_completions_stream",
+                                  "ingest_screen_stream"])
+def test_stream_drain_matches_oracle(spark, sf_dir, name):
+    """Every row drained through ``run_available_now`` hash-matches its
+    DuckDB oracle on a non-empty result, so the drain's state-partition
+    count never shows in a result."""
+    _assert_matches_oracle(spark, sf_dir, name)
+
+
 @pytest.fixture(scope="module")
 def planted_dir(spark, sf_dir, tmp_path_factory):
     """sf0.01 (beside the test corpus) with ``embeddings`` replaced by

@@ -3,6 +3,8 @@ sessions — streaming results must match their batch twins."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from gcp_datalake_utils_spark.sources import load_events
@@ -83,3 +85,77 @@ def test_repeated_drains_leave_no_catalog_tables(spark, sf_dir):
                for _ in range(3)]
     assert len(spark.catalog.listTables()) == before
     assert results[0] and results[0] == results[1] == results[2]
+
+
+def _shuffle_conf(spark):
+    return spark.conf.get("spark.sql.shuffle.partitions")
+
+
+def test_drain_runs_one_state_partition_per_task_slot(spark, sf_dir):
+    """A drain's stateful stage runs min(session shuffle partitions,
+    defaultParallelism) state partitions, and the session's conf reads
+    the same after the drain as before it."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class StateParts(StreamingQueryListener):
+        def __init__(self):
+            self.parts = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators
+            if ops:
+                self.parts.append(ops[0].numShufflePartitions)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    before = _shuffle_conf(spark)
+    listener = StateParts()
+    spark.streams.addListener(listener)
+    try:
+        assert sw.windowed_counts_stream_q(spark, sf_dir).count() > 0
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert _shuffle_conf(spark) == before
+    want = min(int(before), spark.sparkContext.defaultParallelism)
+    assert listener.parts and set(listener.parts) == {want}
+
+
+def test_concurrent_drains_restore_conf(spark, sf_dir):
+    """Two drains started from two threads both restore the session's
+    shuffle conf and return the same rows."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    before = _shuffle_conf(spark)
+
+    def drain(_):
+        return sorted(tuple(r) for r in
+                      sw.windowed_counts_stream_q(spark, sf_dir).collect())
+
+    with ThreadPoolExecutor(2) as pool:
+        a, b = pool.map(drain, range(2), timeout=600)
+    assert _shuffle_conf(spark) == before
+    assert a and a == b
+
+
+def test_failing_drain_raises_and_leaves_no_sink(spark, sf_dir):
+    """A drain whose micro-batch fails raises, stops its query, drops
+    its memory-sink view and restores the shuffle conf."""
+    before_tables = sorted(t.name for t in spark.catalog.listTables())
+    before_conf = _shuffle_conf(spark)
+    bad = sw._event_stream(spark, sf_dir).select(
+        F.raise_error(F.lit("boom")).alias("x"))
+    with pytest.raises(StreamingQueryException):
+        sw.run_available_now(bad)
+    assert sorted(t.name for t in spark.catalog.listTables()) \
+        == before_tables
+    assert _shuffle_conf(spark) == before_conf
+    assert not any(q.name and q.name.startswith("stream_q_")
+                   for q in spark.streams.active)
