@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from gcp_datalake_utils_spark.sources import local_frame
+
 # ---------------------------------------------------------------------------
 # meta_tables: (dataset_id, table_id, table_ord, table_type, num_rows,
 #               num_bytes)
@@ -461,7 +463,7 @@ def meta_tables_df(spark: SparkSession) -> DataFrame:
     """meta_tables with both the canonical ``labels_str`` and a native
     ``labels`` MAP<STRING,STRING> column (models.py:66)."""
     from pyspark.sql import functions as F
-    return (spark.createDataFrame(META_TABLES_EXT, _TABLES_SCHEMA)
+    return (local_frame(spark, META_TABLES_EXT, _TABLES_SCHEMA)
             .withColumn(
                 "labels",
                 F.when(F.col("labels_str") == "",
@@ -470,15 +472,15 @@ def meta_tables_df(spark: SparkSession) -> DataFrame:
 
 
 def meta_columns_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(META_COLUMNS_EXT, _COLUMNS_SCHEMA)
+    return local_frame(spark, META_COLUMNS_EXT, _COLUMNS_SCHEMA)
 
 
 def custom_rules_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CUSTOM_RULES, _RULES_SCHEMA)
+    return local_frame(spark, CUSTOM_RULES, _RULES_SCHEMA)
 
 
 def naming_patterns_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(NAMING_PATTERNS, _PATTERNS_SCHEMA)
+    return local_frame(spark, NAMING_PATTERNS, _PATTERNS_SCHEMA)
 
 
 _STATE_SCHEMA = T.StructType([
@@ -490,7 +492,7 @@ _STATE_SCHEMA = T.StructType([
 
 def proc_state_df(spark: SparkSession) -> DataFrame:
     from pyspark.sql import functions as F
-    return (spark.createDataFrame(PROC_STATE, _STATE_SCHEMA)
+    return (local_frame(spark, PROC_STATE, _STATE_SCHEMA)
             .withColumn("last_processed", F.to_timestamp("last_processed")))
 
 
@@ -508,5 +510,5 @@ _CACHE_SCHEMA = T.StructType([
 
 def rel_cache_df(spark: SparkSession) -> DataFrame:
     from pyspark.sql import functions as F
-    return (spark.createDataFrame(REL_CACHE, _CACHE_SCHEMA)
+    return (local_frame(spark, REL_CACHE, _CACHE_SCHEMA)
             .withColumn("cached_at", F.to_timestamp("cached_at")))

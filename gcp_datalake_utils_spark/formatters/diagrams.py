@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from gcp_datalake_utils_spark.catalog import fixtures as fx
 from gcp_datalake_utils_spark.operators.classify import classified_columns
 from gcp_datalake_utils_spark.operators.detection import detect_all
+from gcp_datalake_utils_spark.sources import local_frame
 
 _CONNECTOR = (
     "CASE relationship_type "
@@ -239,8 +240,8 @@ def drawio_lines(spark: SparkSession,
         '      <mxCell id="0"/>',
         '      <mxCell id="1" parent="0"/>',
     ]
-    header = spark.createDataFrame(
-        [(0, i, 0, s) for i, s in enumerate(hdr)],
+    header = local_frame(
+        spark, [(0, i, 0, s) for i, s in enumerate(hdr)],
         "k1 int, k2 int, k3 int, line string")
     counts = (cls.groupBy("table_ord")
               .agg(F.count("*").alias("n_cols"))
@@ -279,8 +280,8 @@ def drawio_lines(spark: SparkSession,
                  F.lit('"><mxGeometry relative="1" as="geometry"/>'
                        '</mxCell>')).alias("line"))
     ftr = ['    </root></mxGraphModel>', '  </diagram>', '</mxfile>']
-    footer = spark.createDataFrame(
-        [(3, i, 0, s) for i, s in enumerate(ftr)],
+    footer = local_frame(
+        spark, [(3, i, 0, s) for i, s in enumerate(ftr)],
         "k1 int, k2 int, k3 int, line string")
     return _numbered([header, t_cells, rel_cells, footer])
 

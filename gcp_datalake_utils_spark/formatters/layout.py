@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from gcp_datalake_utils_spark.catalog import fixtures as fx
 from gcp_datalake_utils_spark.operators.detection import detect_all
 from gcp_datalake_utils_spark.operators.graph import bfs_levels
+from gcp_datalake_utils_spark.sources import local_frame
 
 FORCE_ITERATIONS = 10
 REPULSION = 1000.0
@@ -141,7 +142,7 @@ def force_layout_coords(spark: SparkSession) -> DataFrame:
     pos = force_positions(spark)
     rows = [(t, round(x, 3), round(y, 3))
             for t, (x, y) in sorted(pos.items())]
-    return spark.createDataFrame(rows, "table_id string, x double, y double")
+    return local_frame(spark, rows, "table_id string, x double, y double")
 
 
 def _force_layout_oracle() -> str:

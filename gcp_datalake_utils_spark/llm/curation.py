@@ -27,7 +27,7 @@ from gcp_datalake_utils_spark.llm.text import (
     token_stats,
 )
 from gcp_datalake_utils_spark.session import SessionCache, session_key
-from gcp_datalake_utils_spark.sources import load_table
+from gcp_datalake_utils_spark.sources import load_table, local_frame
 
 ALLOWED_LANGS = ["en", "de", "fr", "zh", "he"]
 
@@ -214,8 +214,8 @@ def _budget_prefix(spark: SparkSession, stats: DataFrame) -> DataFrame:
     if cutoff_ppm is None:
         cutoff_ppm = min(hist) if hist else 0
     included = [(p, prefix[p]) for p in prefix]
-    pref_df = F.broadcast(spark.createDataFrame(
-        included, "ppm long, prior_acc long"))
+    pref_df = F.broadcast(local_frame(
+        spark, included, "ppm long, prior_acc long"))
     w = (Window.partitionBy("ppm").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (stats.where(F.col("ppm") >= cutoff_ppm)

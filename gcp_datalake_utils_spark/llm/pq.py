@@ -56,7 +56,7 @@ from gcp_datalake_utils_spark.llm.similarity import (
     _DAVG6_SQL,
 )
 from gcp_datalake_utils_spark.session import SessionCache, session_key
-from gcp_datalake_utils_spark.sources import load_table
+from gcp_datalake_utils_spark.sources import load_table, local_frame
 
 PQ_M = 8        # subspaces
 PQ_SUB = 8      # dims per subspace (PQ_M * PQ_SUB = 64 = N_DIMS)
@@ -212,7 +212,7 @@ def _pq_train_sampled(e: DataFrame):
       HALF_UP round-6;
     - codes with no members drop out of the table, exactly like the
       groupBy M-step.
-    The trained codebook re-enters as a <= M x K-row createDataFrame
+    The trained codebook re-enters as a <= M x K-row local_frame
     (float64 -> DoubleType is exact); the full-corpus encode is the
     unchanged JVM _pq_assign. Bit-identity to the r13 declarative
     chain is pytest-pinned (tests/test_r14_optimizations.py) and the
@@ -280,8 +280,8 @@ def _pq_train_sampled(e: DataFrame):
         books = nxt
     cent_rows = [(m, int(c), [float(v) for v in books[m][c]])
                  for m in range(PQ_M) for c in sorted(books[m])]
-    cents = spark.createDataFrame(
-        cent_rows, "m int, code int, centroid array<double>")
+    cents = local_frame(
+        spark, cent_rows, "m int, code int, centroid array<double>")
     return cents, _pq_assign(_subvectors(e), cents)
 
 

@@ -38,7 +38,7 @@ from gcp_datalake_utils_spark.llm.similarity import (
     _seed_centroids,
     _topk_ranked,
 )
-from gcp_datalake_utils_spark.sources import load_table
+from gcp_datalake_utils_spark.sources import load_table, local_frame
 
 _SCHEMA = "vec_id long, label int, cosine double"
 
@@ -431,9 +431,9 @@ def embedding_decontamination(spark: SparkSession,
         # undefined and the -2.0 sentinel must never leak — the
         # oracle's cross join also yields zero rows, so return the
         # matching empty frame rather than np.stack crashing.
-        return spark.createDataFrame(
-            [], "vec_id long, max_sim double, n_hits long, "
-                "contaminated boolean")
+        return local_frame(
+            spark, [], "vec_id long, max_sim double, n_hits long, "
+                       "contaminated boolean")
     B = np.stack([np.asarray(r[0], dtype=np.float64) for r in bench])
     bn = np.sqrt((B * B).sum(axis=1))
     # kernel memory contract: the similarity matrix is NEVER

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_datalake_utils_spark.llm.terms import doc_term_pairs
-from gcp_datalake_utils_spark.sources import load_table
+from gcp_datalake_utils_spark.sources import load_table, local_frame
 
 # --- HyperLogLog ----------------------------------------------------------
 
@@ -98,8 +98,8 @@ def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = (vals.select("col_name", reg.alias("reg"), rho.alias("rho"))
             .groupBy("col_name", "reg")
             .agg(F.max("rho").alias("mx")))
-    cols = spark.createDataFrame(
-        [(c,) for _, c in _HLL_COLS], "col_name string")
+    cols = local_frame(
+        spark, [(c,) for _, c in _HLL_COLS], "col_name string")
     grid = (spark.range(HLL_M)
             .select(F.col("id").cast("int").alias("reg"))
             .crossJoin(F.broadcast(cols)))

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
-from gcp_datalake_utils_spark.sources import load_table
+from gcp_datalake_utils_spark.sources import load_table, local_frame
 from gcp_datalake_utils_spark.session import SessionCache, session_key
 
 # (src_table, src_col, tgt_table, tgt_col) relationship specs tested by
@@ -172,10 +172,13 @@ def _report_for_specs(spark: SparkSession, sf_dir: str,
     # always-1-row sa/sb CTEs, not vanish
     # (no broadcast hint: meta is the preserved side of both left
     # joins, which Spark cannot build, so the hint was only a WARN)
-    meta = spark.createDataFrame(
+    # spec is int, the type of _freq's F.lit(i) tag, so the joins
+    # compare without a cast
+    meta = local_frame(
+        spark,
         [(i, f"{st}.{sc}->{tt}.{tc}", type_compat_score(sty, tty))
          for i, (st, sc, tt, tc, sty, tty) in enumerate(specs)],
-        ["spec", "relationship", "tscore"])
+        "spec int, relationship string, tscore double")
     row = (meta.join(totals, "spec", "left").join(stats, "spec", "left")
            .withColumn("na_distinct",
                        F.coalesce(F.col("na_distinct"), F.lit(0)))

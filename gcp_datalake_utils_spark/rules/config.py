@@ -152,6 +152,7 @@ def rules_file_source(spark) -> "object":
     catalog fixtures, SURVEY §2 S2/S3)."""
     import os
 
+    from gcp_datalake_utils_spark.sources import local_frame
     from gcp_datalake_utils_spark.sources.scratch import pid_scratch
 
     d = pid_scratch("/tmp/spark_graft_rules", "default")
@@ -159,9 +160,9 @@ def rules_file_source(spark) -> "object":
     with open(path, "w", encoding="utf-8") as f:
         json.dump(to_reference_dict(DEFAULT), f)
     parsed = PatternConfig.from_json(path)
-    return spark.createDataFrame(
-        _rule_rows(parsed), "rule_kind string, scope string, "
-                            "pattern string")
+    return local_frame(
+        spark, _rule_rows(parsed), "rule_kind string, scope string, "
+                                   "pattern string")
 
 
 def _rules_file_oracle() -> str:

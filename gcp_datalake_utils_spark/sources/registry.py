@@ -2,8 +2,17 @@
 
 Mirrors the reference's catalog scan surface (S1-S4,
 ``bigquery_connector.py:63-240`` in /root/reference/bigquery-to-erd) as
-plain ``spark.read.parquet`` + temp-view registration: table enumeration is
+plain parquet reads + temp-view registration: table enumeration is
 ``spark.catalog.listTables``, schema read is ``df.schema``.
+
+Frames enter the engine two ways, neither with a hidden job:
+
+- ``load_table`` infers a table file's schema once per session and
+  file version and reads under that pinned schema afterwards (Spark's
+  parquet inference is a job even for one file);
+- ``local_frame`` turns driver-side rows into an Arrow table, which
+  Spark plans as a ``LocalTableScan`` (no Python RDD, no Python
+  worker per scan).
 
 At 100 TB these reads are partitioned parquet scans; nothing here collects
 data to the driver.
@@ -14,6 +23,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
+
+from gcp_datalake_utils_spark.session import SessionCache, session_key
 
 TABLE_NAMES = [
     "region", "nation", "customer", "supplier", "part",
@@ -22,10 +34,21 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# inferred table schemas, keyed on the session and the file's version
+_SCHEMAS = SessionCache(maxsize=64)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Column pruning + predicate pushdown reach
     the parquet scan because this returns the raw lazy reader output.
+
+    The file's schema is inferred once per session and file version
+    (``_SCHEMAS``, keyed on the path's mtime, size and inode: a
+    rewritten file, or a dataset directory whose entries changed, is
+    inferred again), and every call reads under that pinned schema, so
+    only the first call pays Spark's inference job. The schema is
+    memoized, not the frame: each call gets fresh attribute ids, so two
+    loads of one table self-join without ambiguity.
 
     ``nanosAsLong`` is set here (runtime-settable) rather than only in the
     session factory so events.parquet — which carries TIMESTAMP(NANOS)
@@ -37,7 +60,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the HOST JVM's default zone, diverging from the tz-naive oracle."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    schema = _SCHEMAS.get_or_build(
+        (session_key(spark), path, st.st_mtime_ns, st.st_size, st.st_ino),
+        lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType | str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``
+    order; ``schema`` a StructType or a DDL string).
+
+    The rows become a ``pyarrow.Table`` typed by the schema, which
+    Spark turns into a JVM ``LocalRelation`` while it stays under
+    ``spark.sql.execution.arrow.localRelationThreshold``: each scan is
+    a ``LocalTableScan`` on the driver, not a pickled Python RDD that
+    starts a Python worker per partition. Metadata-scale frames only
+    (catalog fixtures, trained codebooks, small summaries)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    table = pa.Table.from_pydict(
+        {f.name: [r[i] for r in rows] for i, f in enumerate(schema.fields)},
+        schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def event_ts_to_micros(df: DataFrame) -> DataFrame:

@@ -27,6 +27,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gcp_datalake_utils_spark.sources.registry import local_frame
+
 
 def _version_dir(base: str, table: str, epoch_ms: int) -> str:
     return os.path.join(base, table, f"v={epoch_ms}")
@@ -230,8 +232,8 @@ def restore_dataset(spark: SparkSession, base: str, tables: list[str],
     return the per-table outcome DataFrame."""
     rows = [restore_table(spark, base, t, epoch_ms, target_base, force)
             for t in tables]
-    return spark.createDataFrame(
-        [(r["table_id"], r["status"], r["reason"]) for r in rows],
+    return local_frame(
+        spark, [(r["table_id"], r["status"], r["reason"]) for r in rows],
         "table_id string, status string, reason string")
 
 
@@ -364,8 +366,8 @@ def retention_policy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     for day, hour in _RETENTION_EPOCHS:
         write_snapshot(one, base, "region",
                        day * _DAY_MS + hour * 3_600_000)
-    versions = spark.createDataFrame(
-        [(int(v),) for v in list_versions(base, "region")],
+    versions = local_frame(
+        spark, [(int(v),) for v in list_versions(base, "region")],
         "epoch_ms long")
     v = versions.withColumn("day", (F.col("epoch_ms") / _DAY_MS)
                             .cast("long"))
