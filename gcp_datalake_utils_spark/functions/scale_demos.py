@@ -37,12 +37,10 @@ def revenue_by_nation_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region")
     fact = li.join(o, li["l_orderkey"] == o["o_orderkey"])
     joined = salted_join(fact, c, "o_custkey", n=8)
-    return (joined
-            .join(F.broadcast(n),
-                  joined["c_nationkey"] == n["n_nationkey"])
-            .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-            .groupBy("r_name", "n_name")
-            .agg(*payload.revenue_agg_exprs()))
+    return payload.revenue_rollup(
+        joined
+        .join(F.broadcast(n), joined["c_nationkey"] == n["n_nationkey"])
+        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"]))
 
 
 def events_by_type_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,15 +121,15 @@ def revenue_by_nation_bucketed(spark: SparkSession,
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    return (li.join(o, li["l_orderkey"] == o["o_orderkey"])
-            .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-            .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-            .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-            .groupBy("r_name", "n_name")
-            .agg(*payload.revenue_agg_exprs()))
+    return payload.revenue_rollup(
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
+        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"]))
 
 
-# line revenue as exact BIGINT 1e-4 units: payload._dsum's per-row term
+# line revenue as exact BIGINT 1e-4 units: payload._dterm_sql, the
+# unit term payload._dsum sums
 _REVENUE_UNITS = payload._dterm_sql(
     "l_extendedprice * (1 - l_discount)", 4)
 

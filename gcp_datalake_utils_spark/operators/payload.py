@@ -31,11 +31,32 @@ _LIMB = 10 ** 9
 
 def _dterm_sql(expr: str, scale: int) -> str:
     """round(expr, s) as an exact BIGINT count of 10^-s units: the
-    per-row term of :func:`_dsum`. Spark's double round(x, s) yields
-    the double nearest the decimal D it rounded to; scaling that by
-    10^s lands within |D·10^s|·2^-52 of the integer D·10^s, so rint
-    recovers it exactly while |D·10^s| < 2^51."""
-    return f"CAST(rint(round({expr}, {scale}) * {10 ** scale}) AS BIGINT)"
+    per-row unit term that :func:`_dsum` sums.
+
+    Slow path (the definition): Spark's double round(x, s) is
+    ``BigDecimal.valueOf(x).setScale(s, HALF_UP).doubleValue()``, a
+    BigDecimal round trip per row; it yields the double nearest the
+    decimal D it rounded to, scaling that by 10^s lands within
+    |D·10^s|·2^-52 of the integer D·10^s, so rint recovers it exactly
+    while |D·10^s| < 2^51.
+
+    Fast path, bit-identical to it: let y = x·10^s in double. When
+    |y| < 2^40 and |y| is more than 1e-3 from a half-integer, the term
+    is rint(y). Proof: ``BigDecimal.valueOf`` rounds the decimal d of
+    ``Double.toString(x)``, which parses back to x, so |d - x| <=
+    ulp(x)/2 and |d·10^s - x·10^s| <= 10^s·ulp(x)/2 < ulp(y); the
+    multiply adds at most ulp(y)/2, so |d·10^s - y| <= 1.5·ulp(y) <=
+    1.5·2^-12 < 3.7e-4 while |y| < 2^40. HALF_UP rounds d·10^s to
+    D·10^s and rint rounds y, each to its nearest integer; y is more
+    than 1e-3 from a tie, so both land on the same integer. Near-ties,
+    larger magnitudes, NaN, ±Inf and NULL fail the guard and take the
+    slow path, keeping its results and its ANSI errors."""
+    y = f"(({expr}) * {10 ** scale})"
+    return (f"CAST(CASE WHEN abs({y}) < {2 ** 40}"
+            f" AND abs(abs({y}) - floor(abs({y})) - 0.5D) > 1e-3D"
+            f" THEN rint({y})"
+            f" ELSE rint(round({expr}, {scale}) * {10 ** scale}) END"
+            " AS BIGINT)")
 
 
 def _dunits_sql(units: str, scale: int) -> str:
@@ -45,8 +66,22 @@ def _dunits_sql(units: str, scale: int) -> str:
             " AS DECIMAL(38,6))")
 
 
-def _dsum(expr: str, scale: int):
-    """Order-independent exact sum of round(expr, s), as DECIMAL(38,6).
+def _with_units(df: DataFrame, **terms: tuple[str, int]) -> DataFrame:
+    """``df`` plus one BIGINT unit column per ``name=(expr, s)``: the
+    exact term round(expr, s)·10^s (:func:`_dterm_sql`), projected once
+    below the aggregate whose :func:`_dsum` calls read it. Summing the
+    term inline would copy its CASE into each limb of each sum;
+    projected, every row evaluates each distinct term once. One
+    ``selectExpr`` parses every term in a single driver round trip."""
+    return df.selectExpr("*", *(f"{_dterm_sql(e, s)} AS {name}"
+                                for name, (e, s) in terms.items()))
+
+
+def _dsum(units: str, scale: int) -> str:
+    """Order-independent exact sum of round(expr, s), as DECIMAL(38,6),
+    from the BIGINT unit column ``units`` that :func:`_with_units`
+    projected for (expr, s). Spark SQL, like :func:`_dstr` and
+    :func:`_dsum_dbl`; the ``*_sql`` helpers are their DuckDB oracles.
 
     Contract: the result equals the DECIMAL sum of the per-row
     round(x, s) values exactly — the value the oracle's
@@ -57,26 +92,24 @@ def _dsum(expr: str, scale: int):
     at sf1 sum_charge carries 17 significant digits, more than a
     double holds (hence the DECIMAL / string outputs below).
 
-    Kernel: each row becomes v = round(x, s)·10^s as BIGINT
-    (:func:`_dterm_sql`), split into limbs lo = pmod(v, 10^9) and
-    hi = (v - lo) div 10^9, and each limb is summed on a primitive
-    long buffer — no per-row BigDecimal add. The group's total
-    hi_sum·10^9 + lo_sum is rebuilt once per group as DECIMAL(38,0)
-    and divided exactly by 10^s. Headroom: terms are exact while
-    |v| < 2^51; lo_sum (each lo < 10^9) stays exact up to ~9e9 rows
-    per group and hi_sum (|hi| < 2.3e6) far beyond, whereas a single
-    BIGINT sum of v would overflow sum_charge near sf15. An overflow
-    raises under ANSI mode; it never wraps silently. NULL rows add
-    nothing and an all-NULL group sums to NULL.
+    Kernel: each row's unit v = round(x, s)·10^s is split into limbs
+    lo = pmod(v, 10^9) and hi = (v - lo) div 10^9, and each limb is
+    summed on a primitive long buffer — no per-row BigDecimal add. The
+    group's total hi_sum·10^9 + lo_sum is rebuilt once per group as
+    DECIMAL(38,0) and divided exactly by 10^s. Headroom: terms are
+    exact while |v| < 2^51; lo_sum (each lo < 10^9) stays exact up to
+    ~9e9 rows per group and hi_sum (|hi| < 2.3e6) far beyond, whereas
+    a single BIGINT sum of v would overflow sum_charge near sf15. An
+    overflow raises under ANSI mode; it never wraps silently. NULL
+    rows add nothing and an all-NULL group sums to NULL.
 
-    ``expr`` is Spark SQL, like the oracle helpers' argument: the
-    kernel is parsed as one expression, which costs a fraction of the
-    driver round trips that composing it from Column calls does."""
-    v = _dterm_sql(expr, scale)
-    lo = f"pmod({v}, {_LIMB})"
-    hi = f"({v} - {lo}) div {_LIMB}"
-    return F.expr(_dunits_sql(
-        f"CAST(sum({hi}) AS DECIMAL(38,0)) * {_LIMB} + sum({lo})", scale))
+    Callers parse each aggregate column, cast and alias included, as
+    one ``F.expr``: a fraction of the driver round trips that composing
+    it from Column calls costs."""
+    lo = f"pmod({units}, {_LIMB})"
+    hi = f"({units} - {lo}) div {_LIMB}"
+    return _dunits_sql(
+        f"CAST(sum({hi}) AS DECIMAL(38,0)) * {_LIMB} + sum({lo})", scale)
 
 
 def _dsum_sql(expr: str, scale: int) -> str:
@@ -84,7 +117,7 @@ def _dsum_sql(expr: str, scale: int) -> str:
             f"AS DECIMAL(18,{scale})) ) AS DECIMAL(38,6))")
 
 
-def _dstr(expr: str, scale: int):
+def _dstr(units: str, scale: int) -> str:
     """_dsum presented as its canonical string.
 
     The driver's value hasher normalizes DECIMAL differently from
@@ -97,20 +130,20 @@ def _dstr(expr: str, scale: int):
     STRING cast is byte-identical on both engines ("123.456000", full
     scale, verified) — the one presentation that is simultaneously
     exact, partition-order-independent, and hashable by any harness."""
-    return _dsum(expr, scale).cast("string")
+    return f"CAST({_dsum(units, scale)} AS STRING)"
 
 
 def _dstr_sql(expr: str, scale: int) -> str:
     return f"CAST({_dsum_sql(expr, scale)} AS VARCHAR)"
 
 
-def _dsum_dbl(expr: str, scale: int):
+def _dsum_dbl(units: str, scale: int) -> str:
     """Double-valued exact sum for RATIO numerators (avg columns): safe
     while the scaled sum stays below 2^53 (true through sf100 for these
     columns — both engines then cast the exact decimal to the identical
     nearest double); the plain sums use _dsum's decimal output
     instead, which has no such bound."""
-    return _dsum(expr, scale).cast("double")
+    return f"CAST({_dsum(units, scale)} AS DOUBLE)"
 
 
 def _dsum_dbl_sql(expr: str, scale: int) -> str:
@@ -126,34 +159,37 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of partition count and merge order at any scale."""
     li = load_table(spark, sf_dir, "lineitem")
     disc = "l_extendedprice * (1 - l_discount)"
-    charge = f"{disc} * (1 + l_tax)"
-    cnt = F.count("*")
-    # round 14: the partial-agg pass ran on ONE core on single-split
-    # local scans; every output column folds exactly (_dsum limbs,
-    # counts), so the conditional fan-out is hash-safe at any core
-    # count. Filter stays below the exchange (pushdown intact);
-    # projection shrinks the exchange to the 7 used columns.
-    # Measured 2.55 -> 1.13 s at sf0.1 (same-session A/B).
+    # scaled_repartition fans the scan out only when the probe counts
+    # fewer splits than cores. It counts byte splits: on 4 cores
+    # lineitem's single row group reads as 4 splits, so the fan-out is
+    # skipped and one task scans and pre-aggregates every row. Forcing
+    # it measured slower at sf0.1 (0.47 -> 0.68 s warm median, same
+    # session). Every output column folds exactly (_dsum limbs,
+    # counts), so a fan-out that does fire is hash-safe at any core
+    # count. The filter stays below any exchange (pushdown intact);
+    # the select keeps the 7 used columns.
     src = scaled_repartition(
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .select("l_returnflag", "l_linestatus", "l_orderkey",
                 "l_quantity", "l_extendedprice", "l_discount", "l_tax"),
         "l_orderkey")
+    # five unit columns: the sum and avg of a column share one
     return (
-        src
+        _with_units(src, qty=("l_quantity", 2),
+                    price=("l_extendedprice", 2),
+                    disc_price=(disc, 4),
+                    charge=(f"{disc} * (1 + l_tax)", 6),
+                    discount=("l_discount", 2))
         .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            _dstr("l_quantity", 2).alias("sum_qty"),
-            _dstr("l_extendedprice", 2).alias("sum_base_price"),
-            _dstr(disc, 4).alias("sum_disc_price"),
-            _dstr(charge, 6).alias("sum_charge"),
-            F.round(_dsum_dbl("l_quantity", 2) / cnt, 6)
-            .alias("avg_qty"),
-            F.round(_dsum_dbl("l_extendedprice", 2) / cnt, 6)
-            .alias("avg_price"),
-            F.round(_dsum_dbl("l_discount", 2) / cnt, 6)
-            .alias("avg_disc"),
-            cnt.alias("count_order")))
+        .agg(*map(F.expr, (
+            f"{_dstr('qty', 2)} AS sum_qty",
+            f"{_dstr('price', 2)} AS sum_base_price",
+            f"{_dstr('disc_price', 4)} AS sum_disc_price",
+            f"{_dstr('charge', 6)} AS sum_charge",
+            f"round({_dsum_dbl('qty', 2)} / count(*), 6) AS avg_qty",
+            f"round({_dsum_dbl('price', 2)} / count(*), 6) AS avg_price",
+            f"round({_dsum_dbl('discount', 2)} / count(*), 6) AS avg_disc",
+            "count(*) AS count_order"))))
 
 
 PRICING_SUMMARY_ORACLE = f"""
@@ -184,11 +220,12 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE switches to shuffle-hash when it outgrows the threshold. The big
     lineitem⋈orders join shuffles on orderkey — co-partitioned if both
     are bucketed by orderkey at write time (the 100 TB layout)."""
-    # round 14: fan the lineitem side out by the JOIN key — the same
-    # exchange the orderkey join needs anyway, so on the local
-    # single-split corpus this parallelizes the scan+join at the cost
-    # of zero extra shuffles at scale (revenue folds _dsum limbs —
-    # hash-safe at any core count). Measured 2.89 -> 1.49 s at sf0.1.
+    # fan the lineitem side out by the JOIN key — the same exchange the
+    # orderkey join needs anyway, so at scale it costs zero extra
+    # shuffles (revenue folds _dsum limbs — hash-safe at any core
+    # count). It fires only when the probe counts fewer byte splits
+    # than cores: on 4 cores sf0.1 lineitem reads as 4 splits, so it is
+    # skipped there and one task scans the single row group.
     li = scaled_repartition(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount"),
@@ -197,23 +234,25 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    return (
+    return revenue_rollup(
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .groupBy("r_name", "n_name")
-        .agg(*revenue_agg_exprs()))
+        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"]))
 
 
-def revenue_agg_exprs() -> list:
-    """The revenue rollup shared by revenue_by_nation and its salted /
-    bucketed twins: exact fixed-point summation (_dsum) so all three
-    partitionings hash-match the one oracle at every scale."""
-    return [_dstr("l_extendedprice * (1 - l_discount)", 4)
-            .alias("revenue"),
-            F.count("*").alias("n_items"),
-            F.countDistinct("o_orderkey").alias("n_orders")]
+def revenue_rollup(joined: DataFrame) -> DataFrame:
+    """The (region, nation) revenue rollup shared by revenue_by_nation
+    and its salted / bucketed twins: the line's revenue unit column is
+    projected once above the joins, then summed exactly (_dsum), so all
+    three partitionings hash-match the one oracle at every scale."""
+    return (_with_units(joined,
+                        rev=("l_extendedprice * (1 - l_discount)", 4))
+            .groupBy("r_name", "n_name")
+            .agg(*map(F.expr, (
+                f"{_dstr('rev', 4)} AS revenue",
+                "count(*) AS n_items",
+                "count(DISTINCT o_orderkey) AS n_orders"))))
 
 
 REVENUE_BY_NATION_ORACLE = f"""

@@ -18,14 +18,19 @@ On Delta-capable clusters the same API maps 1:1 to ``timestampAsOf`` /
 ``RESTORE TABLE``; versions here are explicit so behavior is
 deterministic and testable. Version listing touches only directory
 names — no data files are opened until the chosen version is read.
+Each version carries its frame's schema in ``_schema.json`` (Spark's
+reader skips ``_``-prefixed files), so a read plans under that schema
+and runs no schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from gcp_datalake_utils_spark.sources.registry import local_frame
 
@@ -48,12 +53,29 @@ def list_versions(base: str, table: str) -> list[int]:
     return sorted(out)
 
 
+_SCHEMA_FILE = "_schema.json"
+
+
 def write_snapshot(df: DataFrame, base: str, table: str,
                    epoch_ms: int | None = None) -> int:
-    """S8: persist a new snapshot version; returns its epoch_ms."""
+    """S8: persist a new snapshot version and its schema; returns its
+    epoch_ms."""
     epoch_ms = int(time.time() * 1000) if epoch_ms is None else epoch_ms
-    df.write.mode("overwrite").parquet(_version_dir(base, table, epoch_ms))
+    path = _version_dir(base, table, epoch_ms)
+    df.write.mode("overwrite").parquet(path)
+    with open(os.path.join(path, _SCHEMA_FILE), "w") as f:
+        f.write(df.schema.json())
     return epoch_ms
+
+
+def _read_snapshot(spark: SparkSession, base: str, table: str,
+                   epoch_ms: int) -> DataFrame:
+    """One version, read under the schema ``write_snapshot`` stored
+    beside it."""
+    path = _version_dir(base, table, epoch_ms)
+    with open(os.path.join(path, _SCHEMA_FILE)) as f:
+        schema = StructType.fromJson(json.load(f))
+    return spark.read.schema(schema).parquet(path)
 
 
 def _to_epoch_ms(ts: int | str) -> int:
@@ -78,7 +100,7 @@ def read_as_of(spark: SparkSession, base: str, table: str,
     if not versions:
         raise FileNotFoundError(
             f"no snapshot of {table} at or before {epoch_ms}")
-    return spark.read.parquet(_version_dir(base, table, versions[-1]))
+    return _read_snapshot(spark, base, table, versions[-1])
 
 
 def read_version(spark: SparkSession, base: str, table: str,
@@ -93,7 +115,7 @@ def read_version(spark: SparkSession, base: str, table: str,
     except IndexError:
         raise FileNotFoundError(
             f"{table} has {len(versions)} versions; no ordinal {version}")
-    return spark.read.parquet(_version_dir(base, table, epoch_ms))
+    return _read_snapshot(spark, base, table, epoch_ms)
 
 
 def snapshot_diff(spark: SparkSession, base: str, table: str,

@@ -453,18 +453,55 @@ def _exchanges(df) -> dict[str, int]:
     return out
 
 
+def _partial_sum_input(df) -> tuple:
+    """(the Partial HashAggregate's sum inputs, the Project below it):
+    the stage where each row's exact unit terms are evaluated."""
+    for node in _plan_nodes(df):
+        if node.nodeName() != "HashAggregate":
+            continue
+        aggs = node.aggregateExpressions()
+        sums = [aggs.apply(i).aggregateFunction() for i in range(aggs.size())
+                if aggs.apply(i).mode().toString() == "Partial"
+                and aggs.apply(i).aggregateFunction().prettyName() == "sum"]
+        if sums:
+            return [f.children().apply(0) for f in sums], \
+                node.children().apply(0)
+    raise AssertionError("no partial sum")
+
+
 def test_exact_sums_run_on_long_buffers(spark, sf_dir):
     """pricing_summary and revenue_by_nation sum through the fixed-point
     kernel (payload._dsum): every partial sum buffer is a BIGINT, never
     a per-row DECIMAL accumulator, and the exchanges are the ones the
-    decimal-buffer plans had."""
-    for fn, want in ((payload.pricing_summary,
-                      {"ENSURE_REQUIREMENTS": 1}),
-                     (payload.revenue_by_nation,
-                      {"ENSURE_REQUIREMENTS": 1, "BroadcastExchange": 4})):
+    decimal-buffer plans had. Each distinct unit term (payload._dterm_sql,
+    one ``round(`` on its slow path) is evaluated once per row, in the
+    Project below the partial aggregate, whose sums read the projected
+    unit columns and nothing else."""
+    for fn, want, units in (
+            (payload.pricing_summary, {"ENSURE_REQUIREMENTS": 1},
+             {"qty", "price", "disc_price", "charge", "discount"}),
+            (payload.revenue_by_nation,
+             {"ENSURE_REQUIREMENTS": 1, "BroadcastExchange": 4},
+             {"rev"})):
         df = fn(spark, sf_dir)
         types = _partial_sum_buffer_types(df)
         assert types and set(types) == {"long"}, (fn.__name__, types)
         got = _exchanges(df)
         assert got.pop("REPARTITION_BY_NUM", 0) <= 1, fn.__name__
         assert got == want, (fn.__name__, got)
+        inputs, below = _partial_sum_input(df)
+        assert below.nodeName() == "Project", (fn.__name__,
+                                                below.nodeName())
+        plist = below.projectList()
+        projected = [plist.apply(i) for i in range(plist.size())]
+        assert sum(e.toString().count("round(") for e in projected) \
+            == len(units), fn.__name__
+        made = {e.exprId().id() for e in projected
+                if "round(" in e.toString() and e.name() in units}
+        assert len(made) == len(units), fn.__name__
+        for expr in inputs:
+            refs = expr.references().toSeq()
+            read = [refs.apply(i) for i in range(refs.size())]
+            assert "round(" not in expr.toString(), (fn.__name__, expr)
+            assert read and all(a.exprId().id() in made for a in read), \
+                (fn.__name__, expr.toString())

@@ -103,3 +103,29 @@ def test_snapshot_diff_schema_evolution(spark, tmp_path):
     # via the dropped column only (added is NULL both effectively)
     assert got[1] == "changed"
     assert got[2] == "changed"
+
+
+def test_snapshot_read_runs_no_job(spark, tmp_path):
+    """A read after a write plans under the schema stored with the
+    version: neither reader launches a schema-inference job, and the
+    rows and column types come back as written."""
+    import uuid
+    from pyspark.sql import Row
+    base = str(tmp_path / "snaps")
+    df = spark.createDataFrame(
+        [Row(k=1, v="a", x=1.5), Row(k=2, v=None, x=None)])
+    sn.write_snapshot(df, base, "t", epoch_ms=1000)
+    sc = spark.sparkContext
+    for read in (lambda: sn.read_as_of(spark, base, "t", 1500),
+                 lambda: sn.read_version(spark, base, "t", -1)):
+        group = f"snap-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            got = read()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+        assert [(f.name, f.dataType) for f in got.schema] == \
+            [(f.name, f.dataType) for f in df.schema]
+        assert sorted(got.collect()) == sorted(df.collect())
