@@ -91,11 +91,9 @@ HEADLINE = [
     "zorder_layout",
     # evolving_read excluded: it times parquet snapshot WRITES (same
     # rule as snapshot_diff / restore_summary)
-    # round-5 additions: the bucketed fact-join twin benched NEXT TO
-    # the shuffle plan (the 100 TB layout story), the native-sketch
-    # HLL twin, and the hash-agg bounded-prefix profile
+    # round-5 additions: the native-sketch HLL twin and the hash-agg
+    # bounded-prefix profile
     # (drawio_erd_lines excluded: metadata-scale, constant-time)
-    "revenue_by_nation_bucketed",
     "hll_distinct_native",
     "profile_orders_fast",
     # round-7 additions: the Arrow kernels for interpreted-fold
@@ -121,13 +119,11 @@ HEADLINE = [
     "dedup_incremental",
     "corpus_budget_selection",
     # round-8 additions: the scale twins that close the r7 weak rows
-    # (pre-agg revenue, pruned LM, auto-band near-dups, bucket-local
-    # nesting) benched NEXT TO their anchors, plus the cohort family
-    # (r7 verdict ask #8: active_users_rolling7 had no bench row)
-    "revenue_by_nation_preagg",
+    # (pruned LM, auto-band near-dups) benched NEXT TO their anchors,
+    # plus the cohort family (r7 verdict ask #8:
+    # active_users_rolling7 had no bench row)
     "lm_doc_scores_pruned",
     "embedding_near_dups_auto",
-    "order_lines_nested_bucketed",
     "retention_cohorts",
     "path_transitions",
     "active_users_rolling7",
@@ -153,11 +149,9 @@ HEADLINE = [
     "source_length_deciles_approx",
     # round-10 additions: substring-span dedup removal + rollup, the
     # broadcast-vocab BPE family (pair counts anchor, trained-vocab
-    # token stats, real-BPE packing twin), the approx-distinct twin
-    # that closes the revenue_by_nation_preagg book (benched NEXT TO
-    # its exact anchor), and the unpruned DPP control — the
-    # pruned-vs-unpruned Spark delta is the DPP row's headline
-    # measurement (r9 verdict ask #6), not the DuckDB ratio.
+    # token stats, real-BPE packing twin), and the unpruned DPP
+    # control — the pruned-vs-unpruned Spark delta is the DPP row's
+    # headline measurement (r9 verdict ask #6), not the DuckDB ratio.
     # daily_activity_store_stream is excluded: it times bucketed store
     # WRITES plus the stream drain (same rule as snapshot_diff /
     # restore_summary / evolving_read).
@@ -166,7 +160,6 @@ HEADLINE = [
     "bpe_pair_counts",
     "bpe_token_stats",
     "sequence_packing_bpe_real",
-    "revenue_by_nation_approx",
     "events_dpp_join_unpruned",
     # incremental embedding admission (signature-store build lands in
     # the discarded warm-up, like the other _ensure stores)

@@ -1,15 +1,7 @@
-"""Oracle-checked twins of headline queries routed through the scale
-utilities (``functions/skew.py``, ``sources/bucketing.py``) — proof the
-100 TB paths produce byte-identical results, not just plausible ones.
-
-- salted revenue: the customer dimension join runs as an 8-way salted
-  join (the broadcast-ineligible power-law-key case) — same output as
-  ``payload.revenue_by_nation``, same oracle.
-- two-phase hourly: per-type event totals via (key, salt) partial
-  aggregation then key merge — the single-hot-group case.
-- bucketed revenue: lineitem/orders persisted bucketed by orderkey, the
-  fact-fact join planned shuffle-free on the bucketed layout (written
-  once per session; at 100 TB this is the write-time layout decision).
+"""Oracle-checked demo of a headline aggregate routed through the skew
+utilities (``functions/skew.py``): per-type event totals via (key,
+salt) partial aggregation then key merge — the single-hot-group case —
+byte-identical to the plain aggregate's oracle, not just plausible.
 """
 
 from __future__ import annotations
@@ -17,30 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_datalake_utils_spark.functions.skew import (
-    salted_join,
-    two_phase_agg,
-)
-from gcp_datalake_utils_spark.operators import payload
-from gcp_datalake_utils_spark.sources import load_events, load_table
-from gcp_datalake_utils_spark.sources.bucketing import write_bucketed
-from gcp_datalake_utils_spark.session import SessionCache, session_key
-
-
-def revenue_by_nation_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] revenue_by_nation with the customer join salted 8 ways."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = (load_table(spark, sf_dir, "customer")
-         .withColumnRenamed("c_custkey", "o_custkey"))
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    fact = li.join(o, li["l_orderkey"] == o["o_orderkey"])
-    joined = salted_join(fact, c, "o_custkey", n=8)
-    return payload.revenue_rollup(
-        joined
-        .join(F.broadcast(n), joined["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"]))
+from gcp_datalake_utils_spark.functions.skew import two_phase_agg
+from gcp_datalake_utils_spark.sources import load_events
 
 
 def events_by_type_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,173 +39,3 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """
-
-# layout memo: one bucketed write per (session, sf_dir)
-_BUCKETED = SessionCache()
-
-
-def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> None:
-    """Write the bucketed lineitem/orders layout once per session.
-
-    pid-scoped path: concurrent processes (driver gate + local bench)
-    must not overwrite each other's bucketed store; atexit-removed +
-    dead-pid orphans swept (sources/scratch.py). Bucketed AND sorted:
-    sorted buckets let a merge join read both sides in key order — no
-    per-query Sort under the SMJ (at 100 TB the sort, like the
-    shuffle, belongs in the write-time layout, not in every query)."""
-    def _build() -> str:
-        from gcp_datalake_utils_spark.sources.scratch import pid_scratch
-        loc = pid_scratch("/tmp/spark_graft_bucketed", sf_dir)
-        write_bucketed(
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_linenumber", "l_quantity",
-                    "l_extendedprice", "l_discount"),
-            "bk_lineitem", "l_orderkey", buckets=32,
-            sort_cols=["l_orderkey"], path=loc)
-        write_bucketed(
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey"),
-            "bk_orders", "o_orderkey", buckets=32,
-            sort_cols=["o_orderkey"], path=loc)
-        return loc
-
-    _BUCKETED.get_or_build((session_key(spark), sf_dir), _build)
-
-
-def revenue_by_nation_bucketed(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """[Q] revenue_by_nation over lineitem/orders persisted bucketed by
-    orderkey (32 buckets — matched to local[32]; at scale, sized so a bucket is one executor-core work unit) — the fact-fact join plans with no Exchange on
-    either side. The bucketed layout is written once per session
-    (at scale it is the table's write-time layout, not a per-query
-    cost)."""
-    _ensure_bucketed(spark, sf_dir)
-    li = spark.table("bk_lineitem")
-    # SHUFFLE_HASH on the smaller bucketed side: with co-located
-    # buckets there is no Exchange either way, but the per-bucket hash
-    # build+probe measured 2.4x faster than the sort-merge scan at sf1
-    # (0.52 s vs 1.27 s for the bare fact join) — SMJ's row-at-a-time
-    # merge loses to the vectorized probe when both sides are already
-    # co-partitioned and the build side fits bucket-local memory
-    o = spark.table("bk_orders").hint("SHUFFLE_HASH")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return payload.revenue_rollup(
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"]))
-
-
-# line revenue as exact BIGINT 1e-4 units: payload._dterm_sql, the
-# unit term payload._dsum sums
-_REVENUE_UNITS = payload._dterm_sql(
-    "l_extendedprice * (1 - l_discount)", 4)
-
-
-def revenue_by_nation_preagg(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """[Q] the bucketed revenue join with the exact-distinct residual
-    removed: revenue_by_nation_bucketed's remaining cost at sf10 was
-    the `count_distinct(o_orderkey)` two-stage exchange inside the
-    nation rollup (8.43 s vs DuckDB 2.11 s, r7 verdict weak row).
-    Because o_orderkey is the orders PK, pre-aggregating lineitem PER
-    ORDERKEY first turns the distinct into a plain `count(*)`:
-
-    1. groupBy(l_orderkey) over the bucketed, sorted lineitem store is
-       BUCKET-LOCAL — the scan's HashPartitioning(l_orderkey, 32)
-       already satisfies the agg's clustering, zero Exchange;
-    2. the per-order rollup joins bk_orders co-located (zero Exchange,
-       SHUFFLE_HASH per-bucket build as in the bucketed twin);
-    3. the nation rollup then sums order-level partials — one
-       map-side-combined exchange of order-count rows, NO Expand, no
-       distinct re-exchange: count(*) IS n_orders because each
-       orderkey occurs exactly once after step 1.
-
-    Exact integer arithmetic is associative, so the regrouped sums
-    hash-match the same oracle at every scale and partitioning
-    (REVENUE_BY_NATION_ORACLE, shared with the other three twins).
-    The per-row term is payload._dsum's exact BIGINT 1e-4 unit
-    (payload._dterm_sql), so the 15M-group aggregate runs on
-    primitive-long buffers — measured 4.1 -> 2.9 s on the agg at sf10
-    against DECIMAL(28,4) buffers; the unit total re-enters decimals
-    through the kernel's exact division (payload._dunits_sql) at the
-    25-row rollup. One BIGINT sum suffices here, without the kernel's
-    limbs: ~1e9 units/order, ~6e16 corpus-wide << 2^63.
-
-    Plan-guarded in tests/test_plans.py: no Expand, and zero Exchange
-    at or below the orders join. sf10 itemization (warm, min-of-3):
-    0.8 scan + 2.9 per-order agg + 0.5 bucket-local join + 1.0
-    broadcast+rollup ~ 5.2 s vs DuckDB 2.16 s — the residual is the
-    15M-key exact-distinct hash state itself, which any exact shape
-    pays; the approx-profile monitor family (profile_orders_approx)
-    is the documented escape when exactness is not required."""
-    _ensure_bucketed(spark, sf_dir)
-    per_order = (spark.table("bk_lineitem")
-                 .select("l_orderkey", F.expr(_REVENUE_UNITS).alias("u"))
-                 .groupBy("l_orderkey")
-                 .agg(F.sum("u").alias("rev_units"),
-                      F.count("*").alias("items")))
-    o = spark.table("bk_orders").hint("SHUFFLE_HASH")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return (per_order
-            .join(o, per_order["l_orderkey"] == o["o_orderkey"])
-            .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-            .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-            .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-            .groupBy("r_name", "n_name")
-            .agg(F.expr(payload._dunits_sql("sum(rev_units)", 4))
-                 .cast("string").alias("revenue"),
-                 F.sum("items").cast("long").alias("n_items"),
-                 F.count("*").alias("n_orders")))
-
-
-def revenue_by_nation_approx(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Rows-only monitor twin that CLOSES the revenue_by_nation_preagg
-    book (round 10, r9 verdict ask #2): revenue and n_items stay
-    exact-decimal, but the order count — the one residual the preagg
-    itemization pinned to the irreducible 15M-key exact-distinct hash
-    state — becomes `approx_count_distinct` at the DEFAULT rsd (0.05;
-    rsd<=0.01 flips HLL++ into the ~13x-slower high-precision register
-    mode, measured). approx_count_distinct is partial-aggregable, so
-    the whole query is the minimal plan: bucket-local fact join (zero
-    Exchange), partial aggregation per bucket, ONE 25-row exchange of
-    (decimal sum, count, HLL sketch) buffers — no per-order pre-agg
-    pass, no 15M-group hash state anywhere.
-    No DuckDB oracle (sketch estimates are engine-specific) —
-    pytest-bracketed: revenue/n_items bit-equal to the exact twin,
-    n_orders_approx within the rsd envelope.
-
-    Round-10 disposition (MEASURED, BASELINE round 10): at TPC-H
-    fan-out (~4 items/order) this sketch shape LOSES to the exact
-    preagg twin (8.0 vs 6.7 s sf10) — it probes the broadcast dims
-    with all 60M item rows and pays an HLL update per row, while the
-    exact twin first collapses to 15M per-order rows on a
-    bucket-local primitive-long agg. approx_count_distinct pays off
-    when fan-in per distinct key is large (100s+ rows/key, the
-    profile_orders_approx territory), so the exact preagg IS the
-    shipped scale shape here and this twin is the documented
-    high-fan-in escape."""
-    _ensure_bucketed(spark, sf_dir)
-    # same 1e-4-unit terms and final conversion as the exact twin, so
-    # `revenue` stays bit-equal to it
-    li = (spark.table("bk_lineitem")
-          .select("l_orderkey", F.expr(_REVENUE_UNITS).alias("u")))
-    o = spark.table("bk_orders").hint("SHUFFLE_HASH")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return (li.join(o, li["l_orderkey"] == o["o_orderkey"])
-            .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-            .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-            .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-            .groupBy("r_name", "n_name")
-            .agg(F.expr(payload._dunits_sql("sum(u)", 4))
-                 .cast("string").alias("revenue"),
-                 F.count("*").alias("n_items"),
-                 F.approx_count_distinct("o_orderkey")
-                 .alias("n_orders_approx")))

@@ -67,8 +67,8 @@ from gcp_datalake_utils_spark.sources import load_events
 # Build runs once per (session, sf_dir) — at scale it is the table's
 # write-time layout maintained per day-partition, not a query cost;
 # locally the first family call in a session pays it (in a bench run,
-# the discarded warm-up), like the bucketed-join twins
-# (functions/scale_demos.py).
+# the discarded warm-up), like the orderkey store behind
+# revenue_by_nation (sources/bucketing.py).
 # Determinism: endpoint structs order by (ts, event_id) with event_id
 # unique, so min/max structs are total-order exact in both engines.
 # ---------------------------------------------------------------------------
@@ -88,12 +88,13 @@ def _ensure_daily_activity(spark: SparkSession, sf_dir: str) -> tuple:
 
 
 def _build_daily_activity(spark: SparkSession, sf_dir: str) -> tuple:
-    import hashlib
-
-    from gcp_datalake_utils_spark.sources.bucketing import write_bucketed
+    from gcp_datalake_utils_spark.sources.bucketing import (
+        corpus_table,
+        write_bucketed,
+    )
     from gcp_datalake_utils_spark.sources.scratch import pid_scratch
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    t_act, t_intra = f"act_user_day_{h}", f"act_trans_intra_{h}"
+    t_act = corpus_table("act_user_day", sf_dir)
+    t_intra = corpus_table("act_trans_intra", sf_dir)
     loc = pid_scratch("/tmp/spark_graft_dailyact", sf_dir)
     e = (load_events(spark, sf_dir)
          .select("user_id", F.to_date("ts").alias("day"),

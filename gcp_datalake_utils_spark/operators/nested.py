@@ -13,10 +13,12 @@ struct array: no explode, no second shuffle, no per-line row blowup.
 Scale notes:
 - the nesting groupBy has BOUNDED agg state (TPC-H orders carry <= 7
   lines; generally lines-per-order, not corpus-sized);
-- everything after the single orderkey shuffle is a narrow whole-stage
-  codegen projection — the nested column never re-shuffles;
+- it reads lineitem from the orderkey store (bucketed and sorted by
+  orderkey), so the groupBy is bucket-local and the query has no
+  Exchange at all; everything after it is a narrow whole-stage codegen
+  projection — the nested column never shuffles;
 - when the table is ALREADY stored nested (the target layout), the
-  groupBy disappears entirely and the query is shuffle-free;
+  groupBy disappears entirely;
 - the revenue fold runs in array order (line number) on both engines —
   ordered float folds are the repo's cross-engine determinism rule for
   non-decimal sums (see payload._dsum rationale).
@@ -27,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_datalake_utils_spark.sources import load_table
+from gcp_datalake_utils_spark.sources.bucketing import orderkey_store
 
 HEAVY_QTY = 40.0
 DEEP_DISCOUNT = 0.05
@@ -37,15 +39,18 @@ def order_lines_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[Q] per-order analytics over an embedded line-item array:
     (o_orderkey, n_lines, revenue, max_qty, n_heavy, has_deep_disc).
 
+    Nests the orderkey store's lineitem (sources.bucketing.orderkey_store):
+    the scan's HashPartitioning(l_orderkey, 32) satisfies the groupBy,
+    so each task nests only its own bucket and no corpus-wide
+    collect_list exchange runs (shuffling 60M rows into 15M arrays
+    swung 12-25 s at sf10 under memory pressure). Zero Exchange,
+    plan-guarded in tests/test_round8_ops.py.
+
     ``array_sort`` on the struct array orders by the leading ``ln``
     field (unique per order), so the revenue fold adds identical
     doubles in identical order on both engines."""
-    return _nested_stats(load_table(spark, sf_dir, "lineitem"))
-
-
-def _nested_stats(li: DataFrame) -> DataFrame:
-    """Nest lineitem rows per order and project the per-order stats —
-    shared by the shuffle and bucketed layouts."""
+    t_li, _ = orderkey_store(spark, sf_dir)
+    li = spark.table(t_li)
     nested = (li.groupBy(F.col("l_orderkey").alias("o_orderkey"))
               .agg(F.array_sort(F.collect_list(F.struct(
                   F.col("l_linenumber").alias("ln"),
@@ -66,25 +71,6 @@ def _nested_stats(li: DataFrame) -> DataFrame:
         .cast("int").alias("n_heavy"),
         F.exists("lines", lambda s: s["disc"] > DEEP_DISCOUNT)
         .alias("has_deep_disc"))
-
-
-def order_lines_nested_bucketed(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """[Q] order_lines_nested over the bucketed, orderkey-sorted
-    lineitem store: the nesting groupBy becomes BUCKET-LOCAL — the
-    scan's HashPartitioning(l_orderkey, 32) satisfies the agg's
-    clustering, so the corpus-wide collect_list exchange disappears
-    (the shuffle twin's sf10 rows swung 12-25 s because shuffling 60M
-    rows into 15M arrays is memory-pressure-sensitive; here each task
-    nests only its own bucket). Zero wide Exchange, plan-guarded in
-    tests/test_plans.py; same oracle as the shuffle twin. At 100 TB
-    this is the write-time layout argument again: a fact table stored
-    bucketed by its parent key nests for free."""
-    from gcp_datalake_utils_spark.functions.scale_demos import (
-        _ensure_bucketed,
-    )
-    _ensure_bucketed(spark, sf_dir)
-    return _nested_stats(spark.table("bk_lineitem"))
 
 
 ORDER_LINES_NESTED_ORACLE = f"""

@@ -22,6 +22,7 @@ from gcp_datalake_utils_spark.sources import (
     load_table,
     scaled_repartition,
 )
+from gcp_datalake_utils_spark.sources.bucketing import orderkey_store
 
 
 # --- TPC-H Q1-style pricing summary (A-family flagship aggregation) ----
@@ -87,9 +88,9 @@ def _dsum(units: str, scale: int) -> str:
     round(x, s) values exactly — the value the oracle's
     ``sum(CAST(round(x, s) AS DECIMAL(18,s)))`` computes — so it is
     bit-stable under any partitioning, merge order and core count, at
-    every scale. Plain double sums are not: the salted and bucketed
-    twins of revenue_by_nation diverged in the last ulp at sf0.1, and
-    at sf1 sum_charge carries 17 significant digits, more than a
+    every scale. Plain double sums are not: a salted and a bucketed
+    partitioning of revenue_by_nation diverged in the last ulp at
+    sf0.1, and at sf1 sum_charge carries 17 significant digits, more than a
     double holds (hence the DECIMAL / string outputs below).
 
     Kernel: each row's unit v = round(x, s)·10^s is split into limbs
@@ -215,44 +216,51 @@ GROUP BY l_returnflag, l_linestatus
 # --- multi-way join + agg (J-family over payload) ----------------------
 
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[Q] J1-analog on data: lineitem⋈orders⋈customer⋈nation⋈region.
-    nation/region broadcast always; customer broadcasts at test scale and
-    AQE switches to shuffle-hash when it outgrows the threshold. The big
-    lineitem⋈orders join shuffles on orderkey — co-partitioned if both
-    are bucketed by orderkey at write time (the 100 TB layout)."""
-    # fan the lineitem side out by the JOIN key — the same exchange the
-    # orderkey join needs anyway, so at scale it costs zero extra
-    # shuffles (revenue folds _dsum limbs — hash-safe at any core
-    # count). It fires only when the probe counts fewer byte splits
-    # than cores: on 4 cores sf0.1 lineitem reads as 4 splits, so it is
-    # skipped there and one task scans the single row group.
-    li = scaled_repartition(
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_discount"),
-        "l_orderkey")
-    o = load_table(spark, sf_dir, "orders")
+    """[Q] J1-analog on data: lineitem⋈orders⋈customer⋈nation⋈region,
+    rolled up per (region, nation), over the orderkey store
+    (sources.bucketing.orderkey_store: lineitem and orders bucketed and
+    sorted by orderkey, built once per session and corpus).
+
+    1. lineitem pre-aggregates PER ORDERKEY: the store scan's
+       HashPartitioning(l_orderkey, 32) already satisfies the grouping,
+       so the agg is bucket-local, zero Exchange. Each line's revenue
+       is its exact BIGINT 1e-4 unit term (_with_units), projected once
+       below the agg and summed on a primitive long buffer; one BIGINT
+       sum per order suffices (~1e9 units/order).
+    2. the per-order rows join the orders store co-located (zero
+       Exchange; SHUFFLE_HASH builds orders per bucket, measured 2.4x
+       faster than the sort-merge scan at sf1 on the bare fact join);
+       customer, nation and region broadcast.
+    3. the nation rollup sums order-level partials exactly (_dstr): one
+       map-side-combined exchange, no Expand and no distinct
+       re-exchange — count(*) IS n_orders because o_orderkey is the
+       orders PK and each orderkey occurs once after step 1.
+
+    Exact integer sums are associative, so the regrouped result
+    hash-matches the oracle at every scale and partitioning.
+    Plan-guarded in tests/test_plans.py and tests/test_round8_ops.py."""
+    t_li, t_o = orderkey_store(spark, sf_dir)
+    per_order = (
+        _with_units(spark.table(t_li).select(
+            "l_orderkey", "l_extendedprice", "l_discount"),
+            rev=("l_extendedprice * (1 - l_discount)", 4))
+        .groupBy("l_orderkey")
+        .agg(F.expr("sum(rev) AS rev_units"),
+             F.count("*").alias("items")))
+    o = spark.table(t_o).hint("SHUFFLE_HASH")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    return revenue_rollup(
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"]))
-
-
-def revenue_rollup(joined: DataFrame) -> DataFrame:
-    """The (region, nation) revenue rollup shared by revenue_by_nation
-    and its salted / bucketed twins: the line's revenue unit column is
-    projected once above the joins, then summed exactly (_dsum), so all
-    three partitionings hash-match the one oracle at every scale."""
-    return (_with_units(joined,
-                        rev=("l_extendedprice * (1 - l_discount)", 4))
+    return (per_order
+            .join(o, per_order["l_orderkey"] == o["o_orderkey"])
+            .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+            .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
+            .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
             .groupBy("r_name", "n_name")
             .agg(*map(F.expr, (
-                f"{_dstr('rev', 4)} AS revenue",
-                "count(*) AS n_items",
-                "count(DISTINCT o_orderkey) AS n_orders"))))
+                f"{_dstr('rev_units', 4)} AS revenue",
+                "sum(items) AS n_items",
+                "count(*) AS n_orders"))))
 
 
 REVENUE_BY_NATION_ORACLE = f"""

@@ -82,7 +82,9 @@ def register(name: str, fn: Callable[[SparkSession, str], DataFrame],
 # Retired names -> the registered survivor that carries their oracle.
 # The JVM fold plans were folded into their bit-identical Arrow
 # kernels; the cohort twins (store-backed _preagg, sweep-line rolling7)
-# into the plain names, which read the daily-activity store.
+# into the plain names, which read the daily-activity store; the revenue
+# and nesting twins (bucketed, preagg, salted, approx-distinct monitor)
+# into the plain names, which read the orderkey store.
 RETIRED = {
     "repetition_flags": "repetition_flags_arrow",
     "label_centroids": "label_centroids_arrow",
@@ -92,6 +94,11 @@ RETIRED = {
     "path_transitions_preagg": "path_transitions",
     "active_users_rolling7_preagg": "active_users_rolling7",
     "active_users_rolling7_sweep": "active_users_rolling7",
+    "revenue_by_nation_bucketed": "revenue_by_nation",
+    "revenue_by_nation_preagg": "revenue_by_nation",
+    "revenue_by_nation_salted": "revenue_by_nation",
+    "revenue_by_nation_approx": "revenue_by_nation",
+    "order_lines_nested_bucketed": "order_lines_nested",
 }
 
 
@@ -320,11 +327,6 @@ register("bpe_pair_counts", bpe.bpe_pair_counts,
 register("bpe_token_stats", bpe.bpe_token_stats, None)
 register("sequence_packing_bpe_real", packing.sequence_packing_bpe_real,
          None)
-# round 10: the approx-distinct twin that closes the
-# revenue_by_nation_preagg exact-distinct book (rows-only monitor,
-# pytest-bracketed against the exact twin like the other sketches)
-register("revenue_by_nation_approx", scale_demos.revenue_by_nation_approx,
-         None)
 # round 10: unpruned control for the DPP row — same result by
 # construction (same oracle); bench reports the pruned-vs-unpruned
 # Spark delta as the row's headline
@@ -434,13 +436,6 @@ register("rules_file_source",
          rules_config.RULES_FILE_SOURCE_ORACLE)
 
 register("revenue_by_nation", payload.revenue_by_nation,
-         payload.REVENUE_BY_NATION_ORACLE)
-register("revenue_by_nation_bucketed",
-         scale_demos.revenue_by_nation_bucketed,
-         payload.REVENUE_BY_NATION_ORACLE)
-register("revenue_by_nation_preagg", scale_demos.revenue_by_nation_preagg,
-         payload.REVENUE_BY_NATION_ORACLE)
-register("revenue_by_nation_salted", scale_demos.revenue_by_nation_salted,
          payload.REVENUE_BY_NATION_ORACLE)
 register("profile_orders", profile.profile_orders,
          profile.PROFILE_ORDERS_ORACLE)
@@ -595,8 +590,6 @@ register("metadata_richness", payload.metadata_richness,
          payload.metadata_richness_oracle())
 register("batch_ann64_topk", similarity.batch_ann64_topk,
          similarity.BATCH_ANN64_TOPK_ORACLE)
-register("order_lines_nested_bucketed", nested.order_lines_nested_bucketed,
-         nested.ORDER_LINES_NESTED_ORACLE)
 register("order_lines_nested", nested.order_lines_nested,
          nested.ORDER_LINES_NESTED_ORACLE)
 register("robust_outliers", payload.robust_outliers,

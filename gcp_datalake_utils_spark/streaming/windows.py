@@ -386,13 +386,13 @@ def daily_activity_store_append(spark: SparkSession,
     spec and (user_id, day) sort the store was created with, so the
     post-append scan still reports HashPartitioning(user_id) and the
     zero-Exchange consumer contract survives the append."""
-    import hashlib
-
-    from gcp_datalake_utils_spark.sources.bucketing import write_bucketed
+    from gcp_datalake_utils_spark.sources.bucketing import (
+        corpus_table,
+        write_bucketed,
+    )
     from gcp_datalake_utils_spark.sources.scratch import pid_scratch
 
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    t = f"act_store_sas_{h}"
+    t = corpus_table("act_store_sas", sf_dir)
     loc = pid_scratch("/tmp/spark_graft_dailyact_sas", sf_dir)
 
     e = (load_events(spark, sf_dir)

@@ -24,10 +24,14 @@ def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
 
 
 def test_revenue_join_build_sides_broadcast(spark, sf_dir):
-    plan = _formatted_plan(payload.revenue_by_nation(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 4, \
-        "dimension joins must broadcast at test scale"
-    assert "CartesianProduct" not in plan
+    """The three dimensions broadcast; the fact-fact orders join is the
+    bucket-local shuffled-hash join over the orderkey store."""
+    joins = [node.nodeName() for node in
+             _plan_nodes(payload.revenue_by_nation(spark, sf_dir))
+             if node.nodeName().endswith("Join")
+             or node.nodeName() == "CartesianProduct"]
+    assert sorted(joins) == ["BroadcastHashJoin"] * 3 \
+        + ["ShuffledHashJoin"], joins
 
 
 def test_top_orders_single_window_shuffle(spark, sf_dir):
@@ -364,16 +368,10 @@ def test_lm_bigrams_are_codegen_not_lambda(spark, sf_dir):
 
 
 def test_bucketed_revenue_fact_join_has_no_exchange(spark, sf_dir):
-    """The headline 100 TB layout story: lineitem-orders bucketed by
-    orderkey joins with NO Exchange on either fact side (the
-    unbucketed twin ships a two-sided orderkey shuffle)."""
-    from gcp_datalake_utils_spark.functions import scale_demos
-    df = scale_demos.revenue_by_nation_bucketed(spark, sf_dir)
-    plan = _formatted_plan(df)
-    # the unbucketed twin plans `Exchange hashpartitioning(l_orderkey
-    # ...)` + `(o_orderkey ...)` around the fact join; the bucketed
-    # layout must plan it shuffle-free (at test scale the tiny orders
-    # side even broadcasts — also exchange-free on the fact stream)
+    """The headline 100 TB layout story: lineitem-orders stored bucketed
+    by orderkey join with NO Exchange on either fact side (a plain
+    parquet scan would ship a two-sided orderkey shuffle)."""
+    plan = _formatted_plan(payload.revenue_by_nation(spark, sf_dir))
     assert "Exchange hashpartitioning(l_orderkey" not in plan
     assert "Exchange hashpartitioning(o_orderkey" not in plan
     # the only non-broadcast exchange is the final 25-group rollup
@@ -454,8 +452,9 @@ def _exchanges(df) -> dict[str, int]:
 
 
 def _partial_sum_input(df) -> tuple:
-    """(the Partial HashAggregate's sum inputs, the Project below it):
-    the stage where each row's exact unit terms are evaluated."""
+    """(the lowest Partial HashAggregate's sum inputs, the Project below
+    it): the stage where each row's exact unit terms are evaluated."""
+    found = None
     for node in _plan_nodes(df):
         if node.nodeName() != "HashAggregate":
             continue
@@ -464,24 +463,27 @@ def _partial_sum_input(df) -> tuple:
                 if aggs.apply(i).mode().toString() == "Partial"
                 and aggs.apply(i).aggregateFunction().prettyName() == "sum"]
         if sums:
-            return [f.children().apply(0) for f in sums], \
-                node.children().apply(0)
-    raise AssertionError("no partial sum")
+            found = ([f.children().apply(0) for f in sums],
+                     node.children().apply(0))
+    assert found, "no partial sum"
+    return found
 
 
 def test_exact_sums_run_on_long_buffers(spark, sf_dir):
     """pricing_summary and revenue_by_nation sum through the fixed-point
     kernel (payload._dsum): every partial sum buffer is a BIGINT, never
-    a per-row DECIMAL accumulator, and the exchanges are the ones the
-    decimal-buffer plans had. Each distinct unit term (payload._dterm_sql,
-    one ``round(`` on its slow path) is evaluated once per row, in the
-    Project below the partial aggregate, whose sums read the projected
-    unit columns and nothing else."""
+    a per-row DECIMAL accumulator, and the only shuffle is the rollup's
+    (revenue_by_nation's per-order aggregate and orders join are
+    bucket-local; its three dimensions broadcast). Each distinct unit
+    term (payload._dterm_sql, one ``round(`` on its slow path) is
+    evaluated once per row, in the Project below the lowest partial
+    aggregate, whose sums read the projected unit columns and nothing
+    else."""
     for fn, want, units in (
             (payload.pricing_summary, {"ENSURE_REQUIREMENTS": 1},
              {"qty", "price", "disc_price", "charge", "discount"}),
             (payload.revenue_by_nation,
-             {"ENSURE_REQUIREMENTS": 1, "BroadcastExchange": 4},
+             {"ENSURE_REQUIREMENTS": 1, "BroadcastExchange": 3},
              {"rev"})):
         df = fn(spark, sf_dir)
         types = _partial_sum_buffer_types(df)

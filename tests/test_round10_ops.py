@@ -230,41 +230,8 @@ def test_sequence_packing_bpe_real_self_consistent(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# revenue approx twin + DPP unpruned control (round 10 book-closes)
+# DPP unpruned control (round 10 book-close)
 # ---------------------------------------------------------------------------
-
-
-def test_revenue_approx_brackets_exact(spark, sf_dir):
-    """revenue/n_items bit-equal to the exact twin; the sketch count
-    within the default-rsd envelope (3 sigma at rsd=0.05)."""
-    from gcp_datalake_utils_spark.functions import scale_demos
-    from gcp_datalake_utils_spark.operators import payload
-
-    exact = {(r["r_name"], r["n_name"]): r
-             for r in payload.revenue_by_nation(spark, sf_dir).collect()}
-    got = scale_demos.revenue_by_nation_approx(spark, sf_dir).collect()
-    assert len(got) == len(exact)
-    for r in got:
-        e = exact[(r["r_name"], r["n_name"])]
-        assert r["revenue"] == e["revenue"]
-        assert r["n_items"] == e["n_items"]
-        assert abs(r["n_orders_approx"] - e["n_orders"]) \
-            <= max(0.15 * e["n_orders"], 2)
-
-
-def test_revenue_approx_plans_no_expand_no_extra_exchange(spark, sf_dir):
-    """The closing claim: one exchange (the 25-row rollup), no Expand,
-    no second aggregate keyed on orderkey."""
-    import re as _re
-
-    from gcp_datalake_utils_spark.functions import scale_demos
-
-    df = scale_demos.revenue_by_nation_approx(spark, sf_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
-    assert "Expand" not in plan
-    assert len(_re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
 def test_events_dpp_unpruned_control_scans_everything(spark, sf_dir):

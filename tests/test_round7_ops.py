@@ -62,6 +62,27 @@ def test_cohort_store_matches_oracle(spark, sf_dir, name):
     _assert_matches_oracle(spark, sf_dir, name)
 
 
+@pytest.mark.parametrize("name", ["revenue_by_nation",
+                                  "order_lines_nested"])
+def test_orderkey_store_matches_oracle(spark, sf_dir, name):
+    """Both readers of the orderkey store (per-order pre-aggregated
+    revenue, bucket-local nesting) hash-match their DuckDB oracles over
+    the raw parquet tables."""
+    _assert_matches_oracle(spark, sf_dir, name)
+
+
+def test_orderkey_store_is_keyed_by_corpus(spark, sf_dir):
+    """The store is memoized per (session, corpus) and its tables are
+    named per corpus: after a second corpus builds its own store in the
+    same session, the first corpus reads back exactly its first rows."""
+    other = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    for name in ("revenue_by_nation", "order_lines_nested"):
+        query = entry.queries()[name]
+        first = _sorted_rows(query(spark, sf_dir))
+        assert _sorted_rows(query(spark, other)) != first, name
+        assert _sorted_rows(query(spark, sf_dir)) == first, name
+
+
 @pytest.mark.parametrize("name", ["windowed_counts_stream",
                                   "sliding_counts_stream",
                                   "dedup_stream",

@@ -1,5 +1,6 @@
-"""Round-8 operators: revenue pre-agg twin, bucketed nesting, pruned
-LM model, auto-scaled near-dup band width, G5 layout truth table."""
+"""Round-8 operators: revenue pre-aggregation and nesting over the
+orderkey store, pruned LM model, auto-scaled near-dup band width, G5
+layout truth table."""
 
 from __future__ import annotations
 
@@ -7,28 +8,18 @@ import re
 
 from pyspark.sql import functions as F
 
-from gcp_datalake_utils_spark.functions import scale_demos
 from gcp_datalake_utils_spark.llm import lm, similarity
-from gcp_datalake_utils_spark.operators import nested
+from gcp_datalake_utils_spark.operators import nested, payload
 
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-# --- revenue_by_nation_preagg ------------------------------------------
-
-def test_preagg_matches_bucketed_twin(spark, sf_dir):
-    a = {tuple(r) for r in
-         scale_demos.revenue_by_nation_preagg(spark, sf_dir).collect()}
-    b = {tuple(r) for r in
-         scale_demos.revenue_by_nation_bucketed(spark, sf_dir).collect()}
-    assert a == b and len(a) > 0
-
+# --- revenue_by_nation over the orderkey store -------------------------
 
 def test_preagg_plan_no_expand_one_exchange(spark, sf_dir):
-    plan = _executed_plan(
-        scale_demos.revenue_by_nation_preagg(spark, sf_dir))
+    plan = _executed_plan(payload.revenue_by_nation(spark, sf_dir))
     assert "Expand" not in plan, "exact-distinct Expand crept back"
     # the ONLY hash exchange is the final nation rollup; the per-order
     # agg and the orders join run on the bucketed layout
@@ -36,19 +27,10 @@ def test_preagg_plan_no_expand_one_exchange(spark, sf_dir):
     assert "ShuffledHashJoin" in plan
 
 
-# --- order_lines_nested_bucketed ---------------------------------------
-
-def test_nested_bucketed_matches_shuffle_twin(spark, sf_dir):
-    a = {tuple(r) for r in
-         nested.order_lines_nested_bucketed(spark, sf_dir).collect()}
-    b = {tuple(r) for r in
-         nested.order_lines_nested(spark, sf_dir).collect()}
-    assert a == b and len(a) > 0
-
+# --- order_lines_nested over the orderkey store ------------------------
 
 def test_nested_bucketed_plan_zero_exchange(spark, sf_dir):
-    plan = _executed_plan(
-        nested.order_lines_nested_bucketed(spark, sf_dir))
+    plan = _executed_plan(nested.order_lines_nested(spark, sf_dir))
     assert "Exchange" not in plan, \
         "bucket-local nesting must not shuffle the corpus"
 
